@@ -1,25 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_MASTER=local-cluster[4,8,13312] benches the WHOLE suite
     // on real executor JVMs (the Verify/ScaleProbe convention) — the
     // end-to-end number that weighs the per-family topology table.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster")) {
-      builder.config("spark.executor.extraClassPath",
-        graft.ops.ExecClasspath.absolute)
-      builder.config("spark.executor.memory",
-        graft.ops.ExecMem.resolve(master))
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(defaultCores = 32)
     // Session warmup (not timed): initialize codegen, parquet reader, and
     // shuffle machinery once so per-query timings measure the queries.
     spark.range(1000).selectExpr("sum(id)").collect() // bounded: 1-row warmup agg

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Run the session-keyed memo isolation law ([[graft.ops.MemoLaws]])
   * under the master chosen by SPARK_GRAFT_MASTER — the ScaleProbe/Verify
   * convention. On `local-cluster[2,16,...]` this pins that the
@@ -12,23 +10,9 @@ import org.apache.spark.sql.SparkSession
 object MemoProbe {
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster")) {
-      builder.config("spark.executor.extraClassPath",
-        graft.ops.ExecClasspath.absolute)
-      builder.config("spark.executor.memory",
-        graft.ops.ExecMem.resolve(master))
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(defaultCores = 32)
     graft.ops.MemoLaws.sessionIsolation(spark, sf)
-    println(s"MEMO LAW OK (master=$master, sf=$sf)")
+    println(s"MEMO LAW OK (master=${spark.sparkContext.master}, sf=$sf)")
     spark.stop()
   }
 }

@@ -5,10 +5,15 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dev tool: regenerate PLANS.md — formatted physical plans for the
-  * headline queries, the artifact backing the scale claims (pushdown,
-  * broadcast, shuffle counts, native kernels).
-  * Usage: runMain graft.Plans [sfDir] */
+/** Dev tool: formatted physical plans of registered queries.
+  *
+  * `runMain graft.Plans [sfDir]` regenerates PLANS.md — the headline
+  * queries, the artifact backing the scale claims (pushdown, broadcast,
+  * shuffle counts, native kernels).
+  *
+  * `runMain graft.Plans <outDir> <suffix> <query>[,<query>...]|ALL [sfDir]`
+  * writes one `<outDir>/<query>_<suffix>.txt` per query instead — the
+  * optimization-round evidence (`plans/r<N>/<query>_{before,after}.txt`). */
 object Plans {
   private val headline = Seq(
     "q1_agg", "tile_segments", "join_broadcast", "join_asof", "join_range",
@@ -53,12 +58,34 @@ object Plans {
     "pipeline_frame_mining_misordered", "pipeline_bg_curation_misordered",
     "shot_boundaries")
 
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  private def explain(spark: SparkSession, dir: String, name: String): String =
+    SparkEntry.queries(name)(spark, dir).queryExecution
+      .explainString(ExplainMode.fromString("formatted")).trim
+
+  def main(argv: Array[String]): Unit = {
+    val spark = GraftSession.fromEnv(defaultCores = 4)
+    val perQuery = argv.length >= 3
+    val args = if (perQuery) argv.drop(3) else argv
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    if (perQuery) dumpEach(spark, dir, argv(0), argv(1), argv(2))
+    else writePlansMd(spark, dir)
+    spark.stop()
+  }
+
+  private def dumpEach(spark: SparkSession, dir: String, outDir: String,
+                       suffix: String, namesArg: String): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    val names =
+      if (namesArg == "ALL") SparkEntry.queries.keys.toSeq.sorted
+      else namesArg.split(',').toSeq
+    names.foreach { name =>
+      Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
+        explain(spark, dir, name) + "\n")
+      println(s"wrote $outDir/${name}_$suffix.txt")
+    }
+  }
+
+  private def writePlansMd(spark: SparkSession, dir: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans for headline queries\n\n")
     sb.append(s"Auto-generated by `runMain graft.Plans` against `$dir`.\n")
@@ -67,13 +94,11 @@ object Plans {
     sb.append("(graft_cosine / graft_simhash / graft_sorted_intersect_count /\n")
     sb.append("graft_hyperplane_buckets) appear in the hot paths.\n")
     headline.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, dir)
       sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(ExplainMode.fromString("formatted")).trim)
+      sb.append(explain(spark, dir, name))
       sb.append("\n```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${headline.size} plans)")
-    spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ml.Models
@@ -63,31 +63,14 @@ object ScaleProbe {
     // A real cluster sizes shuffle partitions to the data (the SCALE.md
     // partition-sizing discipline); a probe that pins 32 partitions while
     // multiplying the input 20× measures spill, not the operator. Override
-    // for payload-heavy families whose per-partition bytes outgrow memory.
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32")
+    // with SPARK_GRAFT_SHUFFLE for payload-heavy families whose
+    // per-partition bytes outgrow memory.
     // SPARK_GRAFT_MASTER=local-cluster[2,16,24576] runs the probe on TWO
     // executor JVMs (same cores, the heap SHARDED) — the measurement that
     // separates "per-JVM heap pressure" from algorithmic growth: a real
     // cluster shards the shuffle working set across executor heaps by
     // construction, and single-JVM local[32] cannot show that.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]")
-    val builder = SparkSession.builder().master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_CONF="k=v;k2=v2": extra session confs for probe A/Bs
-    // (checkpoint-block locality / codegen-method-size experiments)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    if (master.startsWith("local-cluster")) {
-      // worker-launched executors need this build's classes (the probe
-      // ships native-kernel Expressions and operator closures to tasks)
-      builder.config("spark.executor.extraClassPath",
-        graft.ops.ExecClasspath.absolute)
-      builder.config("spark.executor.memory",
-        graft.ops.ExecMem.resolve(master))
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(defaultCores = 32)
     // Cluster-wide CPU: sum of task executorCpuTime — the only CPU number
     // that survives the move to multi-process masters (process CPU of
     // this JVM covers just the driver there). Printed alongside process
@@ -106,12 +89,6 @@ object ScaleProbe {
           shufBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
         }
     })
-    // The shipped queries always run with the native kernels registered
-    // (Tables.table / GraftSession do it); the probe must measure that
-    // same configuration — the interpreted HOF-cosine fallback is ~40×
-    // slower per pair and once dominated a probe run, mis-attributing a
-    // CPU artifact to candidate-generation scaling.
-    graft.plans.GraftFunctions.register(spark)
     import spark.implicits._
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = if (args.length > 1) args(1).toInt else 10

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming state-size scale probe (r13 verdict task 4): drive the
@@ -46,19 +45,7 @@ object StreamProbe {
     val nFiles = if (args.length > 3) args(3).toInt else 16
     require(mode == "extend" || mode == "users", s"unknown mode $mode")
 
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]")
-    val builder = SparkSession.builder().master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster")) {
-      builder.config("spark.executor.extraClassPath",
-        graft.ops.ExecClasspath.absolute)
-      builder.config("spark.executor.memory", graft.ops.ExecMem.resolve(master))
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(defaultCores = 32)
 
     val gapSec = 600L
     val delay = "10 minutes" // the registered streamingSessionize default

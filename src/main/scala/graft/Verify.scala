@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,26 +9,12 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_MASTER=local-cluster[2,16,...] runs the WHOLE suite on
     // real executor JVMs (the ScaleProbe convention) — the multi-process
     // smoke that local[n] structurally cannot give: executor-side class
     // loading, SerDe on every exchange and broadcast, cross-process
     // checkpoint block fetches, for every registered query at once.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster")) {
-      builder.config("spark.executor.extraClassPath",
-        graft.ops.ExecClasspath.absolute)
-      builder.config("spark.executor.memory",
-        graft.ops.ExecMem.resolve(master))
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(defaultCores = 32)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -73,6 +73,9 @@ object Components {
         .groupBy("id")
         .agg(min(col("comp")).as("comp"),
           min(when(col("self"), col("comp"))).as("prev"))
+        // an edge endpoint missing from `nodes` has no self row: drop it,
+        // or its null `prev` would read as unchanged and leak its id
+        .filter(col("prev").isNotNull)
         // Carry a changed FLAG through the checkpoint so convergence is the
         // materializing job's own sum (CheckpointOps fusion) — NOT a second
         // count job per round.

@@ -394,11 +394,11 @@ object Similarity {
     * < 2³², so the domain is VERIFIED at build time — callers that know
     * their id range pass `idBound` (one driver-side min/max, computed
     * once per chain instead of per round); otherwise one cheap 1-row agg
-    * over `topk` derives it. PRECONDITION when `idBound` is None and
-    * `packIds` is true: `topk` must be checkpointed (or otherwise cheap
-    * to execute), because the derivation agg EXECUTES `topk` eagerly at
-    * build time — an uncheckpointed deep lineage re-runs in full, once
-    * per round in a multi-round loop. Multi-round callers should derive
+    * over `topk` derives it. PRECONDITION when `idBound` is None: `topk`
+    * must be checkpointed (or otherwise cheap to execute), because the
+    * derivation agg EXECUTES `topk` eagerly at build time — an
+    * uncheckpointed deep lineage re-runs in full, once per round in a
+    * multi-round loop. Multi-round callers should derive
     * the bound once from the id SOURCE and thread it through every
     * round (the in-repo chain does: knnGraphEdges computes the corpus
     * id range one time and passes it to all rounds). Out-of-domain ids fall back to the unpacked
@@ -424,25 +424,22 @@ object Similarity {
                      k: Int, shortlist: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      codeSim: (Column, Column) => Column = hammingSim,
-                     chunks: Int = 1, packIds: Boolean = true,
+                     chunks: Int = 1,
                      idBound: Option[(Long, Long)] = None): DataFrame = {
     require(chunks >= 1, s"chunks must be >= 1, got $chunks")
     // Every id entering the proposal exchange is a value of topk.qid or
     // topk.<idCol> (the adjacency is built from exactly those columns),
     // so the pack-domain check bounds those two columns.
-    val pack = packIds && {
-      val (lo, hi) = idBound.getOrElse {
-        val r = topk.agg(min(least(col("qid"), col(idCol))),
-          max(greatest(col("qid"), col(idCol)))).head() // bounded: 1-row min/max agg over the (caller-checkpointed) topk
-        if (r.isNullAt(0)) (0L, 0L) else (r.getLong(0), r.getLong(1))
-      }
-      val ok = lo >= 0L && hi <= 0xFFFFFFFFL
-      if (!ok)
-        System.err.println(s"[graft] nnDescentRound: id range [$lo, $hi] " +
-          "exceeds the packable domain [0, 2^32); shipping the proposal " +
-          "exchange UNPACKED (rows identical, exchange 24B/row vs 16B)")
-      ok
+    val (lo, hi) = idBound.getOrElse {
+      val r = topk.agg(min(least(col("qid"), col(idCol))),
+        max(greatest(col("qid"), col(idCol)))).head() // bounded: 1-row min/max agg over the (caller-checkpointed) topk
+      if (r.isNullAt(0)) (0L, 0L) else (r.getLong(0), r.getLong(1))
     }
+    val pack = lo >= 0L && hi <= 0xFFFFFFFFL
+    if (!pack)
+      System.err.println(s"[graft] nnDescentRound: id range [$lo, $hi] " +
+        "exceeds the packable domain [0, 2^32); shipping the proposal " +
+        "exchange UNPACKED (rows identical, exchange 24B/row vs 16B)")
     val fwd = topk.select(col("qid").as("a"), col(idCol).as("b"))
     val rev = topk
       .withColumn("rr", row_number().over(
@@ -471,9 +468,8 @@ object Similarity {
       val raw = own.select(col("a").as("q"), col("b").as("u"))
         .join(adj.select(col("a").as("u"), col("b").as("w")), "u")
         .filter(col("q") =!= col("w"))
-      // packIds=false is a MEASUREMENT knob only (same-window A/B of the
-      // exchange packing — the chunking-knob precedent), never a shipped
-      // configuration; both paths produce identical rows.
+      // The unpacked form is the only exact one for ids outside [0, 2³²);
+      // both forms produce identical rows where both apply.
       val cand =
         if (pack)
           raw.select(shiftleft(col("q"), 32).bitwiseOR(col("w")).as("qc"))

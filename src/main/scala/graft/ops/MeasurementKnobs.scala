@@ -4,10 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Central registry + read seam for the `SPARK_GRAFT_*` MEASUREMENT
   * knobs — environment switches that exist only so probes can A/B a
-  * plan mechanism (exchange packing, checkpoint storage format, slice
-  * bounds). The defining contract of every knob in [[valueIdentity]]:
-  * flipping it changes HOW a registered query executes, never WHAT it
-  * returns — rows are identical either way.
+  * plan mechanism (today: slice bounds). The defining contract of every
+  * knob in [[valueIdentity]]: flipping it changes HOW a registered query
+  * executes, never WHAT it returns — rows are identical either way.
   *
   * Why a registry instead of per-knob pins (r13 verdict task 8): each
   * knob used to carry its own ad-hoc identity test, so nothing stopped
@@ -43,11 +42,6 @@ object MeasurementKnobs {
 
   /** Every measurement knob whose contract is value-identity. */
   def valueIdentity: Seq[Knob] = Seq(
-    Knob("SPARK_GRAFT_KNN_PACK", "0",
-      "unpacked two-column NN-descent proposal exchange (vs packed single-long)",
-      (s, dir) => graft.queries.SimilarityQueries.knnGraphEdges(
-        graft.queries.Tables.table(s, dir, "embeddings")
-          .select("vec_id", "embedding"))),
     Knob("SPARK_GRAFT_KNN_CHUNK_PROPOSALS", "100000",
       "forces multi-slice NN-descent rounds on the fixed corpus (vs one slice)",
       (s, dir) => graft.queries.SimilarityQueries.knnGraphEdges(
@@ -57,15 +51,7 @@ object MeasurementKnobs {
       "forces multi-slice LSH verify joins on the fixed corpus (vs one slice)",
       (s, dir) => graft.queries.TextQueries.lshCalibrationReport(
         graft.queries.Tables.table(s, dir, "documents")
-          .select("doc_id", "text"))),
-    Knob("SPARK_GRAFT_CKPT_SER", "1",
-      "dedup-corpus checkpoints store MEMORY_AND_DISK_SER (block format only)",
-      (s, dir) => graft.queries.PipelineQueries.dedupCorpusVerdicts(
-        graft.queries.Tables.table(s, dir, "documents"))),
-    Knob("SPARK_GRAFT_SORT_CKPT", "1",
-      "dedup-corpus verdict frame materializes before the global sort",
-      (s, dir) => graft.queries.PipelineQueries.dedupCorpusVerdicts(
-        graft.queries.Tables.table(s, dir, "documents"))))
+          .select("doc_id", "text"))))
 
   /** `SPARK_GRAFT_*` names that are NOT value-identity knobs, with the
     * reason the law exempts each. Session/harness configuration changes
@@ -82,12 +68,6 @@ object MeasurementKnobs {
     "SPARK_GRAFT_ONLY" -> "bench query filter (harness config)",
     "SPARK_GRAFT_REPEATS" -> "bench repeat count (harness config)",
     "SPARK_GRAFT_BENCH_OUT" -> "bench artifact path (harness config)",
-    "SPARK_GRAFT_CONF" ->
-      "generic extra-session-conf passthrough for probe A/Bs (session config)",
-    "SPARK_GRAFT_EXPLAIN" ->
-      "Scratch dev-tool mode switch: print plans instead of timing (harness config)",
-    "SPARK_GRAFT_JOBS" ->
-      "Scratch dev-tool mode switch: per-query job/task tally instead of timing (harness config)",
     "SPARK_GRAFT_SALT_ALIASED" ->
       "swaps in the deliberately period-aliased probe corpus — changes the INPUT by design (negative-control geometry), so value-identity cannot apply")
 }

@@ -28,7 +28,9 @@ object Parallelism {
     // builds a second QueryExecution with a row deserializer just to ask
     // for a count — an extra full plan compile at every pipeline-stage
     // entrance (this helper is called unconditionally). `toRdd` reuses the
-    // frame's own QueryExecution; no job runs either way.
+    // frame's own QueryExecution, so no EXTRA job runs; but under AQE,
+    // building the RDD of a frame with exchanges still materializes its
+    // shuffle stages, and that runs their jobs.
     val parts = df.queryExecution.toRdd.getNumPartitions
     if (parts < min) df.repartition(min) else df
   }

@@ -1,18 +1,15 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Registration of graft's native Catalyst expressions.
-  *
-  * Two paths:
-  *  - [[GraftExtensions]] for sessions built with
-  *    `spark.sql.extensions=graft.plans.GraftExtensions` (the idiomatic
-  *    SparkSessionExtensions hook);
-  *  - [[GraftFunctions.register]] for runtime injection into an existing
-  *    session (the harness constructs its own SparkSession, so the query
-  *    layer calls this lazily per session).
+/** Registration of graft's native Catalyst expressions and optimizer
+  * rules. [[GraftFunctions.register]] is the one path: `GraftSession`
+  * calls it on every session it builds, and `Tables.table` calls it
+  * lazily on any session a caller hands in (including `newSession()`
+  * children, which start with an empty rule list). The rules land in
+  * the optimizer's "User Provided Optimizers" batch.
   */
 object GraftFunctions {
 
@@ -27,7 +24,7 @@ object GraftFunctions {
       catch { case _: Throwable => false }
     }
 
-  private[plans] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_cosine" -> { children =>
       require(children.length == 2, "graft_cosine expects exactly 2 arguments")
       CosineSimilarity(children.head, children(1))
@@ -71,16 +68,4 @@ object GraftFunctions {
           spark.experimental.extraOptimizations :+ GateHoist
       true
     } catch { case _: Throwable => false }
-}
-
-/** `spark.sql.extensions` entry point. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.builders.foreach { case (name, b) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(classOf[CosineSimilarity].getName, name), b))
-    }
-    ext.injectOptimizerRule(_ => IntersectCountRewrite)
-    ext.injectOptimizerRule(_ => GateHoist)
-  }
 }

@@ -543,20 +543,6 @@ object PipelineQueries {
       ORDER BY wk.doc_id"""
   }
 
-  /** Measurement knob (never a shipped configuration): with
-    * SPARK_GRAFT_CKPT_SER=1 the dedup-corpus chain's checkpoints store
-    * MEMORY_AND_DISK_SER, so cross-executor block fetches ship
-    * pre-serialized bytes instead of paying per-fetch serialization on
-    * the holder — the A/B that prices the composed chain's
-    * checkpoint-traffic mechanism (r12: 1.96× cluster/single task-CPU at
-    * 100×, shuffle volume itself small). Values are identical either
-    * way; only block storage format changes. */
-  private def ckpt(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (graft.ops.MeasurementKnobs.get("SPARK_GRAFT_CKPT_SER").contains("1"))
-      df.localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    else df.localCheckpoint()
-
   /** The END-TO-END dedup-corpus chain, shared by the registered query
     * and ScaleProbe's `dedup_corpus` family (the probe measures exactly
     * the shipped plan): (1) exact bag-of-words dedup (one hash agg),
@@ -600,13 +586,14 @@ object PipelineQueries {
       // the band self-join) and every downstream read of `sh` moves 8-byte
       // longs. Hashed-distinct cardinalities equal string cardinalities,
       // so every tj — and every verdict — is unchanged.
-      val withKeep = ckpt(Dedup.withMinhashSigAndHashesMd5(
+      val withKeep = Dedup.withMinhashSigAndHashesMd5(
           keyed.join(groups, "content_hash")
             .withColumn("shw", when(col("doc_id") === col("keep_id"),
               array_sort(wordShingles(col("text"), 2)))),
           col("shw"), 32, sigName = "sig", hashedName = "sh")
         .select(col("doc_id"), col("source"), col("keep_id"),
-          col("sig"), col("sh")))
+          col("sig"), col("sh"))
+        .localCheckpoint()
       val survivors = withKeep.filter(col("doc_id") === col("keep_id"))
       val sh = survivors.select(col("doc_id"), col("sh"))
       val sigs = survivors.select(col("doc_id"), col("sig"))
@@ -632,23 +619,13 @@ object PipelineQueries {
         .select(col("id_a").as("src"), col("id_b").as("dst"))
       val comps = graft.operators.Components.connectedComponents(
         sh.select(col("doc_id").as("id")), edges)
-      val verdicts = withKeep.join(comps, withKeep("keep_id") === comps("id"))
+      withKeep.join(comps, withKeep("keep_id") === comps("id"))
         .select(col("doc_id"), col("source"),
           when(col("doc_id") =!= col("keep_id"), lit("dup_exact"))
             .when(col("comp") =!= col("doc_id"), lit("dup_near"))
             .otherwise(lit("kept")).as("status"),
           col("comp").as("canonical_id"))
-      // Measurement knob (values identical): the global sort's range-
-      // partition sampling executes its child twice, so the verdict join
-      // re-reads the barrier + components blocks a second time — a
-      // candidate mechanism for the residual cluster/single gap. With
-      // SPARK_GRAFT_SORT_CKPT=1 the verdict frame materializes once and
-      // the sort samples the (narrow) checkpoint instead.
-      val sorted =
-        if (graft.ops.MeasurementKnobs.get("SPARK_GRAFT_SORT_CKPT").contains("1"))
-          verdicts.localCheckpoint()
-        else verdicts
-      sorted.orderBy("doc_id")
+        .orderBy("doc_id")
   }
 
   val pipelineDedupCorpus = QueryDef("pipeline_dedup_corpus",

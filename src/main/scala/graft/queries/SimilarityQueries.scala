@@ -334,13 +334,6 @@ object SimilarityQueries {
   private def knnChunkProposals: Long =
     graft.ops.MeasurementKnobs.get("SPARK_GRAFT_KNN_CHUNK_PROPOSALS")
       .map(_.toLong).getOrElse(96000000L)
-  // Measurement-only A/B knob for the packed proposal exchange
-  // (SPARK_GRAFT_KNN_PACK=0 reverts to two-column proposal rows; rows
-  // are identical either way — pinned by the knob-registry law). Never
-  // set in shipped runs. `def` (not val): the registry law flips knobs
-  // in-JVM, so gated sites must re-read per query build.
-  private def knnPackProposals: Boolean =
-    graft.ops.MeasurementKnobs.get("SPARK_GRAFT_KNN_PACK").forall(_ != "0")
   private lazy val knnCodePlanes =
     Similarity.md5Planes(knnCodeBitsPerWord, knnCodeWords, 64, "graft-knn-code")
 
@@ -431,8 +424,7 @@ object SimilarityQueries {
         .localCheckpoint() // each round reads the previous once
       for (_ <- 1 to knnDescentRounds)
         topk = Similarity.nnDescentRound(topk, emb, codes, knnInternalK, knnShortlist,
-            codeSim = codeSim, chunks = descentChunks, packIds = knnPackProposals,
-            idBound = Some(idRange))
+            codeSim = codeSim, chunks = descentChunks, idBound = Some(idRange))
           .localCheckpoint()
       topk
   }

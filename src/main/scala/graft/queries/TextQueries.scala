@@ -826,46 +826,54 @@ object TextQueries {
     * pinned TRUE by the oracle beside the exact counts — a sketch
     * regression flips a hash-compared value. The sketch binary and the
     * 20 probes are the only driver-side state (both bounded); counts,
-    * sketch build, and top-k all run distributed. */
+    * sketch build, and top-k all run distributed. `toks` has one string
+    * column `token`; null tokens are not counted. */
+  def heavyHitters(toks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val s = toks.sparkSession
+    import s.implicits._
+    val eps = 0.0005
+    def emptySketch = org.apache.spark.util.sketch.CountMinSketch.create(eps, 0.99, 42)
+    // a null token has no sketch cell (CountMinSketch.add throws on null)
+    val counts = toks.filter(col("token").isNotNull)
+      .groupBy("token").agg(count(lit(1)).as("cnt"))
+      .localCheckpoint() // read by top-k, the total, and the sketch gate
+    // Build the CMS from the CHECKPOINTED counts instead of a second
+    // full pass over every token (r16, guide §1.2): CMS cells are sums,
+    // so one weighted add per distinct token produces the bit-identical
+    // sketch (same impl, eps, confidence, seed) the streaming
+    // count_min_sketch aggregate built — at vocab cost, not corpus cost.
+    val cms = counts.select(col("token"), col("cnt")).as[(String, Long)]
+      .mapPartitions { it =>
+        val sk = emptySketch
+        it.foreach { case (t, c) => sk.add(t, c) }
+        val bos = new java.io.ByteArrayOutputStream()
+        sk.writeTo(bos)
+        Iterator.single(bos.toByteArray)
+      }
+      .collect() // bounded: one eps-sized (~¼ MB) sketch per partition
+      .map(b => org.apache.spark.util.sketch.CountMinSketch
+        .readFrom(new java.io.ByteArrayInputStream(b)))
+      // folded from an empty sketch: an input with no partitions yields
+      // no per-partition sketch at all
+      .foldLeft(emptySketch) { (a, b) => a.mergeInPlace(b); a }
+    // top-20 + corpus total in ONE bounded report (20 rows collected —
+    // the only driver-side state beside the sketch)
+    val top = graft.operators.TopShare.report(counts, "token", "cnt", 20)
+      .select("rank", "token", "cnt", "total").orderBy("rank").collect() // bounded: 20-row report
+    top.toSeq.map { r =>
+      val tok = r.getString(1); val cnt = r.getLong(2)
+      val slack = math.ceil(eps * r.getLong(3)).toLong
+      val est = cms.estimateCount(tok)
+      (r.getLong(0), tok, cnt, est >= cnt && est <= cnt + slack)
+    }.toDF("rank", "token", "exact_cnt", "within_bound")
+  }
+
   val heavyHittersQ = QueryDef("heavy_hitters",
-    (s, dir) => {
-      import s.implicits._
-      val eps = 0.0005
-      // ensure(): the token explode + both aggregates otherwise run on the
-      // single row-group scan's one partition (r16, the F1 floor).
-      val toks = graft.ops.Parallelism.ensure(
-          table(s, dir, "documents").select(col("text")))
-        .select(explode(tokens(col("text"))).as("token"))
-      val counts = toks.groupBy("token").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint() // read by top-k, the total, and the sketch gate
-      // Build the CMS from the CHECKPOINTED counts instead of a second
-      // full pass over every token (r16, guide §1.2): CMS cells are sums,
-      // so one weighted add per distinct token produces the bit-identical
-      // sketch (same impl, eps, confidence, seed) the streaming
-      // count_min_sketch aggregate built — at vocab cost, not corpus cost.
-      val cms = counts.select(col("token"), col("cnt")).as[(String, Long)]
-        .mapPartitions { it =>
-          val sk = org.apache.spark.util.sketch.CountMinSketch.create(eps, 0.99, 42)
-          it.foreach { case (t, c) => sk.add(t, c) }
-          val bos = new java.io.ByteArrayOutputStream()
-          sk.writeTo(bos)
-          Iterator.single(bos.toByteArray)
-        }
-        .collect() // bounded: one eps-sized (~¼ MB) sketch per partition
-        .map(b => org.apache.spark.util.sketch.CountMinSketch
-          .readFrom(new java.io.ByteArrayInputStream(b)))
-        .reduce { (a, b) => a.mergeInPlace(b); a }
-      // top-20 + corpus total in ONE bounded report (20 rows collected —
-      // the only driver-side state beside the sketch)
-      val top = graft.operators.TopShare.report(counts, "token", "cnt", 20)
-        .select("rank", "token", "cnt", "total").orderBy("rank").collect() // bounded: 20-row report
-      top.toSeq.map { r =>
-        val tok = r.getString(1); val cnt = r.getLong(2)
-        val slack = math.ceil(eps * r.getLong(3)).toLong
-        val est = cms.estimateCount(tok)
-        (r.getLong(0), tok, cnt, est >= cnt && est <= cnt + slack)
-      }.toDF("rank", "token", "exact_cnt", "within_bound")
-    },
+    // ensure(): the token explode + both aggregates otherwise run on the
+    // single row-group scan's one partition (r16, the F1 floor).
+    (s, dir) => heavyHitters(graft.ops.Parallelism.ensure(
+        table(s, dir, "documents").select(col("text")))
+      .select(explode(tokens(col("text"))).as("token"))),
     Some(s"""WITH t AS (SELECT UNNEST($toksSql) AS token FROM documents),
       c AS (SELECT token, COUNT(*) AS cnt FROM t GROUP BY token),
       r AS (SELECT token, cnt,

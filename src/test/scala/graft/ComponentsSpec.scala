@@ -43,6 +43,13 @@ class ComponentsSpec extends AnyFunSuite {
     assert(run(StarContraction, nodes, edges) === nodes.map(_ -> 0L).toMap)
   }
 
+  test("label propagation: an edge endpoint missing from the nodes never reaches the output") {
+    // 99 and 0 are edge endpoints only; neither may surface as a row, and
+    // neither joins 2 or 3 to anything
+    val got = run(LabelPropagation, Seq(1L, 2L, 3L), Seq((1L, 2L), (2L, 99L), (0L, 3L)))
+    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
+  }
+
   test("both algorithms match union-find on random graphs (incl. isolated nodes)") {
     val genCase = for {
       nNodes <- Gen.choose(1, 40)

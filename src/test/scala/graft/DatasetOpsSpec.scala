@@ -390,6 +390,18 @@ class DatasetOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("heavyHitters: null tokens are skipped, not fed to the count-min sketch") {
+    val toks = Seq("a", null, "b", "a", null, "a").toDF("token")
+    val got = graft.queries.TextQueries.heavyHitters(toks)
+      .as[(Long, String, Long, Boolean)].collect().toSeq
+    assert(got == Seq((1L, "a", 3L, true), (2L, "b", 1L, true)))
+  }
+
+  test("heavyHitters: empty input gives an empty report") {
+    val toks = Seq.empty[String].toDF("token")
+    assert(graft.queries.TextQueries.heavyHitters(toks).collect().isEmpty)
+  }
+
   test("session-keyed memos: a second session on one context resolves its own frames") {
     // The memo/cache layer (Tables frame cache, nearDupClusters chain
     // memo, corpusCount memo) keys strictly on the SparkSession: a

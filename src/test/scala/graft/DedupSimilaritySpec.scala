@@ -896,14 +896,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(base.nonEmpty)
     for (c <- Seq(3, 7))
       assert(round(c).toSeq == base.toSeq, s"chunks=$c diverged from unchunked")
-    // the measurement-only unpacked path (SPARK_GRAFT_KNN_PACK=0 A/B
-    // knob) must also be row-identical to the shipped packed exchange
-    val unpacked = Similarity
-      .nnDescentRound(seed, emb, codes, k = 8, shortlist = 24,
-        codeSim = codeSim, packIds = false)
-      .select("qid", "vec_id", "sim", "rank")
-      .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4))
-    assert(unpacked.toSeq == base.toSeq, "unpacked A/B path diverged from packed")
   }
 
   test("nnDescent proposal pack: (q,w)↔long round-trips across the 32-bit boundary") {
@@ -968,8 +960,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val planes = Similarity.md5Planes(63, 1, 64, "graft-chunk-test")
     val codeSim = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
       Similarity.hammingSimWords(a, b, 1, 63)
-    def graph(emb: org.apache.spark.sql.DataFrame,
-              idBound: Option[(Long, Long)], packIds: Boolean) = {
+    def graph(emb: org.apache.spark.sql.DataFrame, idBound: Option[(Long, Long)]) = {
       val codes = emb.select(col("vec_id"),
         Similarity.projectionCodes(col("embedding"), planes).as("code")).localCheckpoint()
       val seed = Similarity.hammingShortlistTopK(
@@ -978,26 +969,27 @@ class DedupSimilaritySpec extends AnyFunSuite {
           Similarity.md5Planes(4, 4, 64)),
         emb, codes, k = 8, shortlist = 24, codeSim = codeSim).localCheckpoint()
       Similarity.nnDescentRound(seed, emb, codes, k = 8, shortlist = 24,
-          codeSim = codeSim, packIds = packIds, idBound = idBound)
+          codeSim = codeSim, idBound = idBound)
         .select("qid", "vec_id", "sim", "rank")
         .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4))
     }
-    val base = graph(embBase, idBound = None, packIds = false)
+    // baseline: in-domain ids, packed exchange (agg-derived bound)
+    val base = graph(embBase, idBound = None)
     assert(base.nonEmpty)
     val expected = base.map(r => (r._1 + shift, r._2 + shift, r._3, r._4)).toSeq
     val embBig = embBase.select((col("vec_id") + shift).as("vec_id"), col("embedding"))
     // guard via the fallback topk agg (no idBound supplied)
-    assert(graph(embBig, idBound = None, packIds = true).toSeq == expected,
+    assert(graph(embBig, idBound = None).toSeq == expected,
       "agg-derived guard failed to protect ids above 2^32")
     // guard via a caller-supplied out-of-domain idBound
     val hi = embBase.agg(org.apache.spark.sql.functions.max(col("vec_id")))
       .head().getLong(0) + shift
-    assert(graph(embBig, idBound = Some((shift, hi)), packIds = true).toSeq == expected,
+    assert(graph(embBig, idBound = Some((shift, hi))).toSeq == expected,
       "idBound-supplied guard failed to protect ids above 2^32")
-    // and an in-domain idBound still packs correctly (rows unchanged)
+    // and an in-domain idBound packs exactly like the agg-derived bound
     val hiSmall = hi - shift
-    assert(graph(embBase, idBound = Some((0L, hiSmall)), packIds = true).toSeq == base.toSeq,
-      "in-domain idBound path diverged from the unpacked baseline")
+    assert(graph(embBase, idBound = Some((0L, hiSmall))).toSeq == base.toSeq,
+      "in-domain idBound path diverged from the agg-derived baseline")
   }
 
   test("lshCalibrationReport: verify-join chunking is exact (report identical for chunks 0/1/3/7)") {

@@ -430,7 +430,6 @@ class PlansSpec extends AnyFunSuite {
   }
 
   test("misordered E4 gate: resolution gate hoists below the detect barrier, same rows") {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, MapPartitions}
     val mis = graft.queries.PipelineQueries.pipelineBgCurationMisordered.spark(spark, sf)
     val ord = graft.queries.PipelineQueries.pipelineBgCurationOracle.spark(spark, sf)
     // identical rows to the well-ordered pipeline (same oracle SQL
@@ -441,7 +440,12 @@ class PlansSpec extends AnyFunSuite {
     // optimized plan (GateHoist splits it out of the computed-column gate
     // conjunction Catalyst merges it into), and no h/w gate remains above
     // any barrier — sub-resolution images never reach the detector
-    val opt = mis.queryExecution.optimizedPlan
+    assertResolutionGateHoisted(mis.queryExecution.optimizedPlan)
+  }
+
+  private def assertResolutionGateHoisted(
+      opt: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Unit = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, MapPartitions}
     val hoisted = opt.collect { case m: MapPartitions => m }
       .exists(_.collectFirst {
         case f: Filter if f.condition.sql.contains("1000") => f }.isDefined)
@@ -449,6 +453,16 @@ class PlansSpec extends AnyFunSuite {
     assert(!opt.collect { case f: Filter if f.condition.sql.contains("1000") => f }
         .exists(_.collectFirst { case m: MapPartitions => m }.isDefined),
       s"resolution gate still above a model barrier:\n$opt")
+  }
+
+  test("GateHoist reaches a fresh newSession() through Tables.table") {
+    // GraftFunctions.register is the only path that installs the rule; a
+    // newSession() child starts without it, and the first Tables.table
+    // call (inside the pipeline build) must install it
+    val fresh = GraftSession.local(4).newSession()
+    assert(!fresh.experimental.extraOptimizations.contains(graft.plans.GateHoist))
+    assertResolutionGateHoisted(graft.queries.PipelineQueries
+      .pipelineBgCurationMisordered.spark(fresh, sf).queryExecution.optimizedPlan)
   }
 
   test("misordered E2 gate: validity gate hoists below the VLM barrier, same rows") {

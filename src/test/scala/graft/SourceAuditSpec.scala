@@ -19,13 +19,17 @@ import org.scalatest.funsuite.AnyFunSuite
   *    the materialized result cannot scale with the corpus (1-row
   *    aggregates, ≤cap samples, #source/#list frames, limit-k
   *    argmaxes). A new unbounded collect cannot land without either
-  *    the marker (visible in review, greppable) or failing here.
+  *    the marker (visible in review, greppable) or failing here;
+  *  - sessions are built only by `GraftSession`, across main and test
+  *    sources, so every entry point runs the same engine confs and rules.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
-  private def sources: Seq[(String, Vector[String])] = {
-    val root = Paths.get("src/main/scala/graft")
-    assert(Files.isDirectory(root), s"main source root not found at $root")
+  private def sources: Seq[(String, Vector[String])] = sourcesUnder("src/main/scala/graft")
+
+  private def sourcesUnder(dir: String): Seq[(String, Vector[String])] = {
+    val root = Paths.get(dir)
+    assert(Files.isDirectory(root), s"source root not found at $root")
     val walk = Files.walk(root)
     try walk.iterator().asScala
       .filter(_.toString.endsWith(".scala"))
@@ -95,6 +99,21 @@ class SourceAuditSpec extends AnyFunSuite {
       if !flags(i) && l.contains("???")
     } yield s"$f:${i + 1}"
     assert(hits.isEmpty, s"??? stub in main source: ${hits.mkString(", ")}")
+  }
+
+  test("sessions are built only in GraftSession.scala") {
+    val builderCall = """SparkSession\s*\.\s*builder\b""".r
+    val hits = for {
+      (f, lines) <- sourcesUnder("src/main/scala") ++ sourcesUnder("src/test/scala")
+      flags = commentFlags(lines)
+      (l, i) <- lines.zipWithIndex
+      if !flags(i) && builderCall.findFirstIn(l).isDefined
+    } yield (Paths.get(f).getFileName.toString, s"$f:${i + 1}")
+    assert(hits.exists(_._1 == "GraftSession.scala"), "GraftSession no longer builds a session")
+    val outside = hits.filterNot(_._1 == "GraftSession.scala").map(_._2)
+    assert(outside.isEmpty,
+      "session builder called outside GraftSession (use GraftSession.fromEnv/local): " +
+        outside.mkString(", "))
   }
 
   test("every driver-side action carries a '// bounded:' justification") {

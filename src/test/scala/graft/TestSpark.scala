@@ -4,17 +4,5 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared local session for specs (single JVM; Test/fork := true). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftFunctions.register(s)
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
 }

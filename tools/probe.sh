@@ -21,7 +21,10 @@
 #   -M mainClass  default graft.ScaleProbe (graft.Verify, graft.MemoProbe,
 #                 graft.Bench also work)
 #   KEY=VAL       exported into the probe's environment (e.g.
-#                 SPARK_GRAFT_SHUFFLE=1600, SPARK_GRAFT_KNN_CHUNK_PROPOSALS=...)
+#                 SPARK_GRAFT_SHUFFLE=1600, SPARK_GRAFT_KNN_CHUNK_PROPOSALS=...);
+#                 session-conf A/Bs ride the JVM: Spark reads spark.*
+#                 system properties, so pass
+#                 JAVA_TOOL_OPTIONS="-Dspark.k=v -Dspark.k2=v2"
 #   args          passed through to the main class
 #
 # Examples (the round-11 queue, re-expressed):
@@ -30,6 +33,8 @@
 #     /root/testdata/sf0.1 50 knn_graph
 #   tools/probe.sh -T verify_c4 -t cluster4 -M graft.Verify \
 #     /root/testdata/sf0.001 /tmp/verify_out_c4
+#   tools/probe.sh -T hugemeth -M graft.Bench SPARK_GRAFT_ONLY=knn_graph \
+#     "JAVA_TOOL_OPTIONS=-Dspark.sql.codegen.hugeMethodLimit=8000"
 #
 # Discipline reminders (SCALE.md): host CPU swings 3-6x between windows —
 # compare only same-window samples; interleave topologies A/B A/B when
