@@ -81,8 +81,8 @@ object Components {
         // count job per round.
         .select(col("id"), col("comp"),
           (col("comp") =!= col("prev")).cast("int").as("chg"))
-      val (updated, changed) =
-        graft.ops.CheckpointOps.localCheckpointWithIntSum(updatedPlan, 2)
+      val (updated, changed) = graft.ops.CheckpointOps.localCheckpointAggregate(
+        updatedPlan, 0L)((n, r) => n + r.getInt(2), _ + _)
       labels = updated.select("id", "comp")
       converged = changed == 0
       round += 1
@@ -104,11 +104,11 @@ object Components {
                                       maxRounds: Int): DataFrame = {
     // Canonical undirected edges (u > v), self-loops dropped, ONE pass
     // over the (possibly expensive) upstream edge derivation.
-    var (e, cnt) = graft.ops.CheckpointOps.localCheckpointWithCount(edges
+    var (e, cnt) = graft.ops.CheckpointOps.localCheckpointAggregate(edges
       .filter(col("src") =!= col("dst"))
       .select(greatest(col("src"), col("dst")).as("u"),
         least(col("src"), col("dst")).as("v"))
-      .distinct())
+      .distinct(), 0L)((n, _) => n + 1, _ + _)
     var round = 0
     var converged = false
     while (!converged && round < maxRounds) {
@@ -151,10 +151,10 @@ object Components {
       // cardinality comes out of the materializing checkpoint job itself
       // (CheckpointOps fusion), so only rounds whose counts match pay the
       // anti-join probe.
-      val (small, newCnt) = graft.ops.CheckpointOps.localCheckpointWithCount(
+      val (small, newCnt) = graft.ops.CheckpointOps.localCheckpointAggregate(
         smallNbrs.union(smallSelf)
           .filter(col("u") =!= col("v"))
-          .distinct())
+          .distinct(), 0L)((n, _) => n + 1, _ + _)
       converged = newCnt == cnt &&
         small.join(e, Seq("u", "v"), "left_anti").isEmpty
       e = small

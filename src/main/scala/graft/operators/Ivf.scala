@@ -235,7 +235,7 @@ object Ivf {
     import spark.implicits._
     // files under `path` change on disk — a corpus count memoized from a
     // previous load of this path would be stale after the overwrite
-    graft.operators.Similarity.clearCountCache()
+    graft.operators.Similarity.countMemo.clear()
     index.centers.zipWithIndex
       .map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("list_id", "center")
@@ -267,7 +267,7 @@ object Ivf {
     * `ann_ivf_incremental`'s oracle certifies hash-exactly. */
   def appendSave(path: String, newVectors: DataFrame,
                  vecCol: String = "embedding"): Unit = {
-    graft.operators.Similarity.clearCountCache() // path gains files on disk
+    graft.operators.Similarity.countMemo.clear() // path gains files on disk
     val centers = load(newVectors.sparkSession, path).centers
     newVectors.withColumn("list_id", nearestList(col(vecCol), centers))
       .write.mode("append").partitionBy("list_id").parquet(s"$path/assigned")
@@ -316,7 +316,7 @@ object Ivf {
         fs.delete(st.getPath, true) // incomplete compacted copy — old dir is live
       }
     }
-    graft.operators.Similarity.clearCountCache() // index files change on disk
+    graft.operators.Similarity.countMemo.clear() // index files change on disk
     fs.listStatus(assignedDir).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("list_id="))
       .sortBy(_.getPath.getName)

@@ -191,23 +191,14 @@ object Similarity {
     * canonicalized plan, so replicated/filtered variants still count
     * separately (their n genuinely differs). INVARIANT: inputs are
     * immutable within a session — a path whose files change after the
-    * first count would serve a stale n; call [[clearCountCache]] after
+    * first count would serve a stale n; call `countMemo.clear()` after
     * external writes (the registered queries never count a frame they
     * also rewrite). Bounded: one long per distinct counted frame. */
-  private val countCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), java.lang.Long]()
+  private[graft] val countMemo = new graft.ops.SessionMemo[
+    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long]
 
-  def corpusCount(df: DataFrame): Long = {
-    graft.ops.SessionCaches.onSessionStop(df.sparkSession, countCache) { s =>
-      countCache.keySet.removeIf(_._1 eq s)
-    }
-    countCache.computeIfAbsent(
-      (df.sparkSession, df.queryExecution.analyzed.canonicalized),
-      _ => df.count())
-  }
-
-  def clearCountCache(): Unit = countCache.clear()
+  def corpusCount(df: DataFrame): Long =
+    countMemo(df.sparkSession, df.queryExecution.analyzed.canonicalized)(df.count())
 
   /** LSH bucket id: sign bit per hyperplane packed into a long. */
   def hyperplaneBucket(vec: Column, planes: Seq[Array[Double]]): Column =

@@ -1,9 +1,12 @@
 package graft.ops
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 
 
-/** Fused eager-localCheckpoint actions for iterative chains.
+/** Fused eager-localCheckpoint action for iterative chains.
   *
   * `Dataset.localCheckpoint()` (eager) materializes its blocks by running
   * `rdd.count()` internally and DISCARDS the count; an iterative chain that
@@ -13,90 +16,34 @@ import org.apache.spark.sql.DataFrame
   * bench's round counts that second job is pure scheduling wall (guide §5:
   * the driver should do almost no data work — and no redundant jobs).
   *
-  * [[localCheckpointWithCount]] replicates the eager local checkpoint
+  * [[localCheckpointAggregate]] replicates the eager local checkpoint
   * exactly — same `executedPlan.execute().map(_.copy())`, same
-  * `rdd.localCheckpoint()`, same count-to-materialize, same
+  * `rdd.localCheckpoint()`, same SQL execution id around the action, same
   * `LogicalRDD.fromDataset(...).newInstance()` wrapper (so output
   * partitioning/ordering survive for downstream exchange reuse, and
-  * attribute ids are fresh for self-joins) — but RETURNS the row count the
-  * materializing action computed: one job where checkpoint + count was two.
-  *
-  * [[localCheckpointWithIntSum]] is the same fusion for convergence checks
-  * that count a CHANGED-row subset rather than all rows: the caller puts a
-  * 0/1 int column at a known ordinal and the materializing action sums it
-  * (one narrow `mapPartitions` + sum over the same traversal — no extra
-  * pass, no exchange, no accumulator semantics: the sum is the action's
-  * RESULT, computed once per partition of the now-persisted RDD).
+  * attribute ids are fresh for self-joins) — but its materializing action
+  * is the caller's fold over the rows, and it RETURNS the fold's result:
+  * one job where checkpoint + count/sum/max was two. The fold is the
+  * action's RESULT, computed once per partition of the now-persisted RDD
+  * — no extra pass, no exchange, no accumulator semantics.
   */
 object CheckpointOps {
 
   import org.apache.spark.sql.graft.CheckpointBridge
 
-  /** Eager local checkpoint that returns (checkpointed frame, row count) —
-    * the count comes from the single materializing job. */
-  def localCheckpointWithCount(df: DataFrame): (DataFrame, Long) = {
-    val rdd = CheckpointBridge.checkpointRdd(df)
-    val n = rdd.count()
-    (CheckpointBridge.wrap(df, rdd), n)
-  }
-
-  /** Eager local checkpoint that returns (checkpointed frame, sum of the
-    * non-null int column at `ordinal`) in the single materializing job.
-    * The caller owns the schema: `ordinal` must be an int column (e.g. a
-    * `(cond).cast("int")` change flag). */
-  def localCheckpointWithIntSum(df: DataFrame, ordinal: Int): (DataFrame, Long) = {
-    val rdd = CheckpointBridge.checkpointRdd(df)
-    val s = rdd.mapPartitions { it =>
-      var acc = 0L
-      while (it.hasNext) acc += it.next().getInt(ordinal)
-      Iterator.single(acc)
-    }.fold(0L)(_ + _)
-    (CheckpointBridge.wrap(df, rdd), s)
-  }
-
-  /** Eager local checkpoint that returns (checkpointed frame, max of the
-    * long column at `ordinal`, None when every row is null/absent) in the
-    * single materializing job — for iterative chains whose per-round
-    * normalizer is a max over the frame they just materialized. */
-  def localCheckpointWithLongMax(df: DataFrame, ordinal: Int): (DataFrame, Option[Long]) = {
-    val rdd = CheckpointBridge.checkpointRdd(df)
-    val m = rdd.mapPartitions { it =>
-      var acc = Option.empty[Long]
-      while (it.hasNext) {
-        val r = it.next()
-        if (!r.isNullAt(ordinal)) {
-          val v = r.getLong(ordinal)
-          if (acc.forall(_ < v)) acc = Some(v)
-        }
-      }
-      Iterator.single(acc)
-    }.fold(Option.empty[Long]) {
-      case (a, b) => (a, b) match {
-        case (Some(x), Some(y)) => Some(math.max(x, y))
-        case (x, None) => x
-        case (None, y) => y
-      }
+  /** Eager local checkpoint of `df` that returns (checkpointed frame,
+    * `rdd.aggregate(zero)(seqOp, combOp)` over its internal rows) from the
+    * single materializing job. The caller owns the schema: `seqOp` reads
+    * columns by ordinal (e.g. a `(cond).cast("int")` change flag at a
+    * known position). The job runs under a new SQL execution id, as
+    * `Dataset.localCheckpoint` does, so SQL metrics see it and it can be
+    * cancelled. */
+  def localCheckpointAggregate[A: ClassTag](df: DataFrame, zero: A)
+                                           (seqOp: (A, InternalRow) => A,
+                                            combOp: (A, A) => A): (DataFrame, A) =
+    CheckpointBridge.withNewExecutionId(df) {
+      val rdd = CheckpointBridge.checkpointRdd(df)
+      val a = rdd.aggregate(zero)(seqOp, combOp)
+      (CheckpointBridge.wrap(df, rdd), a)
     }
-    (CheckpointBridge.wrap(df, rdd), m)
-  }
-
-  /** Eager local checkpoint that returns (checkpointed frame, exact sum of
-    * the DECIMAL(precision, 0) column at `ordinal`, skipping nulls) in the
-    * single materializing job — integer-exact via BigInteger, matching a
-    * `sum(decimal)` aggregate's value for scale-0 columns. */
-  def localCheckpointWithDecimalSum(df: DataFrame, ordinal: Int,
-                                    precision: Int): (DataFrame, java.math.BigInteger) = {
-    val rdd = CheckpointBridge.checkpointRdd(df)
-    val s = rdd.mapPartitions { it =>
-      var acc = java.math.BigInteger.ZERO
-      while (it.hasNext) {
-        val r = it.next()
-        if (!r.isNullAt(ordinal))
-          acc = acc.add(r.getDecimal(ordinal, precision, 0)
-            .toJavaBigDecimal.toBigInteger)
-      }
-      Iterator.single(acc)
-    }.fold(java.math.BigInteger.ZERO)(_.add(_))
-    (CheckpointBridge.wrap(df, rdd), s)
-  }
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.SparkSession
 
-/** The session-keyed memo/cache isolation law, shared verbatim by the
+/** The [[SessionMemo]] isolation law, shared verbatim by the
   * single-JVM spec (DatasetOpsSpec) and the multi-process probe
   * ([[graft.MemoProbe]]): a multi-tenant service runs one session per
   * job on a shared context, and a cross-session cache hit would hand

@@ -409,10 +409,11 @@ object AlignmentQueries {
         .groupBy("a", "b").agg(sum(col("n")).as("n"))
         .localCheckpoint()
       val wins = matches.groupBy("winner").agg(sum(col("n")).as("w"))
-      val (players, kVal) = graft.ops.CheckpointOps.localCheckpointWithCount(
+      val (players, kVal) = graft.ops.CheckpointOps.localCheckpointAggregate(
         pairs.select(col("a")).distinct()
           .join(wins.withColumnRenamed("winner", "a"), Seq("a"), "left")
-          .select(col("a"), coalesce(col("w"), lit(0L)).as("w")))
+          .select(col("a"), coalesce(col("w"), lit(0L)).as("w")),
+        0L)((n, _) => n + 1, _ + _)
       var p = players.withColumn("p", lit(1000000L))
       // Micro-unit numerators accumulate in DECIMAL(38,0), never BIGINT:
       // n·10¹² and w·10¹² overflow signed 64-bit once any pair logs
@@ -442,12 +443,16 @@ object AlignmentQueries {
         // integer literals in the floor-div (same DECIMAL(38,0) math,
         // bit-identical ratings); the normalized p is a narrow projection
         // over the checkpoint, so the next round's lineage stays O(1).
-        val (praw, sVal) = graft.ops.CheckpointOps.localCheckpointWithDecimalSum(
+        // exact BigInteger sum of the non-null DECIMAL(38,0) praw column
+        val (praw, sVal) = graft.ops.CheckpointOps.localCheckpointAggregate(
           p.join(denom, "a")
             .select(col("a"), col("w"), expr(decFloorDiv(
               "CAST(w AS DECIMAL(38,0)) * 1000000000000",
               "greatest(denom, CAST(1 AS DECIMAL(38,0)))")).as("praw")),
-          ordinal = 2, precision = 38)
+          java.math.BigInteger.ZERO)(
+          (s, r) => if (r.isNullAt(2)) s
+                    else s.add(r.getDecimal(2, 38, 0).toJavaBigDecimal.toBigInteger),
+          _.add(_))
         val sLit = s"CAST(${sVal.max(java.math.BigInteger.ONE)} AS DECIMAL(38,0))"
         p = praw
           .withColumn("p", expr(decFloorDiv(

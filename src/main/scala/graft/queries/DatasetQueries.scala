@@ -520,7 +520,7 @@ object DatasetQueries {
     * `dedup_soft_weights` (down-weighting) — one calibration, two
     * policies.
     *
-    * MEMOIZED per (session, corpus dir) — the [[Tables]] frame-cache
+    * MEMOIZED per (session, corpus dir) — the [[Tables]] frame-memo
     * precedent, one level up: the chain's checkpointed builds (exact
     * groups, shingles, signatures, band joins, connected components) are
     * the expensive part of BOTH consumers, and a Verify/Bench session
@@ -529,19 +529,14 @@ object DatasetQueries {
     * frames, so the second policy query reruns only its own narrow
     * policy layer. Safe under the read-only testdata contract (inputs
     * immutable within a session); entries drop with the session via
-    * [[graft.ops.SessionCaches]]. */
+    * [[graft.ops.SessionMemo]]. */
   private[graft] def nearDupClusters(
       s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    graft.ops.SessionCaches.onSessionStop(s, clusterCache) { sess =>
-      clusterCache.keySet.removeIf(_._1 eq sess)
-    }
-    clusterCache.computeIfAbsent((s, dir), _ => buildNearDupClusters(s, dir))
-  }
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
+    clusters(s, dir)(buildNearDupClusters(s, dir))
 
-  private val clusterCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]()
+  private val clusters = new graft.ops.SessionMemo[String,
+    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]
 
   private def buildNearDupClusters(
       s: org.apache.spark.sql.SparkSession, dir: String)

@@ -280,8 +280,8 @@ object MiscQueries {
     // inlined as a LITERAL below — the old 1-row count frame, its
     // checkpoint, and the crossJoin(broadcast) it rode into every edge
     // projection and every round all disappear.
-    val (docs, n) = graft.ops.CheckpointOps.localCheckpointWithCount(
-      ids.select(col("doc_id")))
+    val (docs, n) = graft.ops.CheckpointOps.localCheckpointAggregate(
+      ids.select(col("doc_id")), 0L)((c, _) => c + 1, _ + _)
     val e1 = docs.select(col("doc_id").as("src"),
       ((col("doc_id") * 31 + 7) % n).as("dst"))
     val e2 = docs.select(col("doc_id").as("src"),
@@ -814,8 +814,8 @@ object MiscQueries {
     // union row instead of a per-step left join (sum(x ∪ {0}) ≡
     // coalesce(sum(x), 0)); the normalized scores are then a narrow
     // projection over the checkpoint — no second materialization.
-    val (docs, n) = graft.ops.CheckpointOps.localCheckpointWithCount(
-      ids.select(col("doc_id")))
+    val (docs, n) = graft.ops.CheckpointOps.localCheckpointAggregate(
+      ids.select(col("doc_id")), 0L)((c, _) => c + 1, _ + _)
     val e1 = docs.select(col("doc_id").as("src"),
       ((col("doc_id") * 31 + 7) % n).as("dst"))
     val e2 = docs.select(col("doc_id").as("src"),
@@ -832,8 +832,12 @@ object MiscQueries {
         .select(edges(edgeTo).as("id"), col(inCol).as("raw"))
         .union(docs.select(col("doc_id").as("id"), lit(0L).as("raw")))
         .groupBy("id").agg(sum(col("raw")).as("raw"))
-      val (rawCk, mx) =
-        graft.ops.CheckpointOps.localCheckpointWithLongMax(raw, 1)
+      // max of the non-null raw column; None when every row is null
+      val (rawCk, mx) = graft.ops.CheckpointOps.localCheckpointAggregate(
+        raw, Option.empty[Long])(
+        (m, r) => if (r.isNullAt(1)) m
+                  else Some(math.max(m.getOrElse(Long.MinValue), r.getLong(1))),
+        (a, b) => (a ++ b).maxOption)
       val norm = math.max(mx.getOrElse(0L) / S, 1L)
       rawCk.select(col("id"), expr(s"raw div $norm").as(outCol))
     }

@@ -621,18 +621,13 @@ object SelectionQueries {
     * the second query of each pair reruns only its own narrow reporting
     * layer. Safe under the read-only testdata contract (inputs immutable
     * within a session); entries drop with the owning session via
-    * [[graft.ops.SessionCaches]]. */
-  private val trainerCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String), AnyRef]()
+    * [[graft.ops.SessionMemo]]. */
+  private val trainers = new graft.ops.SessionMemo[(String, String), AnyRef]
 
   private def memoTrained[T <: AnyRef](s: org.apache.spark.sql.SparkSession,
                                        dir: String, family: String)
-                                      (build: => T): T = {
-    graft.ops.SessionCaches.onSessionStop(s, trainerCache) { sess =>
-      trainerCache.keySet.removeIf(_._1 eq sess)
-    }
-    trainerCache.computeIfAbsent((s, dir, family), _ => build).asInstanceOf[T]
-  }
+                                      (build: => T): T =
+    trainers(s, (dir, family))(build).asInstanceOf[T]
 
   /** Shared regex-safe weighted word vocabulary the trainers consume
     * (single-byte ASCII alphabet keeps both engines' character handling

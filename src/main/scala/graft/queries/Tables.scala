@@ -18,19 +18,13 @@ object Tables {
     * [[graft.operators.Similarity.corpusCount]] memo hits across queries
     * — a Verify/Bench session invoking several auto-depth stages pays ONE
     * count job for the shared corpus instead of one per stage. Safe for
-    * the read-only testdata contract; frames are immutable and the cache
-    * is bounded by #LIVE sessions × #tables — entries for a stopped
-    * session are dropped by the [[graft.ops.SessionCaches]] hook. */
-  private val frameCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+    * the read-only testdata contract; frames are immutable and the memo
+    * is bounded by #LIVE sessions × #tables ([[graft.ops.SessionMemo]]
+    * drops a stopped session's entries). */
+  private val frames = new graft.ops.SessionMemo[String, DataFrame]
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    graft.ops.SessionCaches.onSessionStop(spark, frameCache) { s =>
-      frameCache.keySet.removeIf(_._1 eq s)
-    }
-    frameCache.computeIfAbsent((spark, s"$sfDir/$name.parquet"),
-      _ => load(spark, sfDir, name))
-  }
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    frames(spark, s"$sfDir/$name.parquet")(load(spark, sfDir, name))
 
   private def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // events.parquet has carried TIMESTAMP(NANOS) (readable only as a
@@ -70,10 +64,6 @@ object Tables {
       case _ => df // already a long (or absent)
     }
   }
-
-  /** `events.ts` (nanosecond-epoch long under nanosAsLong) as epoch seconds. */
-  def tsEpochSeconds = (colName: String) =>
-    floor(col(colName) / lit(1000000000L)).cast("long")
 
   /** Synthetic video manifest from `events` (video_id, file_path, total_duration). */
   def manifest(spark: SparkSession, sfDir: String): DataFrame =

@@ -97,31 +97,37 @@ object TextQueries {
       SELECT content_hash, MIN(doc_id) AS keep_id, COUNT(*) AS dup_count
       FROM k GROUP BY content_hash ORDER BY keep_id"""))
 
+  /** The char-3-gram shingle frame (doc_id, sh) of docs with doc_id < 200
+    * and its Jaccard ≥ 0.6 pairs (id_a, id_b, jaccard), id_a < id_b —
+    * shared by `dedup_ngram_jaccard` and `dedup_components`. */
+  private def ngramJaccardPairs(s: org.apache.spark.sql.SparkSession, dir: String)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    // Cache the (tiny, bounded) shingle frame: without it Catalyst
+    // inlines shingle construction into both join sides and recomputes
+    // it once per PAIR instead of once per doc.
+    // length(text) >= 3 mirrors the oracle CTE exactly: charShingles
+    // collapses shorter docs to [text], which the oracle's generate_series
+    // form has no row for — latent divergence on short future docs.
+    // Parallelism floor BEFORE the cache: the 200-row filtered scan is
+    // one partition, which would serialize all ~20k pairwise intersects.
+    val sh = graft.ops.Parallelism.ensure(
+        table(s, dir, "documents").filter(col("doc_id") < 200 && length(col("text")) >= 3))
+      .select(col("doc_id"), array_sort(charShingles(col("text"), 3)).as("sh"))
+      .cache()
+    val a = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
+    val b = sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
+    val pairs = a.join(broadcast(b), col("id_a") < col("id_b"))
+      .withColumn("inter", Dedup.sortedIntersectCount(col("sh_a"), col("sh_b")))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
+      .filter(col("jaccard") >= 0.6)
+      .select("id_a", "id_b", "jaccard")
+    (sh, pairs)
+  }
+
   /** Char-3-gram Jaccard near-dup pairs (bounded subset; exact set math). */
   val dedupNgramJaccard = QueryDef("dedup_ngram_jaccard",
-    (s, dir) => {
-      // Cache the (tiny, bounded) shingle frame: without it Catalyst
-      // inlines shingle construction into both join sides and recomputes
-      // it once per PAIR instead of once per doc.
-      // length(text) >= 3 mirrors the oracle CTE exactly: charShingles
-      // collapses shorter docs to [text], which the oracle's generate_series
-      // form has no row for — latent divergence on short future docs.
-      // Parallelism floor BEFORE the cache: the 200-row filtered scan is
-      // one partition, which would serialize all ~20k pairwise intersects.
-      val sh = graft.ops.Parallelism.ensure(
-          table(s, dir, "documents").filter(col("doc_id") < 200 && length(col("text")) >= 3))
-        .select(col("doc_id"), array_sort(charShingles(col("text"), 3)).as("sh"))
-        .cache()
-      val a = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-      val b = sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-      a.join(broadcast(b), col("id_a") < col("id_b"))
-        .withColumn("inter", Dedup.sortedIntersectCount(col("sh_a"), col("sh_b")))
-        .withColumn("jaccard", col("inter").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
-        .filter(col("jaccard") >= 0.6)
-        .select("id_a", "id_b", "jaccard")
-        .orderBy("id_a", "id_b")
-    },
+    (s, dir) => ngramJaccardPairs(s, dir)._2.orderBy("id_a", "id_b"),
     Some("""WITH s AS (SELECT doc_id,
         list_distinct([substring(text, i, 3) for i in generate_series(1, length(text) - 2)]) AS sh
       FROM documents WHERE doc_id < 200 AND length(text) >= 3),
@@ -646,18 +652,8 @@ object TextQueries {
     * closure reduced by MIN(reachable id) — same components. */
   val dedupComponents = QueryDef("dedup_components",
     (s, dir) => {
-      val sh = graft.ops.Parallelism.ensure(
-          table(s, dir, "documents").filter(col("doc_id") < 200 && length(col("text")) >= 3))
-        .select(col("doc_id"), array_sort(charShingles(col("text"), 3)).as("sh"))
-        .cache()
-      val a = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-      val b = sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-      val edges = a.join(broadcast(b), col("id_a") < col("id_b"))
-        .withColumn("inter", Dedup.sortedIntersectCount(col("sh_a"), col("sh_b")))
-        .withColumn("jaccard", col("inter").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
-        .filter(col("jaccard") >= 0.6)
-        .select(col("id_a").as("src"), col("id_b").as("dst"))
+      val (sh, pairs) = ngramJaccardPairs(s, dir)
+      val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       val comps = graft.operators.Components.connectedComponents(
         sh.select(col("doc_id").as("id")), edges)
       val sizes = comps.groupBy("comp").agg(count(lit(1)).as("n_members"))

@@ -3,15 +3,15 @@ package org.apache.spark.sql.graft
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
 /** Bridge to the `private[sql]` pieces of `Dataset.localCheckpoint`'s
   * implementation, so [[graft.ops.CheckpointOps]] can replicate the eager
   * local checkpoint exactly (same executedPlan RDD, same
   * `LogicalRDD.fromDataset(...).newInstance()` wrapper preserving output
-  * partitioning/ordering) while fusing the materializing action with the
-  * caller's convergence count. Same package-escalation technique as
-  * [[ColumnBridge]]. */
+  * partitioning/ordering, same SQL execution id around the action) while
+  * fusing the materializing action with the caller's convergence fold.
+  * Same package-escalation technique as [[ColumnBridge]]. */
 object CheckpointBridge {
 
   /** The `executedPlan.execute().map(_.copy())` RDD `Dataset.checkpoint`
@@ -23,6 +23,15 @@ object CheckpointBridge {
     rdd.localCheckpoint()
     rdd
   }
+
+  /** Run `body` under a new "localCheckpoint" SQL execution for `df`'s
+    * query execution, as `Dataset.localCheckpoint`'s own action does: its
+    * jobs carry `spark.sql.execution.id`, so SQL metrics and the SQL tab
+    * see them and cancelling the execution cancels them. */
+  def withNewExecutionId[T](df: DataFrame)(body: => T): T =
+    SQLExecution.withNewExecutionId(
+      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution,
+      Some("localCheckpoint"))(body)
 
   /** Wrap the (materialized) checkpoint RDD exactly as
     * `Dataset.checkpoint` does. */

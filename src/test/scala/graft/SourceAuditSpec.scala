@@ -21,7 +21,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    argmaxes). A new unbounded collect cannot land without either
   *    the marker (visible in review, greppable) or failing here;
   *  - sessions are built only by `GraftSession`, across main and test
-  *    sources, so every entry point runs the same engine confs and rules.
+  *    sources, so every entry point runs the same engine confs and rules;
+  *  - one way to memoize per session and one way to fuse a checkpoint:
+  *    `ConcurrentHashMap` lives only in `SessionMemo` (plus the
+  *    executor-side model singleton, which is not session-keyed), and
+  *    `CheckpointBridge.checkpointRdd` is called once, by `CheckpointOps`.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
@@ -114,6 +118,34 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(outside.isEmpty,
       "session builder called outside GraftSession (use GraftSession.fromEnv/local): " +
         outside.mkString(", "))
+  }
+
+  /** Code (non-comment) lines under `src/main/scala` matching `pattern`,
+    * as (source path, "path:line"). */
+  private def mainCodeHits(pattern: scala.util.matching.Regex): Seq[(String, String)] =
+    for {
+      (f, lines) <- sourcesUnder("src/main/scala")
+      flags = commentFlags(lines)
+      (l, i) <- lines.zipWithIndex
+      if !flags(i) && pattern.findFirstIn(l).isDefined
+    } yield (f, s"$f:${i + 1}")
+
+  test("ConcurrentHashMap appears only in SessionMemo.scala and ml/ModelStage.scala") {
+    val hits = mainCodeHits("""\bConcurrentHashMap\b""".r)
+    val allowed = Seq("/ops/SessionMemo.scala", "/ml/ModelStage.scala")
+    assert(hits.exists(_._1.endsWith(allowed.head)), "SessionMemo no longer holds the memo map")
+    val outside = hits.filterNot(h => allowed.exists(h._1.endsWith)).map(_._2)
+    assert(outside.isEmpty,
+      "hand-written concurrent map outside SessionMemo (use graft.ops.SessionMemo): " +
+        outside.mkString(", "))
+  }
+
+  test("CheckpointBridge.checkpointRdd is called once, from CheckpointOps.scala") {
+    val calls = mainCodeHits("""(?<!def )\bcheckpointRdd\s*\(""".r)
+    assert(calls.size == 1 && calls.head._1.endsWith("/ops/CheckpointOps.scala"),
+      "the fused checkpoint has one implementation, " +
+        "CheckpointOps.localCheckpointAggregate; checkpointRdd called at: " +
+        calls.map(_._2).mkString(", "))
   }
 
   test("every driver-side action carries a '// bounded:' justification") {
