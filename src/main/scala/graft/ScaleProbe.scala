@@ -268,12 +268,10 @@ object ScaleProbe {
           .withColumn("est", Dedup.kmvJaccardEst(col("ha"), col("hb"), 32)))
       },
       "dedup_corpus" -> { m =>
-        // the composed exact → minhash-LSH → components → verdict chain
-        // via the SHARED stage builder — the probe measures EXACTLY the
-        // registered pipeline_dedup_corpus plan (r13: the previous
-        // inline replica stopped at components and kept the pre-fusion
-        // two-barrier checkpoint shape, so its 50×/100× rows priced a
-        // superseded plan)
+        // the composed exact → minhash-LSH → components → verdict chain:
+        // the registered pipeline_dedup_corpus body over the one near-dup
+        // builder (Dedup.nearDupClusters), so the probe measures exactly
+        // the shipped plan
         noop(graft.queries.PipelineQueries.dedupCorpusVerdicts(docs(m)))
       },
       "incremental_dedup" -> { m =>

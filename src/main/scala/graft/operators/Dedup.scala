@@ -208,6 +208,73 @@ object Dedup {
       .distinct()
   }
 
+  /** The near-dup clustering chain over a `(doc_id, text)` frame, shared
+    * by `dedup_representative`, `dedup_soft_weights` (through the
+    * session memo `DatasetQueries.nearDupClusters`), `pipeline_dedup_corpus`
+    * and ScaleProbe's `dedup_corpus` family: exact bag-of-words groups →
+    * md5 MinHash (k = 32) and 8×4 LSH bands over the exact SURVIVORS →
+    * signature-estimate screen (est ≥ 0.35) → exact shingle Jaccard
+    * (≥ 0.5) → connected components. Its DuckDB replay is
+    * `MinhashSql.nearDupClusterCtes`.
+    *
+    * Returns `(withKeep, comps)`: every doc with its exact group's
+    * `keep_id`, its `carry` columns, and — survivors only, null for exact
+    * dups — its signature `sig` and hashed shingle set `sh`; and every
+    * survivor's near-dup component `(id, comp)`.
+    *
+    * `carry` holds the per-doc values a caller needs after the chain,
+    * evaluated over `docs` BEFORE the one checkpoint: raw text never
+    * crosses it (the r12 cluster-tax finding — on a 4-executor topology
+    * every downstream read of a text-carrying barrier paid cross-process
+    * serialization of the widest column, 1.96× single-JVM task-CPU at the
+    * 100× tier). The barrier holds the survivors' signature and
+    * 60-bit-hashed shingle set from ONE md5 pass, so the band join reads
+    * a materialized sig and the verify joins ship 8-byte longs; hashed-
+    * distinct cardinalities equal string cardinalities, so every Jaccard
+    * is unchanged.
+    *
+    * The exact pre-stage is LOAD-BEARING at scale: LSH over a corpus that
+    * still holds exact-dup groups bands every group of m identical docs
+    * into the same buckets and emits m² candidate pairs — measured 20.3 s
+    * at sf0.1 without the stage vs ~5 s with it. */
+  def nearDupClusters(docs: DataFrame, carry: Column*): (DataFrame, DataFrame) = {
+    // NOT checkpointed: the content key is a narrow map riding the scan —
+    // recomputing it on the agg and join branches is cheaper at any scale
+    // than materializing the full corpus with its text.
+    val keyed = graft.ops.Parallelism.ensure(docs)
+      .select((col("doc_id") +: col("text") +: carry): _*)
+      .withColumn("content_hash", md5(bagOfWordsKey(col("text"))))
+    val groups = keyed.groupBy("content_hash").agg(min(col("doc_id")).as("keep_id"))
+    val withKeep = withMinhashSigAndHashesMd5(
+        keyed.join(groups, "content_hash")
+          .withColumn("shw", when(col("doc_id") === col("keep_id"),
+            array_sort(TextFunctions.wordShingles(col("text"), 2)))),
+        col("shw"), 32, sigName = "sig", hashedName = "sh")
+      .drop("content_hash", "text", "shw")
+      .localCheckpoint()
+    val survivors = withKeep.filter(col("doc_id") === col("keep_id"))
+    val sh = survivors.select(col("doc_id"), col("sh"))
+    // Estimate screen BEFORE the verify join: the estimate lives on the
+    // pair rows already (no extra shuffle), while the verify join ships
+    // two shingle arrays per pair — 15× superlinear wall at the 10× probe
+    // without it (band collisions on template-similar corpora make the
+    // linear candidate set a LARGE one, ~62 pairs/doc).
+    val pairs = lshCandidatePairs(survivors, "doc_id", "sig",
+        bands = 8, rowsPerBand = 4, replayable = true)
+      .withColumn("est", estJaccard(col("sig_a"), col("sig_b"), 32))
+      .filter(col("est") >= 0.35)
+    val edges = pairs
+      .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
+      .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b")
+      .withColumn("inter", sortedIntersectCount(col("sh_a"), col("sh_b")))
+      .filter(col("inter").cast("double") /
+        (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double") >= 0.5)
+      .select(col("id_a").as("src"), col("id_b").as("dst"))
+    val comps = Components.connectedComponents(
+      survivors.select(col("doc_id").as("id")), edges)
+    (withKeep, comps)
+  }
+
   /** 64-bit SimHash per row. Native path: one per-row expression
     * ([[graft.plans.SimHash64]]) — a pure narrow map, zero shuffles, so the
     * sketch rides the document scan. Fallback (no registration): relational

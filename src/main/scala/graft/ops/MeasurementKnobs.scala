@@ -46,12 +46,7 @@ object MeasurementKnobs {
       "forces multi-slice NN-descent rounds on the fixed corpus (vs one slice)",
       (s, dir) => graft.queries.SimilarityQueries.knnGraphEdges(
         graft.queries.Tables.table(s, dir, "embeddings")
-          .select("vec_id", "embedding"))),
-    Knob("SPARK_GRAFT_LSH_CHUNK_DOCS", "100",
-      "forces multi-slice LSH verify joins on the fixed corpus (vs one slice)",
-      (s, dir) => graft.queries.TextQueries.lshCalibrationReport(
-        graft.queries.Tables.table(s, dir, "documents")
-          .select("doc_id", "text"))))
+          .select("vec_id", "embedding"))))
 
   /** `SPARK_GRAFT_*` names that are NOT value-identity knobs, with the
     * reason the law exempts each. Session/harness configuration changes

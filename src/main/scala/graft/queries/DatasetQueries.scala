@@ -412,64 +412,9 @@ object DatasetQueries {
 
   // ── dedup_representative ────────────────────────────────────────────────
 
-  /** DuckDB CTE chain ending in `wk(doc_id, text, toks, keep_id)` and
-    * `comp(id, comp)` — the near-dup clustering replay shared verbatim by
-    * the `dedup_representative` and `dedup_soft_weights` oracles (exact
-    * bag-of-words groups → minhash/LSH over survivors → est-prescreened
-    * exact-Jaccard edges → recursive component closure). Callers prepend
-    * `WITH RECURSIVE`. */
-  private val nearDupClusterCtes: String = {
-    // MATERIALIZED = DuckDB-plan-only hints (values unchanged): `sig` is
-    // referenced 10× (8 band selects + 2 est joins), `gsh` 3×, the rest
-    // 2×; inlined, DuckDB re-runs the shingle/minhash pipeline per
-    // reference (dedup_representative read 38 s at sf0.1; 2 s
-    // materialized).
-    val k = 32; val bands = 8; val rpb = 4
-    val sigMins = (0 until k).map(j => s"MIN(h1 + $j * h2) AS s$j").mkString(", ")
-    val estSum = (0 until k).map(j => s"CASE WHEN sa.s$j = sb.s$j THEN 1 ELSE 0 END").mkString(" + ")
-    val bandSelects = (0 until bands).map { b =>
-      val cols = (b * rpb until (b + 1) * rpb).map(j => s"CAST(s$j AS VARCHAR)").mkString(" || ',' || ")
-      s"SELECT doc_id, $b AS band_idx, CAST(('0x' || substring(md5($cols), 1, 15)) AS BIGINT) AS band_hash FROM sig"
-    }.mkString(" UNION ALL ")
-    s"""kd AS MATERIALIZED (SELECT doc_id, text, $toksSql AS toks,
-          md5(array_to_string(list_sort(list_distinct($toksSql)), ' ')) AS content_hash
-        FROM documents),
-      g AS (SELECT content_hash, MIN(doc_id) AS keep_id FROM kd GROUP BY content_hash),
-      wk AS MATERIALIZED (SELECT kd.doc_id, kd.text, kd.toks, g.keep_id
-             FROM kd JOIN g USING (content_hash)),
-      d AS (SELECT doc_id, toks FROM wk WHERE doc_id = keep_id),
-      gsh AS MATERIALIZED (SELECT doc_id,
-        CASE WHEN len(toks) >= 2
-             THEN list_distinct([toks[i] || ' ' || toks[i+1] for i in generate_series(1, len(toks) - 1)])
-             ELSE [array_to_string(toks, ' ')] END AS sh
-        FROM d),
-      ex AS (SELECT doc_id, UNNEST(sh) AS t FROM gsh),
-      th AS (SELECT doc_id,
-        CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT) AS h1,
-        CAST(('0x' || substring(md5(t), 17, 14)) AS BIGINT) AS h2 FROM ex),
-      sig AS MATERIALIZED (SELECT doc_id, $sigMins FROM th GROUP BY doc_id),
-      bd AS ($bandSelects),
-      cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-               FROM bd a JOIN bd b ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-                   AND a.doc_id < b.doc_id),
-      est AS (SELECT id_a, id_b FROM cand
-              JOIN sig sa ON sa.doc_id = cand.id_a
-              JOIN sig sb ON sb.doc_id = cand.id_b
-              WHERE CAST($estSum AS DOUBLE) / $k >= 0.35),
-      tj AS MATERIALIZED (SELECT c.id_a, c.id_b
-             FROM est c JOIN gsh ga ON ga.doc_id = c.id_a JOIN gsh gb ON gb.doc_id = c.id_b
-             WHERE CAST(len(list_intersect(ga.sh, gb.sh)) AS DOUBLE) /
-                   CAST(len(ga.sh) + len(gb.sh) - len(list_intersect(ga.sh, gb.sh)) AS DOUBLE) >= 0.5),
-      e AS (SELECT id_a AS src, id_b AS dst FROM tj UNION SELECT id_b, id_a FROM tj),
-      r AS (SELECT doc_id AS id, doc_id AS reach FROM d
-            UNION
-            SELECT e.src AS id, r.reach FROM e JOIN r ON e.dst = r.id),
-      comp AS MATERIALIZED (SELECT id, MIN(reach) AS comp FROM r GROUP BY id)"""
-  }
-
   private def representativeOracleSql: String = {
     s"""WITH RECURSIVE
-      $nearDupClusterCtes,
+      ${MinhashSql.nearDupClusterCtes},
       q AS (SELECT doc_id, keep_id,
         ROUND(LEAST(CAST(1.0 AS DOUBLE), CAST(len(toks) AS DOUBLE) / 100.0) * 0.4 +
               (CAST(1.0 AS DOUBLE) -
@@ -492,102 +437,41 @@ object DatasetQueries {
       ORDER BY m.doc_id"""
   }
 
-  /** Duplicate-cluster representative selection by QUALITY — production
-    * near-dup dedup keeps the best document of each cluster, not the
-    * lowest id (a crawl's canonical page beats its mirror with truncated
-    * boilerplate). Chain: exact bag-of-words dedup FIRST, then md5-minhash
-    * → LSH bands → est-prescreened exact-Jaccard edges over the exact
-    * SURVIVORS only → connected components → verdicts expanded back over
-    * every doc through its content group's keep_id; per cluster keep the
-    * max-quality member, ties to min doc_id.
-    *
-    * The exact pre-stage is LOAD-BEARING at scale, not an optimization
-    * nicety: running LSH over a corpus that still contains exact-dup
-    * groups makes every group of m identical docs band into the same
-    * buckets and emit m² candidate pairs each shipping two shingle
-    * arrays — measured 20.3 s at sf0.1 without the stage vs ~5 s with it
-    * (same lesson at 100 TB, where m reaches millions for boilerplate
-    * pages). Representative semantics are unchanged by the expansion: an
-    * exact group's members tie on quality (identical text) and its
-    * keep_id is the group's min doc_id, so the tie-break elects the
-    * survivor either way. */
-  /** Shared near-dup clustering chain (the Scala side of
-    * [[nearDupClusterCtes]]): exact bag-of-words dedup → md5-minhash/LSH
-    * over the exact survivors → est-prescreened exact-Jaccard edges →
-    * connected components. Returns (withKeep, comps): every doc with its
-    * exact-group `keep_id`, and every survivor with its near-dup `comp`.
-    * Used by `dedup_representative` (keep-best selection) and
-    * `dedup_soft_weights` (down-weighting) — one calibration, two
-    * policies.
+  /** The near-dup clustering of a corpus dir ([[Dedup.nearDupClusters]]),
+    * carrying each doc's `quality` and `n_tok` for its two policies:
+    * `dedup_representative` (keep-best selection) and `dedup_soft_weights`
+    * (down-weighting) — one calibration, two policies.
     *
     * MEMOIZED per (session, corpus dir) — the [[Tables]] frame-memo
     * precedent, one level up: the chain's checkpointed builds (exact
-    * groups, shingles, signatures, band joins, connected components) are
-    * the expensive part of BOTH consumers, and a Verify/Bench session
-    * running the pair was measured paying the clustering twice (~14 s +
-    * ~6 s combined at sf0.1). The memo returns the SAME checkpointed
-    * frames, so the second policy query reruns only its own narrow
-    * policy layer. Safe under the read-only testdata contract (inputs
-    * immutable within a session); entries drop with the session via
-    * [[graft.ops.SessionMemo]]. */
+    * groups, signatures, band joins, connected components) are the
+    * expensive part of BOTH consumers, and a Verify/Bench session running
+    * the pair was measured paying the clustering twice (~14 s + ~6 s
+    * combined at sf0.1). The memo returns the SAME checkpointed frames, so
+    * the second policy query reruns only its own narrow policy layer. Safe
+    * under the read-only testdata contract (inputs immutable within a
+    * session); entries drop with the session via [[graft.ops.SessionMemo]]. */
   private[graft] def nearDupClusters(
       s: org.apache.spark.sql.SparkSession, dir: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-    clusters(s, dir)(buildNearDupClusters(s, dir))
+    clusters(s, dir)(Dedup.nearDupClusters(table(s, dir, "documents"),
+      qualityScore(col("text")).as("quality"),
+      size(tokens(col("text"))).cast("long").as("n_tok")))
 
   private val clusters = new graft.ops.SessionMemo[String,
     (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]
 
-  private def buildNearDupClusters(
-      s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val docs = graft.ops.Parallelism.ensure(table(s, dir, "documents"))
-      .select(col("doc_id"), col("text"))
-    val keyed = docs.withColumn("content_hash", md5(Dedup.bagOfWordsKey(col("text"))))
-    val groups = keyed.groupBy("content_hash").agg(min(col("doc_id")).as("keep_id"))
-    // ONE barrier (r16, was withKeep + shingles + signatures = three
-    // checkpoints): survivors' signature and 60-bit-hashed shingle set
-    // ride the SAME checkpoint, both from a single md5 pass (null for
-    // exact-dups — withMinhashSigAndHashesMd5 propagates the null shw).
-    // The band join reads the materialized sig column directly (the old
-    // reason to checkpoint signatures — the doubled 32-permutation tree
-    // in the self-join — no longer exists), and the verification joins
-    // ship 8-byte longs instead of shingle strings (the lsh_calibration
-    // discipline); hashed-distinct cardinalities equal string
-    // cardinalities, so every tj — and every edge/component — is
-    // unchanged.
-    val withKeep = Dedup.withMinhashSigAndHashesMd5(
-        keyed.join(groups, "content_hash")
-          .withColumn("shw", when(col("doc_id") === col("keep_id"),
-            array_sort(wordShingles(col("text"), 2)))),
-        col("shw"), 32, sigName = "sig", hashedName = "sh")
-      .drop("shw")
-      .localCheckpoint()
-    val survivors = withKeep.filter(col("doc_id") === col("keep_id"))
-    val sh = survivors.select(col("doc_id"), col("sh"))
-    val sigs = survivors.select(col("doc_id"), col("sig"))
-    val pairs = Dedup.lshCandidatePairs(sigs, "doc_id", "sig",
-        bands = 8, rowsPerBand = 4, replayable = true)
-      .withColumn("est", Dedup.estJaccard(col("sig_a"), col("sig_b"), 32))
-      .filter(col("est") >= 0.35)
-    val edges = pairs
-      .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("inter", Dedup.sortedIntersectCount(col("sh_a"), col("sh_b")))
-      .withColumn("tj", col("inter").cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
-      .filter(col("tj") >= 0.5)
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-    val comps = Components.connectedComponents(
-      survivors.select(col("doc_id").as("id")), edges)
-    (withKeep, comps)
-  }
-
+  /** Duplicate-cluster representative selection by QUALITY — production
+    * near-dup dedup keeps the best document of each cluster, not the
+    * lowest id (a crawl's canonical page beats its mirror with truncated
+    * boilerplate). Over [[nearDupClusters]]: verdicts expand back over
+    * every doc through its content group's keep_id; per cluster keep the
+    * max-quality member, ties to min doc_id. */
   val dedupRepresentative = QueryDef("dedup_representative",
     (s, dir) => {
       val (withKeep, comps) = nearDupClusters(s, dir)
       val members = withKeep
-        .select(col("doc_id"), col("keep_id"), qualityScore(col("text")).as("quality"))
+        .select(col("doc_id"), col("keep_id"), col("quality"))
         .join(comps, col("keep_id") === comps("id"))
         .select(col("doc_id"), col("comp"), col("quality"))
       val mq = members.groupBy("comp").agg(max(col("quality")).as("mxq"))
@@ -621,8 +505,7 @@ object DatasetQueries {
     (s, dir) => {
       val (withKeep, comps) = nearDupClusters(s, dir)
       val members = withKeep
-        .select(col("doc_id"), col("keep_id"),
-          size(tokens(col("text"))).cast("long").as("n_tok"))
+        .select(col("doc_id"), col("keep_id"), col("n_tok"))
         .join(comps, col("keep_id") === comps("id"))
         .select(col("doc_id"), col("comp"), col("n_tok"))
       val sizes = members.groupBy("comp").agg(count(lit(1)).as("cluster_size"))
@@ -634,7 +517,7 @@ object DatasetQueries {
         .orderBy("doc_id")
     },
     Some(s"""WITH RECURSIVE
-      $nearDupClusterCtes,
+      ${MinhashSql.nearDupClusterCtes},
       mem AS (SELECT wk.doc_id, c.comp, CAST(len(wk.toks) AS BIGINT) AS n_tok
               FROM wk JOIN comp c ON wk.keep_id = c.id),
       sz AS (SELECT comp, CAST(COUNT(*) AS BIGINT) AS cluster_size FROM mem GROUP BY comp)

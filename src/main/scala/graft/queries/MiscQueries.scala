@@ -249,6 +249,34 @@ object MiscQueries {
       SELECT comp, COUNT(*) AS n_members, MAX(id) AS max_id
       FROM comp GROUP BY comp ORDER BY comp"""))
 
+  /** The synthetic link graph of [[pagerankRanked]] and [[hitsScored]]
+    * over `docs(doc_id)` (`n` rows): two affine-modular out-links per page
+    * plus a planted hub (id 0) every page links to, without self-loops.
+    * An out-link whose target is not a document is dropped, so ids that
+    * are not dense 0..n−1 never grow phantom nodes. */
+  private def linkGraph(docs: org.apache.spark.sql.DataFrame, n: Long)
+      : org.apache.spark.sql.DataFrame = {
+    val e1 = docs.select(col("doc_id").as("src"),
+      ((col("doc_id") * 31 + 7) % n).as("dst"))
+    val e2 = docs.select(col("doc_id").as("src"),
+      ((col("doc_id") * 17 + 3) % n).as("dst"))
+    val hub = docs.select(col("doc_id").as("src"), lit(0L).as("dst"))
+    e1.union(e2).union(hub)
+      .filter(col("src") =!= col("dst"))
+      .join(docs.select(col("doc_id").as("dst")), Seq("dst"), "left_semi")
+      .select("src", "dst").distinct().localCheckpoint()
+  }
+
+  /** [[linkGraph]]'s DuckDB replay: `nn(n)`, `d(doc_id)` and the edge CTE
+    * `e(src, dst)`. */
+  private val linkGraphCtes =
+    """nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
+        d AS (SELECT doc_id FROM documents),
+        e0 AS (SELECT doc_id AS src, (doc_id * 31 + 7) % nn.n AS dst FROM d CROSS JOIN nn
+               UNION SELECT doc_id, (doc_id * 17 + 3) % nn.n FROM d CROSS JOIN nn
+               UNION SELECT doc_id, 0 FROM d),
+        e AS (SELECT src, dst FROM e0 WHERE src <> dst AND dst IN (SELECT doc_id FROM d))"""
+
   private val prScale = 1000000000000L // rank mass in integer micro-units
   private val prIters = 3
 
@@ -282,13 +310,7 @@ object MiscQueries {
     // projection and every round all disappear.
     val (docs, n) = graft.ops.CheckpointOps.localCheckpointAggregate(
       ids.select(col("doc_id")), 0L)((c, _) => c + 1, _ + _)
-    val e1 = docs.select(col("doc_id").as("src"),
-      ((col("doc_id") * 31 + 7) % n).as("dst"))
-    val e2 = docs.select(col("doc_id").as("src"),
-      ((col("doc_id") * 17 + 3) % n).as("dst"))
-    val hub = docs.select(col("doc_id").as("src"), lit(0L).as("dst"))
-    val edges = e1.union(e2).union(hub)
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
+    val edges = linkGraph(docs, n)
     val out = edges.groupBy("src").agg(count(lit(1)).as("outd"))
     val edgesOut = edges.join(out, "src").localCheckpoint()
     val base = lit((15L * (prScale / math.max(n, 1L))) / 100L)
@@ -325,12 +347,7 @@ object MiscQueries {
                      CAST(((15 * ($prScale // nn.n)) // 100) + ((85 * COALESCE(c$k.sc, 0)) // 100) AS BIGINT) AS r
                    FROM d CROSS JOIN nn LEFT JOIN c$k ON c$k.dst = d.doc_id)"""
       }
-      s"""WITH nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
-        d AS (SELECT doc_id FROM documents),
-        e0 AS (SELECT doc_id AS src, (doc_id * 31 + 7) % nn.n AS dst FROM d CROSS JOIN nn
-               UNION SELECT doc_id, (doc_id * 17 + 3) % nn.n FROM d CROSS JOIN nn
-               UNION SELECT doc_id, 0 FROM d),
-        e AS (SELECT src, dst FROM e0 WHERE src <> dst),
+      s"""WITH $linkGraphCtes,
         o AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outd FROM e GROUP BY src),
         r0 AS (SELECT doc_id AS id, ($prScale // nn.n) AS r FROM d CROSS JOIN nn),
         ${(1 to prIters).map(round).mkString(",\n        ")}
@@ -816,13 +833,7 @@ object MiscQueries {
     // projection over the checkpoint — no second materialization.
     val (docs, n) = graft.ops.CheckpointOps.localCheckpointAggregate(
       ids.select(col("doc_id")), 0L)((c, _) => c + 1, _ + _)
-    val e1 = docs.select(col("doc_id").as("src"),
-      ((col("doc_id") * 31 + 7) % n).as("dst"))
-    val e2 = docs.select(col("doc_id").as("src"),
-      ((col("doc_id") * 17 + 3) % n).as("dst"))
-    val hub = docs.select(col("doc_id").as("src"), lit(0L).as("dst"))
-    val edges = e1.union(e2).union(hub)
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
+    val edges = linkGraph(docs, n)
     var auth = docs.select(col("doc_id").as("id"), lit(S).as("a"))
     var hubs: org.apache.spark.sql.DataFrame = null
     def step(scores: org.apache.spark.sql.DataFrame, inCol: String,
@@ -868,12 +879,7 @@ object MiscQueries {
         $tag AS (SELECT d.doc_id AS id,
                    COALESCE($rawCte.$rawCol, 0) // GREATEST(${tag}m.mx // $S, 1) AS $out
                  FROM d CROSS JOIN ${tag}m LEFT JOIN $rawCte ON $rawCte.$key = d.doc_id)"""
-      s"""WITH nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
-        d AS (SELECT doc_id FROM documents),
-        e0 AS (SELECT doc_id AS src, (doc_id * 31 + 7) % nn.n AS dst FROM d CROSS JOIN nn
-               UNION SELECT doc_id, (doc_id * 17 + 3) % nn.n FROM d CROSS JOIN nn
-               UNION SELECT doc_id, 0 FROM d),
-        e AS (SELECT src, dst FROM e0 WHERE src <> dst),
+      s"""WITH $linkGraphCtes,
         a0 AS (SELECT doc_id AS id, CAST($S AS BIGINT) AS a FROM d),
         h1r AS (SELECT e.src, CAST(SUM(a0.a) AS BIGINT) AS hr
                 FROM e JOIN a0 ON e.dst = a0.id GROUP BY e.src),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.ml.Models
+import graft.operators.Dedup
 import graft.pipelines.{Captioning, FrameMining, VideoSlicing}
 
 /** End-to-end pipeline recompositions (E1–E3) as registered queries. The
@@ -484,153 +485,35 @@ object PipelineQueries {
         LEAST(32, n_tok - chunk_idx * 32) AS chunk_tokens
       FROM c ORDER BY doc_id, chunk_idx"""))
 
-  /** DuckDB replay of the full dedup-corpus chain: exact groups →
-    * md5-minhash signatures over the SURVIVORS → 8×4 LSH banding →
-    * true-Jaccard-verified edges → recursive-CTE connected components →
-    * per-doc verdicts. Generated so the SQL stays in lock-step with the
-    * Spark constants (k=32, 8 bands × 4 rows, threshold 0.5). */
-  private def dedupCorpusOracleSql: String = {
-    val k = 32; val bands = 8; val rpb = 4
-    val toksSql = "list_filter(string_split(text, ' '), t -> t <> '')"
-    val sigMins = (0 until k).map(j => s"MIN(h1 + $j * h2) AS s$j").mkString(", ")
-    val estSum = (0 until k).map(j => s"CASE WHEN sa.s$j = sb.s$j THEN 1 ELSE 0 END").mkString(" + ")
-    val bandSelects = (0 until bands).map { b =>
-      val cols = (b * rpb until (b + 1) * rpb).map(j => s"CAST(s$j AS VARCHAR)").mkString(" || ',' || ")
-      s"SELECT doc_id, $b AS band_idx, CAST(('0x' || substring(md5($cols), 1, 15)) AS BIGINT) AS band_hash FROM sig"
-    }.mkString(" UNION ALL ")
-    s"""WITH RECURSIVE
-      kd AS MATERIALIZED (SELECT doc_id, source, text,
-          md5(array_to_string(list_sort(list_distinct($toksSql)), ' ')) AS content_hash
-        FROM documents),
-      g AS (SELECT content_hash, MIN(doc_id) AS keep_id FROM kd GROUP BY content_hash),
-      wk AS MATERIALIZED (SELECT kd.doc_id, kd.source, kd.text, g.keep_id
-             FROM kd JOIN g USING (content_hash)),
-      surv AS (SELECT doc_id, text FROM wk WHERE doc_id = keep_id),
-      d AS (SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS toks FROM surv),
-      gsh AS MATERIALIZED (SELECT doc_id,
-        CASE WHEN len(toks) >= 2
-             THEN list_distinct([toks[i] || ' ' || toks[i+1] for i in generate_series(1, len(toks) - 1)])
-             ELSE [array_to_string(toks, ' ')] END AS sh
-        FROM d),
-      ex AS (SELECT doc_id, UNNEST(sh) AS t FROM gsh),
-      th AS (SELECT doc_id,
-        CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT) AS h1,
-        CAST(('0x' || substring(md5(t), 17, 14)) AS BIGINT) AS h2 FROM ex),
-      sig AS MATERIALIZED (SELECT doc_id, $sigMins FROM th GROUP BY doc_id),
-      bd AS ($bandSelects),
-      cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-               FROM bd a JOIN bd b ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-                   AND a.doc_id < b.doc_id),
-      est AS (SELECT id_a, id_b FROM cand
-              JOIN sig sa ON sa.doc_id = cand.id_a
-              JOIN sig sb ON sb.doc_id = cand.id_b
-              WHERE CAST($estSum AS DOUBLE) / $k >= 0.35),
-      tj AS MATERIALIZED (SELECT c.id_a, c.id_b
-             FROM est c JOIN gsh ga ON ga.doc_id = c.id_a JOIN gsh gb ON gb.doc_id = c.id_b
-             WHERE CAST(len(list_intersect(ga.sh, gb.sh)) AS DOUBLE) /
-                   CAST(len(ga.sh) + len(gb.sh) - len(list_intersect(ga.sh, gb.sh)) AS DOUBLE) >= 0.5),
-      e AS (SELECT id_a AS src, id_b AS dst FROM tj UNION SELECT id_b, id_a FROM tj),
-      r AS (SELECT doc_id AS id, doc_id AS reach FROM surv
-            UNION
-            SELECT e.src AS id, r.reach FROM e JOIN r ON e.dst = r.id),
-      comp AS MATERIALIZED (SELECT id, MIN(reach) AS comp FROM r GROUP BY id)
+  /** The end-to-end dedup-corpus verdicts, shared by the registered query
+    * and ScaleProbe's `dedup_corpus` family (the probe measures exactly
+    * the shipped plan): the near-dup chain ([[Dedup.nearDupClusters]],
+    * carrying `source` through its checkpoint), then a per-document
+    * verdict: `dup_exact` (lost its content group), `dup_near` (survivor
+    * absorbed into a near-dup cluster), or `kept`, each with its ultimate
+    * canonical representative. */
+  def dedupCorpusVerdicts(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val (withKeep, comps) = Dedup.nearDupClusters(docs, col("source"))
+    withKeep.join(comps, withKeep("keep_id") === comps("id"))
+      .select(col("doc_id"), col("source"),
+        when(col("doc_id") =!= col("keep_id"), lit("dup_exact"))
+          .when(col("comp") =!= col("doc_id"), lit("dup_near"))
+          .otherwise(lit("kept")).as("status"),
+        col("comp").as("canonical_id"))
+      .orderBy("doc_id")
+  }
+
+  val pipelineDedupCorpus = QueryDef("pipeline_dedup_corpus",
+    (s, dir) => dedupCorpusVerdicts(table(s, dir, "documents")),
+    Some(s"""WITH RECURSIVE
+      ${MinhashSql.nearDupClusterCtes}
       SELECT wk.doc_id, wk.source,
         CASE WHEN wk.doc_id <> wk.keep_id THEN 'dup_exact'
              WHEN c.comp <> wk.doc_id THEN 'dup_near'
              ELSE 'kept' END AS status,
         c.comp AS canonical_id
       FROM wk JOIN comp c ON wk.keep_id = c.id
-      ORDER BY wk.doc_id"""
-  }
-
-  /** The END-TO-END dedup-corpus chain, shared by the registered query
-    * and ScaleProbe's `dedup_corpus` family (the probe measures exactly
-    * the shipped plan): (1) exact bag-of-words dedup (one hash agg),
-    * (2) md5-minhash + LSH near-dup candidate pairs over the
-    * exact-survivors only (narrow-map signatures, one band-join shuffle,
-    * true-Jaccard verification on candidates — never O(n²)), (3)
-    * connected components over the verified edges (bounded label
-    * rounds), (4) a per-document verdict: `dup_exact` (lost its content
-    * group), `dup_near` (survivor absorbed into a near-dup cluster), or
-    * `kept`, each with its ultimate canonical representative. The three
-    * stages reuse [[graft.operators.Dedup]]/[[graft.operators.Components]]
-    * exactly as the standalone queries do — this row set is the proof
-    * the operators COMPOSE.
-    *
-    * Checkpoint discipline (the r12 cluster-tax finding): the chain
-    * materializes ONE corpus-sized barrier, and raw text is dropped AT
-    * that barrier — survivors' sorted shingles are computed on the way
-    * in (null for exact-dups), so the verdict join and all three
-    * shingle consumers re-read narrow (doc_id, source, keep_id, sh)
-    * blocks and the text column never crosses a process boundary after
-    * the barrier. The previous shape checkpointed text-for-all-docs AND
-    * shingles-for-survivors as two separate barriers; on a 4-executor
-    * topology every downstream read of those blocks paid cross-process
-    * serialization of the widest columns, measured at 1.96× single-JVM
-    * task-CPU at the 100× tier. */
-  def dedupCorpusVerdicts(docsIn: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      import graft.functions.TextFunctions._
-      import graft.operators.Dedup
-      val docs = graft.ops.Parallelism.ensure(docsIn)
-        .select(col("doc_id"), col("source"), col("text"))
-      // NOT checkpointed: the content key is a narrow codegen'd map riding
-      // the scan — recomputing it on both the agg and join branches is
-      // cheaper at any scale than materializing the full corpus + text.
-      val keyed = docs
-        .withColumn("content_hash", md5(Dedup.bagOfWordsKey(col("text"))))
-      val groups = keyed.groupBy("content_hash").agg(min(col("doc_id")).as("keep_id"))
-      // r16: the barrier carries the survivors' SIGNATURE and 60-bit-hashed
-      // shingle set (one md5 pass, nulls for exact-dups) instead of raw
-      // shingle strings — the signature checkpoint disappears (the sig is
-      // a materialized column now, not a 32-permutation tree doubled into
-      // the band self-join) and every downstream read of `sh` moves 8-byte
-      // longs. Hashed-distinct cardinalities equal string cardinalities,
-      // so every tj — and every verdict — is unchanged.
-      val withKeep = Dedup.withMinhashSigAndHashesMd5(
-          keyed.join(groups, "content_hash")
-            .withColumn("shw", when(col("doc_id") === col("keep_id"),
-              array_sort(wordShingles(col("text"), 2)))),
-          col("shw"), 32, sigName = "sig", hashedName = "sh")
-        .select(col("doc_id"), col("source"), col("keep_id"),
-          col("sig"), col("sh"))
-        .localCheckpoint()
-      val survivors = withKeep.filter(col("doc_id") === col("keep_id"))
-      val sh = survivors.select(col("doc_id"), col("sh"))
-      val sigs = survivors.select(col("doc_id"), col("sig"))
-      // Estimate pre-screen BEFORE the exact-verify join: the signature
-      // estimate lives on the pair rows already (zero extra shuffle), and
-      // the verify join ships two full shingle arrays per surviving pair
-      // — measured 15× superlinear wall at the 10× probe without this
-      // screen (the candidate set is linear, but band collisions on
-      // template-similar corpora make it a LARGE linear: ~62 pairs/doc
-      // here, ~10 GB of array shuffle at 10×). est ≥ 0.35 vs true ≥ 0.5
-      // is replayed identically by the oracle, so parity is exact.
-      val pairs = Dedup.lshCandidatePairs(sigs, "doc_id", "sig",
-          bands = 8, rowsPerBand = 4, replayable = true)
-        .withColumn("est", Dedup.estJaccard(col("sig_a"), col("sig_b"), 32))
-        .filter(col("est") >= 0.35)
-      val shA = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-      val shB = sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-      val edges = pairs.join(shA, "id_a").join(shB, "id_b")
-        .withColumn("inter", Dedup.sortedIntersectCount(col("sh_a"), col("sh_b")))
-        .withColumn("tj", col("inter").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
-        .filter(col("tj") >= 0.5)
-        .select(col("id_a").as("src"), col("id_b").as("dst"))
-      val comps = graft.operators.Components.connectedComponents(
-        sh.select(col("doc_id").as("id")), edges)
-      withKeep.join(comps, withKeep("keep_id") === comps("id"))
-        .select(col("doc_id"), col("source"),
-          when(col("doc_id") =!= col("keep_id"), lit("dup_exact"))
-            .when(col("comp") =!= col("doc_id"), lit("dup_near"))
-            .otherwise(lit("kept")).as("status"),
-          col("comp").as("canonical_id"))
-        .orderBy("doc_id")
-  }
-
-  val pipelineDedupCorpus = QueryDef("pipeline_dedup_corpus",
-    (s, dir) => dedupCorpusVerdicts(table(s, dir, "documents")),
-    Some(dedupCorpusOracleSql))
+      ORDER BY wk.doc_id"""))
 
   private def bgCurationOracleSql: String = {
     val idS = "CAST(image_id AS VARCHAR)"

@@ -208,53 +208,29 @@ object TextQueries {
       SELECT id_a, id_b, n_a, n_b, inter, inter * 1000000 // n_a AS containment_ppm
       FROM v WHERE inter * 1000000 // n_a >= 800000 ORDER BY id_a, id_b"""))
 
-  /** DuckDB replay of the md5-keyed MinHash+LSH pipeline: shingle →
-    * double-hashed 32-slot signature → 8×4 banding → candidate pairs →
-    * true-Jaccard verification. Generated (k=32 MIN aggregates, 8 band
-    * selects, 32-term match sum) so the SQL stays in lock-step with the
-    * Spark constants. */
-  /** Parameterized md5-minhash/LSH candidate-pair replay ending in
-    * `tj(id_a, id_b, est_jaccard, true_jaccard)` — shared by
-    * `dedup_minhash_lsh` (8×4 bands) and `mine_contrastive_pairs`
-    * (16×2 bands), each supplying its own final SELECT. */
-  private def minhashPairSql(k: Int, bands: Int, rpb: Int, select: String): String = {
-    require(bands * rpb == k, s"bands ($bands) x rows/band ($rpb) must equal k ($k)")
-    val sigMins = (0 until k).map(j => s"MIN(h1 + $j * h2) AS s$j").mkString(", ")
-    val bandSelects = (0 until bands).map { b =>
-      val cols = (b * rpb until (b + 1) * rpb).map(j => s"CAST(s$j AS VARCHAR)").mkString(" || ',' || ")
-      // same 60-bit md5 bucket key as Dedup.lshBands(replayable = true):
-      // equal slices collide identically, and the join key stays a long
-      s"SELECT doc_id, $b AS band_idx, CAST(('0x' || substring(md5($cols), 1, 15)) AS BIGINT) AS band_hash FROM sig"
-    }.mkString(" UNION ALL ")
-    val estSum = (0 until k).map(j => s"CASE WHEN sa.s$j = sb.s$j THEN 1 ELSE 0 END").mkString(" + ")
-    s"""WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS toks
-        FROM documents WHERE doc_id < 500),
-      g AS (SELECT doc_id,
-        CASE WHEN len(toks) >= 2
-             THEN list_distinct([toks[i] || ' ' || toks[i+1] for i in generate_series(1, len(toks) - 1)])
-             ELSE [array_to_string(toks, ' ')] END AS sh
-        FROM d),
-      ex AS (SELECT doc_id, UNNEST(sh) AS t FROM g),
-      th AS (SELECT doc_id,
-        CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT) AS h1,
-        CAST(('0x' || substring(md5(t), 17, 14)) AS BIGINT) AS h2 FROM ex),
-      sig AS (SELECT doc_id, $sigMins FROM th GROUP BY doc_id),
-      bd AS ($bandSelects),
-      cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-               FROM bd a JOIN bd b ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-                   AND a.doc_id < b.doc_id),
-      est AS (SELECT id_a, id_b, CAST($estSum AS DOUBLE) / $k AS est_jaccard
+  /** Parameterized md5-minhash/LSH candidate-pair replay over the
+    * `doc_id < 500` slice, ending in `tj(id_a, id_b, est_jaccard,
+    * true_jaccard)` — shared by `dedup_minhash_lsh` (8×4 bands) and
+    * `mine_contrastive_pairs` (16×2 bands), each supplying its own final
+    * SELECT. */
+  private def minhashPairSql(bands: Int, rpb: Int, select: String): String = {
+    import MinhashSql._
+    s"""WITH d AS (SELECT doc_id, $toksSql AS toks FROM documents WHERE doc_id < 500),
+      g AS (SELECT doc_id, $shingles FROM d),
+      ${hashCtes("g")},
+      sig AS MATERIALIZED ($signature),
+      bd AS (${bandSelects(bands, rpb)}),
+      cand AS (${candidatePairs("bd")}),
+      est AS (SELECT id_a, id_b, ${estJaccard("sa", "sb")} AS est_jaccard
               FROM cand JOIN sig sa ON sa.doc_id = cand.id_a
                         JOIN sig sb ON sb.doc_id = cand.id_b),
-      tj AS (SELECT e.id_a, e.id_b, e.est_jaccard,
-               CAST(len(list_intersect(ga.sh, gb.sh)) AS DOUBLE) /
-               CAST(len(ga.sh) + len(gb.sh) - len(list_intersect(ga.sh, gb.sh)) AS DOUBLE) AS true_jaccard
+      tj AS (SELECT e.id_a, e.id_b, e.est_jaccard, ${trueJaccard("ga", "gb")} AS true_jaccard
              FROM est e JOIN g ga ON ga.doc_id = e.id_a JOIN g gb ON gb.doc_id = e.id_b)
       $select"""
   }
 
   private def minhashOracleSql: String =
-    minhashPairSql(32, 8, 4,
+    minhashPairSql(8, 4,
       """SELECT id_a, id_b, est_jaccard, true_jaccard FROM tj
       WHERE true_jaccard >= 0.3 ORDER BY id_a, id_b""")
 
@@ -430,7 +406,7 @@ object TextQueries {
         .localCheckpoint()
         .orderBy("id_a", "id_b")
     },
-    Some(minhashPairSql(32, 16, 2,
+    Some(minhashPairSql(16, 2,
       """SELECT id_a, id_b, true_jaccard,
         CASE WHEN true_jaccard >= 0.5 THEN 'positive' ELSE 'hard_negative' END AS label
       FROM tj WHERE true_jaccard >= 0.5 OR true_jaccard < 0.2
@@ -573,31 +549,17 @@ object TextQueries {
     * batch-bands × corpus-bands with the same est pre-screen and
     * true-Jaccard verification. Generated for lock-step constants. */
   private def incrementalOracleSql: String = {
-    val k = 32; val bands = 8; val rpb = 4
-    val sigMins = (0 until k).map(j => s"MIN(h1 + $j * h2) AS s$j").mkString(", ")
-    val bandSelects = (0 until bands).map { b =>
-      val cols = (b * rpb until (b + 1) * rpb).map(j => s"CAST(s$j AS VARCHAR)").mkString(" || ',' || ")
-      s"SELECT doc_id, $b AS band_idx, CAST(('0x' || substring(md5($cols), 1, 15)) AS BIGINT) AS band_hash FROM sig"
-    }.mkString(" UNION ALL ")
-    val estSum = (0 until k).map(j => s"CASE WHEN sa.s$j = sb.s$j THEN 1 ELSE 0 END").mkString(" + ")
-    s"""WITH d AS (SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS toks
-        FROM documents),
+    import MinhashSql._
+    s"""WITH d AS (SELECT doc_id, $toksSql AS toks FROM documents),
       keys AS (SELECT doc_id,
         md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS ch FROM d),
       exk AS (SELECT ch, MIN(doc_id) AS ex_id FROM keys WHERE doc_id % 5 <> 0 GROUP BY ch),
       em AS (SELECT k.doc_id, exk.ex_id FROM keys k LEFT JOIN exk USING (ch)
              WHERE k.doc_id % 5 = 0),
-      gsh AS (SELECT doc_id,
-        CASE WHEN len(toks) >= 2
-             THEN list_distinct([toks[i] || ' ' || toks[i+1] for i in generate_series(1, len(toks) - 1)])
-             ELSE [array_to_string(toks, ' ')] END AS sh
-        FROM d),
-      ex AS (SELECT doc_id, UNNEST(sh) AS t FROM gsh),
-      th AS (SELECT doc_id,
-        CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT) AS h1,
-        CAST(('0x' || substring(md5(t), 17, 14)) AS BIGINT) AS h2 FROM ex),
-      sig AS (SELECT doc_id, $sigMins FROM th GROUP BY doc_id),
-      bd AS ($bandSelects),
+      gsh AS (SELECT doc_id, $shingles FROM d),
+      ${hashCtes("gsh")},
+      sig AS ($signature),
+      bd AS (${bandSelects(8, 4)}),
       cand AS (SELECT DISTINCT b.doc_id AS b_id, e.doc_id AS e_id
                FROM bd b JOIN bd e ON b.band_idx = e.band_idx AND b.band_hash = e.band_hash
                WHERE b.doc_id IN (SELECT doc_id FROM em WHERE ex_id IS NULL)
@@ -605,11 +567,10 @@ object TextQueries {
       est AS (SELECT b_id, e_id FROM cand
               JOIN sig sa ON sa.doc_id = cand.b_id
               JOIN sig sb ON sb.doc_id = cand.e_id
-              WHERE CAST($estSum AS DOUBLE) / $k >= 0.35),
+              WHERE ${estJaccard("sa", "sb")} >= 0.35),
       near AS (SELECT c.b_id AS doc_id, MIN(c.e_id) AS near_id
                FROM est c JOIN gsh ga ON ga.doc_id = c.b_id JOIN gsh gb ON gb.doc_id = c.e_id
-               WHERE CAST(len(list_intersect(ga.sh, gb.sh)) AS DOUBLE) /
-                     CAST(len(ga.sh) + len(gb.sh) - len(list_intersect(ga.sh, gb.sh)) AS DOUBLE) >= 0.5
+               WHERE ${trueJaccard("ga", "gb")} >= 0.5
                GROUP BY c.b_id)
       SELECT em.doc_id,
         CASE WHEN em.ex_id IS NOT NULL THEN 'exact_dup'
@@ -1210,6 +1171,13 @@ object TextQueries {
                   >= n_chars THEN 1 ELSE 0 END AS mixed
       FROM m ORDER BY doc_id"""))
 
+  /** Max docs per verify-join slice when auto-chunking (chunks = 0): the
+    * candidate-pair volume of the certified-linear LSH path is ∝ docs, so
+    * slicing pairs by id_a owner bounds the one stage that ships shingle
+    * arrays. Registered sfs (≤ ~50k docs) stay one slice; the 50× probe
+    * corpus (250k salted docs) slices 3× per JVM. */
+  private val lshVerifyChunkDocs = 100000L
+
   /** LSH banding-parameter calibration — the report a dedup owner reads
     * BEFORE committing a banding to a 100 TB run: for each (bands,
     * rows-per-band) split of the k = 32 signature, the candidate-pair
@@ -1223,16 +1191,6 @@ object TextQueries {
     * the swept report quantifies that trade on the operator's own corpus.
     * Integer-ppm metrics; every stage (signatures, bands, candidates,
     * exact Jaccard, pool) replays in SQL. */
-  /** Max docs per verify-join slice when auto-chunking (chunks = 0): the
-    * candidate-pair volume of the certified-linear LSH path is ∝ docs, so
-    * slicing pairs by id_a owner bounds the one stage that ships shingle
-    * arrays. Registered sfs (≤ ~50k docs) stay one slice; the 50× probe
-    * corpus (250k salted docs) slices 3× per JVM. Override for probe
-    * experiments. */
-  private def lshVerifyChunkDocs: Long =
-    graft.ops.MeasurementKnobs.get("SPARK_GRAFT_LSH_CHUNK_DOCS")
-      .map(_.toLong).getOrElse(100000L)
-
   /** Shared calibration stages — the REGISTERED query and ScaleProbe both
     * call this on a (doc_id, text) frame.
     *
@@ -1347,36 +1305,20 @@ object TextQueries {
         chunks = 1)
       .orderBy("bands"),
     Some {
-      val k = 32
-      val sigMins = (0 until k).map(j => s"MIN(h1 + $j * h2) AS s$j").mkString(", ")
-      def bandSelects(bands: Int, rpb: Int) = (0 until bands).map { b =>
-        val cols = (b * rpb until (b + 1) * rpb).map(j => s"CAST(s$j AS VARCHAR)").mkString(" || ',' || ")
-        s"SELECT doc_id, $b AS band_idx, CAST(('0x' || substring(md5($cols), 1, 15)) AS BIGINT) AS band_hash FROM sig"
-      }.mkString(" UNION ALL ")
+      import MinhashSql._
       def cfgCtes(tag: String, bands: Int, rpb: Int) =
         s"""bd$tag AS (${bandSelects(bands, rpb)}),
-      cand$tag AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-               FROM bd$tag a JOIN bd$tag b ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-                   AND a.doc_id < b.doc_id),
-      tj$tag AS (SELECT c.id_a, c.id_b,
-               CAST(len(list_intersect(ga.sh, gb.sh)) AS DOUBLE) /
-               CAST(len(ga.sh) + len(gb.sh) - len(list_intersect(ga.sh, gb.sh)) AS DOUBLE) AS tj
+      cand$tag AS (${candidatePairs(s"bd$tag")}),
+      tj$tag AS (SELECT c.id_a, c.id_b, ${trueJaccard("ga", "gb")} AS tj
              FROM cand$tag c JOIN gh ga ON ga.doc_id = c.id_a JOIN gh gb ON gb.doc_id = c.id_b)"""
       s"""WITH d AS (SELECT doc_id, $toksSql AS toks FROM documents),
-      g AS (SELECT doc_id,
-        CASE WHEN len(toks) >= 2
-             THEN list_distinct([toks[i] || ' ' || toks[i+1] for i in generate_series(1, len(toks) - 1)])
-             ELSE [array_to_string(toks, ' ')] END AS sh
-        FROM d),
-      ex AS (SELECT doc_id, UNNEST(sh) AS t FROM g),
-      th AS (SELECT doc_id,
-        CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT) AS h1,
-        CAST(('0x' || substring(md5(t), 17, 14)) AS BIGINT) AS h2 FROM ex),
+      g AS (SELECT doc_id, $shingles FROM d),
+      ${hashCtes("g")},
+      sig AS MATERIALIZED ($signature),
       gh AS (SELECT doc_id,
         list_sort(list_distinct([CAST(('0x' || substring(md5(t), 1, 15)) AS BIGINT)
                                  for t in sh])) AS sh
         FROM g),
-      sig AS (SELECT doc_id, $sigMins FROM th GROUP BY doc_id),
       ${cfgCtes("A", 16, 2)},
       ${cfgCtes("B", 8, 4)},
       ${cfgCtes("C", 4, 8)},

@@ -132,4 +132,17 @@ class ComponentsSpec extends AnyFunSuite {
     assert(top._1 == 0L && got.contains(0L))
     assert(a(0L) > a.filter(_._1 != 0L).values.max, "hub must strictly dominate authority")
   }
+
+  test("link graph on non-dense ids: pagerank and hits score exactly the input ids") {
+    // ids 0, 3, 6, ...: most affine out-link targets (id·31+7) mod n are
+    // not documents and must not surface as nodes
+    val ids = spark.range(97L).select((col("id") * 3).as("doc_id"))
+    val want = (0L until 97L).map(_ * 3).toSet
+    val pr = graft.queries.MiscQueries.pagerankRanked(ids).select("id").as[Long].collect()
+    val hits = graft.queries.MiscQueries.hitsScored(ids).select("id").as[Long].collect()
+    assert(pr.length == want.size && pr.toSet == want,
+      s"pagerank ids outside the input: ${(pr.toSet -- want).toSeq.sorted.take(10)}")
+    assert(hits.length == want.size && hits.toSet == want,
+      s"hits ids outside the input: ${(hits.toSet -- want).toSeq.sorted.take(10)}")
+  }
 }

@@ -191,6 +191,27 @@ class PipelinesSpec extends AnyFunSuite {
     assert(kept == Set(1L, 4L, 5L))
   }
 
+  test("pipeline_dedup_corpus verdicts on a planted corpus: dup_exact, dup_near, kept") {
+    val long = (0 until 40).map(i => s"w$i")
+    val edited = long.updated(20, "zzz") // one word changed: bigram Jaccard 37/41
+    val docs = Seq(
+      (2L, long), (3L, (0 until 12).map(i => s"a$i")), (4L, edited),
+      (5L, (0 until 12).map(i => s"b$i")), (6L, (0 until 3).map(i => s"c$i")),
+      (7L, long), (8L, (0 until 12).map(i => s"a$i")))
+      .map { case (id, words) => (id, s"src${id % 2}", words.mkString(" ")) }
+      .toDF("doc_id", "source", "text")
+    val got = graft.queries.PipelineQueries.dedupCorpusVerdicts(docs)
+      .as[(Long, String, String, Long)].collect().toSeq
+    assert(got == Seq(
+      (2L, "src0", "kept", 2L),
+      (3L, "src1", "kept", 3L),
+      (4L, "src0", "dup_near", 2L),  // the one-word edit joins 2's cluster
+      (5L, "src1", "kept", 5L),
+      (6L, "src0", "kept", 6L),
+      (7L, "src1", "dup_exact", 2L), // exact copies point at the min id
+      (8L, "src0", "dup_exact", 3L)))
+  }
+
   test("E3 frame mining: produces selected frames within band, deterministic") {
     val manifest = (0 until 6).map(i => (i.toLong, 6000L)).toDF("video_id", "total_frames")
     val pipe = new FrameMining(

@@ -25,7 +25,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - one way to memoize per session and one way to fuse a checkpoint:
   *    `ConcurrentHashMap` lives only in `SessionMemo` (plus the
   *    executor-side model singleton, which is not session-keyed), and
-  *    `CheckpointBridge.checkpointRdd` is called once, by `CheckpointOps`.
+  *    `CheckpointBridge.checkpointRdd` is called once, by `CheckpointOps`;
+  *  - the DuckDB MinHash signature (`MIN(h1 + j * h2)`) is generated once,
+  *    in `MinhashSql`, so a change to k or the hashing has one place to go.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
@@ -146,6 +148,13 @@ class SourceAuditSpec extends AnyFunSuite {
       "the fused checkpoint has one implementation, " +
         "CheckpointOps.localCheckpointAggregate; checkpointRdd called at: " +
         calls.map(_._2).mkString(", "))
+  }
+
+  test("the DuckDB MinHash signature SQL is generated in one place") {
+    val sites = mainCodeHits("""MIN\(h1 \+ """.r)
+    assert(sites.size == 1,
+      "every MinHash oracle uses MinhashSql.signature; signature SQL at: " +
+        sites.map(_._2).mkString(", "))
   }
 
   test("every driver-side action carries a '// bounded:' justification") {
