@@ -3,7 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.graft.ColumnBridge
+
 import graft.functions.TextFunctions
+import graft.ops.Parallelism
 
 /** Corpus-scale deduplication operators: exact (hash-groupBy), MinHash+LSH
   * (shingle → signature → banded bucket join), SimHash (64-bit weighted
@@ -50,9 +53,8 @@ object Dedup {
     * fallback is bit-compatible (same XxHash64 chain). */
   def minhashSignature(shingles: Column, k: Int): Column = {
     val native =
-      try Some(org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.plans.MinHashSignature(
-          org.apache.spark.sql.graft.ColumnBridge.expression(shingles), k)))
+      try Some(ColumnBridge.column(
+        graft.plans.MinHashSignature(ColumnBridge.expression(shingles), k)))
       catch { case _: Throwable => None }
     native.getOrElse(minhashSignatureHof(shingles, k))
   }
@@ -62,10 +64,12 @@ object Dedup {
     array((0 until k).map(j =>
       array_min(transform(shingles, t => xxhash64(lit(j), t)))): _*)
 
-  /** Estimated Jaccard from two equal-length signatures: matching fraction. */
+  /** Estimated Jaccard from two equal-length signatures: matching fraction.
+    * The match count is one codegen'd loop ([[graft.plans.SignatureMatchCount]]);
+    * NULL when either signature is NULL. */
   def estJaccard(sigA: Column, sigB: Column, k: Int): Column =
-    aggregate(zip_with(sigA, sigB, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v).cast("double") / k
+    ColumnBridge.column(graft.plans.SignatureMatchCount(
+      ColumnBridge.expression(sigA), ColumnBridge.expression(sigB))).cast("double") / k
 
   /** LSH banding: (id, band_idx, band_hash) rows — join key for candidate
     * generation. `bands * rowsPerBand` must equal the signature length.
@@ -138,57 +142,41 @@ object Dedup {
   def md5Hash56(c: Column): Column =
     conv(substring(md5(c), 17, 14), 16, 10).cast("long")
 
-  /** Oracle-replayable MinHash signature as a pure narrow map: ONE md5
-    * per shingle, split into two independent halves (`_hs` struct array),
-    * then k cheap arithmetic array_min passes. The k "permutations" are
-    * Kirsch–Mitzenmacher double hashing `g_j = h1 + j*h2` — the published
-    * standard for deriving k hash functions from two (Kirsch &
-    * Mitzenmacher, ESA'06), and strictly cheaper at 100 TB than k full
-    * hashes per shingle (the xxhash64 kernel path pays k=32
-    * hashes/shingle; this pays 1 md5 + k adds). The sketch rides the
-    * document scan: no explode, no k-column aggregate, no shuffle — only
-    * the band join shuffles. `_hs` is materialized as its own projection
-    * so CollapseProject cannot inline the md5 into every one of the k
-    * minima. Replayable: any engine recomputes `g_j` from
-    * `CAST(('0x' || substring(md5(t),...)) AS BIGINT)`.
+  /** Oracle-replayable MinHash signature as a pure narrow map: one native
+    * kernel ([[graft.plans.MinHashMd5]]) takes ONE md5 digest per shingle,
+    * reads `h1` ([[md5Hash60]]) and `h2` ([[md5Hash56]]) straight off the
+    * digest bytes, and folds the k Kirsch–Mitzenmacher minima
+    * `g_j = h1 + j*h2` in the same loop — the published standard for
+    * deriving k hash functions from two (Kirsch & Mitzenmacher, ESA'06),
+    * and strictly cheaper at 100 TB than k full hashes per shingle (the
+    * xxhash64 kernel path pays k=32 hashes/shingle; this pays 1 md5 + k
+    * adds). The sketch rides the document scan: no explode, no k-column
+    * aggregate, no shuffle — only the band join shuffles. Replayable: any
+    * engine recomputes `g_j` from `CAST(('0x' || substring(md5(t),...)) AS
+    * BIGINT)` (`MinhashSql`). Requires k ≤ 64 (overflow-free slots).
     *
-    * Empty/null shingle arrays get a NULL signature — matching the
-    * explode+GROUP BY formulation (and a replaying engine's UNNEST),
-    * which drops zero-shingle docs. Without the guard, array_min over an
-    * empty transform yields k NULLs, every such doc band-hashes the same
-    * empty slice, and they all collide into one spurious LSH bucket. A
-    * NULL sig falls out of [[lshCandidatePairs]] naturally: its md5 band
-    * hash is NULL and equi-joins drop NULL keys. */
+    * `hashedName` also emits the sorted-distinct `h1` shingle hashes from
+    * the SAME pass — for callers that build both the signature and a
+    * hashed shingle-set column (the exact-Jaccard verify side). The kernel
+    * then returns a struct that one projection below the split computes
+    * once.
+    *
+    * Empty shingle arrays get a NULL signature — matching the
+    * explode+GROUP BY formulation (and a replaying engine's UNNEST), which
+    * drops zero-shingle docs; otherwise every such doc would band-hash the
+    * same empty slice into one spurious LSH bucket. A NULL sig falls out of
+    * [[lshBands]]. Null shingles are skipped. */
   def withMinhashSignatureMd5(df: DataFrame, shingles: Column, k: Int,
-                              sigName: String = "sig"): DataFrame = {
-    val hs = transform(shingles, t =>
-      struct(md5Hash60(t).as("h1"), md5Hash56(t).as("h2")))
-    df.withColumn("_hs", hs)
-      .withColumn(sigName, when(size(col("_hs")) > 0, array((0 until k).map(j =>
-        array_min(transform(col("_hs"),
-          h => h.getField("h1") + lit(j.toLong) * h.getField("h2")))): _*)))
-      .drop("_hs")
-  }
-
-  /** [[withMinhashSignatureMd5]] that ALSO emits the sorted-distinct
-    * [[md5Hash60]] shingle hashes (`hashedName`) from the SAME per-shingle
-    * md5 pass — for callers that build both the signature and a hashed
-    * shingle-set column (the exact-Jaccard verify side): one md5 per
-    * shingle instead of two. Bit-identical to computing
-    * `array_sort(array_distinct(transform(shingles, md5Hash60)))`
-    * separately — `_hs` preserves shingle order and h1 IS md5Hash60. */
-  def withMinhashSigAndHashesMd5(df: DataFrame, shingles: Column, k: Int,
-                                 sigName: String = "sig",
-                                 hashedName: String = "shh"): DataFrame = {
-    val hs = transform(shingles, t =>
-      struct(md5Hash60(t).as("h1"), md5Hash56(t).as("h2")))
-    df.withColumn("_hs", hs)
-      .withColumn(sigName, when(size(col("_hs")) > 0, array((0 until k).map(j =>
-        array_min(transform(col("_hs"),
-          h => h.getField("h1") + lit(j.toLong) * h.getField("h2")))): _*)))
-      .withColumn(hashedName, array_sort(array_distinct(
-        transform(col("_hs"), h => h.getField("h1")))))
-      .drop("_hs")
+                              sigName: String = "sig",
+                              hashedName: Option[String] = None): DataFrame = {
+    val kernel = ColumnBridge.column(graft.plans.MinHashMd5(
+      ColumnBridge.expression(shingles), k, withHashes = hashedName.isDefined))
+    hashedName.fold(df.withColumn(sigName, kernel)) { h =>
+      df.withColumn("_mh", kernel)
+        .withColumn(sigName, col("_mh.sig"))
+        .withColumn(h, col("_mh.sh"))
+        .drop("_mh")
+    }
   }
 
   /** The bare-id candidate-pair half of [[lshCandidatePairs]] — distinct
@@ -200,12 +188,19 @@ object Dedup {
                           replayable: Boolean = false): DataFrame = {
     val bd = lshBands(df, idCol, sigCol, bands, rowsPerBand, replayable)
       .select(col(idCol), col("band_idx"), col("band_hash"))
-    bd.select(col("band_idx"), col("band_hash"), col(idCol).as("id_a"))
+    val collisions = bd.select(col("band_idx"), col("band_hash"), col(idCol).as("id_a"))
       .join(bd.select(col("band_idx"), col("band_hash"), col(idCol).as("id_b")),
         Seq("band_idx", "band_hash"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
-      .distinct()
+    // Explicit-count hash exchange, which the distinct reuses (no second
+    // exchange): the pair shuffle is a few hundred kB, so AQE would
+    // coalesce a plain distinct to ONE partition, and every downstream
+    // per-pair stage — the estimate screen, the verify joins, the
+    // components edge checkpoint — would then run on one task. AQE cannot
+    // see that per-row compute in the map-output bytes (the
+    // Parallelism.byRange trap); an explicit count it does not coalesce.
+    Parallelism.byHash(collisions, col("id_a"), col("id_b")).distinct()
   }
 
   /** The near-dup clustering chain over a `(doc_id, text)` frame, shared
@@ -241,15 +236,15 @@ object Dedup {
     // NOT checkpointed: the content key is a narrow map riding the scan —
     // recomputing it on the agg and join branches is cheaper at any scale
     // than materializing the full corpus with its text.
-    val keyed = graft.ops.Parallelism.ensure(docs)
+    val keyed = Parallelism.ensure(docs)
       .select((col("doc_id") +: col("text") +: carry): _*)
       .withColumn("content_hash", md5(bagOfWordsKey(col("text"))))
     val groups = keyed.groupBy("content_hash").agg(min(col("doc_id")).as("keep_id"))
-    val withKeep = withMinhashSigAndHashesMd5(
+    val withKeep = withMinhashSignatureMd5(
         keyed.join(groups, "content_hash")
           .withColumn("shw", when(col("doc_id") === col("keep_id"),
             array_sort(TextFunctions.wordShingles(col("text"), 2)))),
-        col("shw"), 32, sigName = "sig", hashedName = "sh")
+        col("shw"), 32, hashedName = Some("sh"))
       .drop("content_hash", "text", "shw")
       .localCheckpoint()
     val survivors = withKeep.filter(col("doc_id") === col("keep_id"))

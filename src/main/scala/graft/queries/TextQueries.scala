@@ -188,11 +188,7 @@ object TextQueries {
         table(s, dir, "documents").select(col("doc_id"), col("text")))
       .orderBy("id_a", "id_b"),
     Some(s"""WITH d AS (SELECT doc_id, $toksSql AS toks FROM documents),
-      g AS (SELECT doc_id,
-        CASE WHEN len(toks) >= 2
-             THEN list_distinct([toks[i] || ' ' || toks[i+1] for i in generate_series(1, len(toks) - 1)])
-             ELSE [array_to_string(toks, ' ')] END AS sh
-        FROM d),
+      g AS (SELECT doc_id, ${MinhashSql.shingles} FROM d),
       gn AS (SELECT doc_id, sh, CAST(len(sh) AS BIGINT) AS n FROM g),
       ex AS (SELECT doc_id, UNNEST(sh) AS t FROM g),
       rare AS (SELECT t FROM (SELECT t, COUNT(*) AS df FROM ex GROUP BY t) WHERE df <= 50),
@@ -504,10 +500,10 @@ object TextQueries {
       // through the join); hashed-distinct cardinalities equal the string
       // cardinalities, so every tj — and every verdict — is unchanged.
       def feat(df: org.apache.spark.sql.DataFrame) =
-        Dedup.withMinhashSigAndHashesMd5(
+        Dedup.withMinhashSignatureMd5(
             df.select(col("doc_id"),
               array_sort(wordShingles(col("text"), 2)).as("shw")),
-            col("shw"), 32, sigName = "sig", hashedName = "sh")
+            col("shw"), 32, hashedName = Some("sh"))
           .select("doc_id", "sig", "sh")
           .localCheckpoint()
       val featE = feat(existing); val featB = feat(rest)
@@ -1227,10 +1223,10 @@ object TextQueries {
     // single core (r16 — the F1 lesson applied here; measured 8.4 s plan
     // isolated before, the build distributes across the session's cores
     // after).
-    val feat = Dedup.withMinhashSigAndHashesMd5(
+    val feat = Dedup.withMinhashSignatureMd5(
         graft.ops.Parallelism.ensure(docs).select(col("doc_id"),
           array_sort(wordShingles(col("text"), 2)).as("shw")),
-        col("shw"), 32, sigName = "sig", hashedName = "sh")
+        col("shw"), 32, hashedName = Some("sh"))
       .select("doc_id", "sig", "sh")
       .localCheckpoint() // read by the band join and both verify-join sides
     val sigs = feat.select("doc_id", "sig")

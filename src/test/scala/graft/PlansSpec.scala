@@ -146,14 +146,41 @@ class PlansSpec extends AnyFunSuite {
   test("narrow-map minhash signature hashes each shingle once (no CollapseProject inlining)") {
     val docs = graft.queries.Tables.table(spark, sf, "documents")
       .select(col("doc_id"), graft.functions.TextFunctions.wordShingles(col("text"), 2).as("sh"))
-    val sig = graft.operators.Dedup.withMinhashSignatureMd5(docs, col("sh"), 32)
-      .select("doc_id", "sig")
-    val p = sig.queryExecution.executedPlan.toString
-    val nMd5 = "(?i)md5".r.findAllIn(p).size
-    // one md5 for h1, one for h2; 64 would mean the _hs projection was
-    // collapsed into the 32 minima and every shingle re-hashes 32×
-    assert(nMd5 == 2, s"expected 2 md5 calls in the plan, got $nMd5:\n$p")
-    assert(!p.contains("Exchange"), "signature must stay a narrow map (no shuffle)")
+    // one MinHashMd5 kernel per row, which digests each shingle once; with
+    // the hashed set requested, the kernel's struct feeds both output
+    // columns from one projection (inlined, it would run twice per row)
+    Seq(None, Some("shh")).foreach { hashed =>
+      val sig = graft.operators.Dedup.withMinhashSignatureMd5(docs, col("sh"), 32,
+          hashedName = hashed)
+        .select((col("doc_id") +: col("sig") +: hashed.map(col).toSeq): _*)
+      val p = plan(sig)
+      val nKernel = "graft_minhash_md5\\(".r.findAllIn(p).size
+      assert(nKernel == 1, s"expected 1 MinHash kernel in the plan, got $nKernel:\n$p")
+      assert("(?i)(?<!\\w)md5\\(".r.findFirstIn(p).isEmpty, s"md5 expression in the plan:\n$p")
+      assert(!p.contains("Exchange"), "signature must stay a narrow map (no shuffle)")
+    }
+  }
+
+  test("LSH candidate pairs keep the session's shuffle width under AQE") {
+    import spark.implicits._
+    // a pair shuffle this small is what AQE coalesces to ONE partition;
+    // the explicit-count exchange keeps the per-pair stages (estimate
+    // screen, verify joins, edge checkpoint) at full width
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(width > 1, "the check needs more than one shuffle partition")
+    val docs = spark.sparkContext.parallelize((0 until 60).map(i =>
+      (i.toLong, Seq("a b", "b c", s"c d${i % 4}", s"d${i % 3} e")))).toDF("doc_id", "sh")
+    val sigs = graft.operators.Dedup.withMinhashSignatureMd5(docs, col("sh"), 8)
+    val pairs = graft.operators.Dedup.lshCandidateIdPairs(sigs, "doc_id", "sig",
+      bands = 4, rowsPerBand = 2, replayable = true)
+    assert(pairs.queryExecution.toRdd.getNumPartitions == width,
+      s"candidate pairs coalesced:\n${pairs.queryExecution.executedPlan}")
+    assert(pairs.count() > 0)
+    // the distinct reuses the hash exchange: one exchange on (id_a, id_b)
+    val finalPlan = pairs.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    val exchanges = "Exchange hashpartitioning\\(id_a".r.findAllIn(finalPlan).size
+    assert(exchanges == 1, s"expected one pair exchange:\n$finalPlan")
   }
 
   test("semantic-dedup candidate generation is a bucket equi-join, never a nested loop") {
@@ -595,6 +622,20 @@ class PlansSpec extends AnyFunSuite {
     assert(hits == boundedByConstruction.keySet,
       "stale whitelist entries (no unpartitioned window in plan): " +
         (boundedByConstruction.keySet -- hits).mkString(", "))
+  }
+
+  test("unpartitioned-window warnings are muted, and such a window stays visible to the audit") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.spark.sql.execution.window.WindowExec
+    assert(LogManager.getLogger(GraftSession.WindowExecLogger).getLevel == Level.ERROR)
+    // the registry-wide audit above reads the physical plan, not the log:
+    // a genuinely unbounded window still plans as a WindowExec with no
+    // partition spec over the whole scan
+    val ranked = spark.read.parquet(s"$sf/documents.parquet").withColumn("rn",
+      row_number().over(org.apache.spark.sql.expressions.Window.orderBy("doc_id")))
+    val windows = ranked.queryExecution.sparkPlan.collect { case w: WindowExec => w }
+    assert(windows.exists(_.partitionSpec.isEmpty),
+      s"expected an unpartitioned Window:\n${ranked.queryExecution.sparkPlan}")
   }
 
   test("plan audit: no registered query nests two unbounded sides in a loop join") {

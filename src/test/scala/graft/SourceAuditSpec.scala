@@ -27,7 +27,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    executor-side model singleton, which is not session-keyed), and
   *    `CheckpointBridge.checkpointRdd` is called once, by `CheckpointOps`;
   *  - the DuckDB MinHash signature (`MIN(h1 + j * h2)`) is generated once,
-  *    in `MinhashSql`, so a change to k or the hashing has one place to go.
+  *    in `MinhashSql`, and the Spark one is built once, in `Dedup`, by the
+  *    native kernel, so a change to k or the hashing has one place to go
+  *    on each side.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
@@ -155,6 +157,25 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(sites.size == 1,
       "every MinHash oracle uses MinhashSql.signature; signature SQL at: " +
         sites.map(_._2).mkString(", "))
+  }
+
+  test("the md5 MinHash signature is built at one site, with no declarative minimum in operators/") {
+    val sites = mainCodeHits("""(?<!class )\bMinHashMd5\s*\(""".r)
+    assert(sites.size == 1 && sites.head._1.endsWith("/operators/Dedup.scala"),
+      "every md5 MinHash signature goes through Dedup.withMinhashSignatureMd5; " +
+        "MinHashMd5 built at: " + sites.map(_._2).mkString(", "))
+    // a k-slot `array_min(transform(... h1 + j * h2 ...))` tree: the
+    // declarative form the kernel replaced (the reference copy lives in
+    // MinHashMd5Spec)
+    val declarativeMin = """array_min\s*\(\s*transform\([^\n]*\n?[^\n]*\bh1\b[^\n]*\+[^\n]*\bh2\b""".r
+    val copies = for {
+      (f, lines) <- sourcesUnder("src/main/scala/graft/operators")
+      flags = commentFlags(lines)
+      code = lines.indices.map(i => if (flags(i)) "" else lines(i)).mkString("\n")
+      if declarativeMin.findFirstIn(code).isDefined
+    } yield f
+    assert(copies.isEmpty,
+      "declarative h1 + j*h2 MinHash minimum in: " + copies.mkString(", "))
   }
 
   test("every driver-side action carries a '// bounded:' justification") {
