@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
 
 import graft.functions.VideoFunctions
-import graft.ml.{ExecutorSingleton, Models}
+import graft.ml.{ModelStage, Models}
 import graft.sources.Sinks
 
 object BackgroundCuration {
@@ -33,6 +33,8 @@ object BackgroundCuration {
   * hand-tunes the same ordering (:149-152). The count/area gates need the
   * detector's boxes and run right after it, before the per-box model
   * stage, so face/mask/matte inference only runs on surviving boxes.
+  *
+  * @param modelKeyPrefix ignored; removed with `graft.ml.BenchSingletons` in a later benchmark change.
   */
 class BackgroundCuration(
     person: () => Models.PersonDetector,
@@ -59,31 +61,26 @@ class BackgroundCuration(
   def detect(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val pf = person
-    val kp = modelKeyPrefix // JVM-global singleton cache — see FrameMining note
+    val det = ModelStage.model(person)
     val tagged = if (df.columns.contains("tag")) df else df.withColumn("tag", lit("in"))
-    graft.ops.Parallelism.ensure(
-      tagged.select(col("image_id").cast("long"), col("image_path").cast("string"),
-        col("h").cast("long"), col("w").cast("long"), col("tag").cast("string")))
-      .as[(Long, String, Long, Long, String)]
-      .mapPartitions { it =>
-        val det = ExecutorSingleton.getOrCreate(s"$kp.person_detector")(pf())
-        // one detectBatch call per 32 images (GPU batching; default hook
-        // delegates per item so fakes are bit-identical)
-        it.grouped(32).flatMap { chunk =>
-          val boxesPerImage = det.detectBatch(chunk.map(r => (r._1, 0L)))
-          chunk.zip(boxesPerImage).map { case ((id, path, h, w, tag), bs) =>
-            (id, path, h, w, tag, bs.map(b => (b.x1, b.y1, b.x2, b.y2)))
-          }
-        }
-      }
-      .toDF("image_id", "image_path", "h", "w", "tag", "person_boxes_raw")
+    // one detectBatch call per 32 images (GPU batching; default hook
+    // delegates per item so fakes are bit-identical)
+    ModelStage(graft.ops.Parallelism.ensure(
+        tagged.select(col("image_id").cast("long"), col("image_path").cast("string"),
+          col("h").cast("long"), col("w").cast("long"), col("tag").cast("string")))
+        .as[(Long, String, Long, Long, String)], batchSize = 32,
+      Seq("image_id", "image_path", "h", "w", "tag", "person_boxes_raw"),
       // passthrough contract: detect only ATTACHES boxes — every output
       // row carries its source row's identity/dimension columns verbatim,
       // so a late-written gate over them may hoist below the barrier
       // (the GateHoist rule; mis-ordered E4 relies on this)
-      .transform(graft.plans.GateHoist.declarePassthrough(
-        _, "image_id", "image_path", "h", "w", "tag"))
+      passthrough = Seq("image_id", "image_path", "h", "w", "tag")) { chunk =>
+      ModelStage.aligned("PersonDetector.detectBatch", chunk,
+        det.get.detectBatch(chunk.map(r => (r._1, 0L)))).map {
+        case ((id, path, h, w, tag), bs) =>
+          (id, path, h, w, tag, bs.map(b => (b.x1, b.y1, b.x2, b.y2)))
+      }
+    }
       .withColumn("person_boxes", transform(col("person_boxes_raw"), t =>
         struct(t.getField("_1").as("x1"), t.getField("_2").as("y1"),
           t.getField("_3").as("x2"), t.getField("_4").as("y2"))))
@@ -125,43 +122,41 @@ class BackgroundCuration(
   def modelStage(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val ff = face; val mf = masker; val bf = matting; val rf = relighter
+    val (fd, gm, bg, rl) = (ModelStage.model(face), ModelStage.model(masker),
+      ModelStage.model(matting), ModelStage.model(relighter))
     val minScore = minFaceScore
-    val kp = modelKeyPrefix
-    df.select(col("image_id").cast("long"), col("image_path").cast("string"),
+    // tier-wise batching (one *Batch call per tier per 32-box chunk,
+    // re-batched over each gate's survivors — see FrameMining note)
+    ModelStage(df.select(col("image_id").cast("long"), col("image_path").cast("string"),
         col("h").cast("long"), col("w").cast("long"), col("tag").cast("string"),
         col("box_idx").cast("long"),
         col("box.x1").cast("int"), col("box.y1").cast("int"),
         col("box.x2").cast("int"), col("box.y2").cast("int"))
-      .as[(Long, String, Long, Long, String, Long, Int, Int, Int, Int)]
-      .mapPartitions { it =>
-        val fd = ExecutorSingleton.getOrCreate(s"$kp.face_detector")(ff())
-        val gm = ExecutorSingleton.getOrCreate(s"$kp.grounding_masker")(mf())
-        val bg = ExecutorSingleton.getOrCreate(s"$kp.matting")(bf())
-        val rl = ExecutorSingleton.getOrCreate(s"$kp.relighter")(rf())
-        // tier-wise batching (one *Batch call per tier per 32-box chunk,
-        // re-batched over each gate's survivors — see FrameMining note)
-        it.grouped(32).flatMap { chunk =>
-          val faces = fd.detectBatch(chunk.map(r => (r._1, 0L, r._6.toInt)))
-          val gated = chunk.zip(faces).collect {
-            case (r, fs) if fs.count(_.score >= minScore) == 1 => r
-          }
-          val rects = gm.maskRectBatch(gated.map(r =>
-            (r._1, Models.Box(r._7, r._8, r._9, r._10), r._3, r._4)))
-          val masked = gated.zip(rects).collect { case (r, Some(rect)) => (r, rect) }
-          val mattes = bg.removeBackgroundBatch(masked.map { case (r, _) => (r._1, r._6.toInt) })
-          val relights = rl.relightBatch(masked.map { case (r, _) => (r._1, r._6.toInt) })
-          masked.lazyZip(mattes).lazyZip(relights).map {
-            case (((id, path, h, w, tag, idx, x1, y1, x2, y2), rect), matte, rel) =>
-              (id, path, h, w, tag, idx, x1, y1, x2, y2,
-                rect.x1, rect.y1, rect.x2, rect.y2,
-                matte.isDefined, rel.isDefined)
-          }
-        }
-      }
-      .toDF("image_id", "image_path", "h", "w", "tag", "box_idx",
+        .as[(Long, String, Long, Long, String, Long, Int, Int, Int, Int)], batchSize = 32,
+      Seq("image_id", "image_path", "h", "w", "tag", "box_idx",
         "x1", "y1", "x2", "y2", "mask_x1", "mask_y1", "mask_x2", "mask_y2",
-        "matte_ok", "relight_ok")
+        "matte_ok", "relight_ok")) { chunk =>
+      val gated = ModelStage.aligned("FaceDetector.detectBatch", chunk,
+        fd.get.detectBatch(chunk.map(r => (r._1, 0L, r._6.toInt)))).collect {
+        case (r, fs) if fs.count(_.score >= minScore) == 1 => r
+      }
+      val masked = ModelStage.aligned("GroundingMasker.maskRectBatch", gated,
+        gm.get.maskRectBatch(gated.map(r =>
+          (r._1, Models.Box(r._7, r._8, r._9, r._10), r._3, r._4)))).collect {
+        case (r, Some(rect)) => (r, rect)
+      }
+      val keys = masked.map { case (r, _) => (r._1, r._6.toInt) }
+      val mattes = ModelStage.aligned("Matting.removeBackgroundBatch", masked,
+        bg.get.removeBackgroundBatch(keys))
+      val relights = ModelStage.aligned("Relighter.relightBatch", masked,
+        rl.get.relightBatch(keys))
+      mattes.zip(relights).map {
+        case ((((id, path, h, w, tag, idx, x1, y1, x2, y2), rect), matte), (_, rel)) =>
+          (id, path, h, w, tag, idx, x1, y1, x2, y2,
+            rect.x1, rect.y1, rect.x2, rect.y2,
+            matte.isDefined, rel.isDefined)
+      }
+    }
   }
 
   /** The reference's save-path composition (ref :171-176, :226-234):
@@ -247,7 +242,6 @@ class BackgroundCuration(
   def runRecords(records: DataFrame, reader: () => Models.ImageReader): DataFrame = {
     val spark = records.sparkSession
     import spark.implicits._
-    val rf = reader
 
     val images = records.select(explode(concat(
         transform(col("input_images"), p => struct(p.as("image_path"), lit("in").as("tag"))),
@@ -258,13 +252,13 @@ class BackgroundCuration(
     // read stage: dims or drop (ref :146-152) — opaque, so it runs after
     // the distinct (one read per unique image) and before every gate that
     // needs h/w.
-    val kp = modelKeyPrefix
-    val withDims = images.as[(String, String)].mapPartitions { it =>
-      val rd = ExecutorSingleton.getOrCreate(s"$kp.image_reader")(rf())
-      it.flatMap { case (path, tag) =>
-        rd.dims(path).map { case (h, w) => (path, tag, h.toLong, w.toLong) }
+    val rd = ModelStage.model(reader)
+    val withDims = ModelStage(images.as[(String, String)], batchSize = 1,
+      Seq("image_path", "tag", "h", "w")) {
+      _.flatMap { case (path, tag) =>
+        rd.get.dims(path).map { case (h, w) => (path, tag, h.toLong, w.toLong) }
       }
-    }.toDF("image_path", "tag", "h", "w")
+    }
       .withColumn("image_id", abs(xxhash64(col("image_path"))))
 
     // checkpointed for the same two-consumer reason as [[run]]

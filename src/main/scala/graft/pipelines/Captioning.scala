@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
 
-import graft.ml.{ExecutorSingleton, Models}
+import graft.ml.{ModelStage, Models}
 
 /** E2 — `caption` recomposed Spark-first (ref: pipeline/caption.py:58-88):
   * (input_images, output_image) rows → placeholder parse (stringified list
@@ -53,37 +53,27 @@ class Captioning(captionerFactory: () => Models.Captioner) extends Serializable 
     * caption, in their original positions. Streaming `grouped` iterator:
     * memory is O(batchSize), never the partition. */
   def generate(df: DataFrame, batchSize: Int = 16): DataFrame = {
-    require(batchSize >= 1, s"batchSize must be >= 1, got $batchSize")
     val spark = df.sparkSession
     import spark.implicits._
-    val factory = captionerFactory
-    graft.ops.Parallelism.ensure(
-      df.select(col("doc_id").cast("long"), col("prompt"), col("images"),
-        col("output_image").cast("string"), col("vision_inputs_error")))
-      .as[(Long, String, Seq[String], String, String)]
-      .mapPartitions { it =>
-        val model = ExecutorSingleton.getOrCreate("graft.captioner")(factory())
-        it.grouped(batchSize).flatMap { chunk =>
-          val valid = chunk.filter(_._5 == null)
-          val caps =
-            if (valid.isEmpty) Seq.empty
-            else model.captionBatch(valid.map(r => (r._2, r._3)))
-          require(caps.length == valid.length,
-            s"captionBatch returned ${caps.length} results for ${valid.length} inputs")
-          var vi = 0
-          chunk.map { case (id, prompt, images, out, err) =>
-            val caption = if (err == null) { val c = caps(vi); vi += 1; c } else null
-            (id, prompt, images, out, err, caption)
-          }
-        }
-      }
-      .toDF("doc_id", "prompt", "images", "output_image", "vision_inputs_error", "caption")
+    val model = ModelStage.model(captionerFactory)
+    ModelStage(graft.ops.Parallelism.ensure(
+        df.select(col("doc_id").cast("long"), col("prompt"), col("images"),
+          col("output_image").cast("string"), col("vision_inputs_error")))
+        .as[(Long, String, Seq[String], String, String)], batchSize,
+      Seq("doc_id", "prompt", "images", "output_image", "vision_inputs_error", "caption"),
       // The VLM stage is per-input-row: every output row carries its source
       // row's key/record columns unchanged (only `caption` is computed), so
       // a record-validity gate an author writes AFTER the model hoists
       // below the barrier and gated-out records never reach the VLM.
-      .transform(graft.plans.GateHoist.declarePassthrough(
-        _, "doc_id", "prompt", "images", "output_image", "vision_inputs_error"))
+      passthrough = Seq("doc_id", "prompt", "images", "output_image", "vision_inputs_error")) { chunk =>
+      val valid = chunk.filter(_._5 == null)
+      val caps = ModelStage.aligned("Captioner.captionBatch", valid,
+        if (valid.isEmpty) Seq.empty else model.get.captionBatch(valid.map(r => (r._2, r._3))))
+        .iterator.map(_._2)
+      chunk.map { case (id, prompt, images, out, err) =>
+        (id, prompt, images, out, err, if (err == null) caps.next() else null)
+      }
+    }
   }
 
   /** 4-field training record (ref: common/io/save_output_op.py:18-23);

@@ -3,7 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ml.{ExecutorSingleton, Models}
+import graft.ml.{ModelStage, Models}
 import graft.operators.{Agg, GreedyDedup, Similarity, Tiling}
 
 /** E3 — `video_extract_frame` recomposed Spark-first
@@ -23,7 +23,9 @@ import graft.operators.{Agg, GreedyDedup, Similarity, Tiling}
   * Scale shape: detection stages are embarrassingly parallel partition
   * maps; the ref set is tiny (≤3/video) so phase 2 correlation is a
   * broadcast join — the only shuffles are the per-video dedup group and
-  * the final window, both keyed by video_id which grows with the data. */
+  * the final window, both keyed by video_id which grows with the data.
+  *
+  * @param modelKeyPrefix ignored; removed with `graft.ml.BenchSingletons` in a later benchmark change. */
 class FrameMining(person: () => Models.PersonDetector,
                   face: () => Models.FaceDetector,
                   quality: () => Models.FaceQualityScorer,
@@ -55,53 +57,43 @@ class FrameMining(person: () => Models.PersonDetector,
                                 batchSize: Int = 32): DataFrame = {
     val spark = frames.sparkSession
     import spark.implicits._
-    val (pf, ff, qf, ef) = (person, face, quality, embedder)
+    val (det, fd, qs, em) = (ModelStage.model(person), ModelStage.model(face),
+      ModelStage.model(quality), ModelStage.model(embedder))
     val qThr = qualityThr
-    // singleton keys carry the pipeline's model-family prefix: the cache
-    // is JVM-global, so two FrameMining instances with DIFFERENT model
-    // factories (e.g. the production fakes and the md5-replayable oracle
-    // fakes) must not silently share models
-    val kp = modelKeyPrefix
-    frames.select(col("video_id").cast("long"), col("frame_idx").cast("long"))
-      .as[(Long, Long)]
-      .mapPartitions { it =>
-        val det = ExecutorSingleton.getOrCreate(s"$kp.person_detector")(pf())
-        val fd = ExecutorSingleton.getOrCreate(s"$kp.face_detector")(ff())
-        val qs = ExecutorSingleton.getOrCreate(s"$kp.face_quality")(qf())
-        val em = ExecutorSingleton.getOrCreate(s"$kp.face_embedder")(ef())
-        it.grouped(batchSize).flatMap { chunk =>
-          // tier 1: person boxes, one batch call; person-count gate (F4)
-          val boxesPerFrame = det.detectBatch(chunk.map(f => (f._1, f._2)))
-          val slots = chunk.zip(boxesPerFrame).flatMap { case ((vid, fidx), boxes) =>
-            if (boxes.size < loPersons || boxes.size > hiPersons) Seq.empty
-            else boxes.zipWithIndex.collect {
-              // bbox sanity (F9)
-              case (b, slot) if b.x2 - b.x1 > 0 && b.y2 - b.y1 > 0 =>
-                (vid, fidx, slot, b)
-            }
-          }
-          // tier 2: faces per surviving slot; exactly-one-face gate (F6)
-          val faces = fd.detectBatch(slots.map(s => (s._1, s._2, s._3)))
-          val oneFace = slots.zip(faces).collect {
-            case (s, fs) if fs.count(_.score >= minFaceScore) == 1 => s
-          }
-          // tier 3: quality; gate (F7)
-          val quals = qs.scoreBatch(oneFace.map(s => (s._1, s._2, s._3)))
-          val qualified = oneFace.zip(quals).collect { case (s, q) if q > qThr => (s, q) }
-          // tier 4: embeddings for the final survivors only
-          val embs = em.embedBatch(qualified.map { case (s, _) => (s._1, s._2, s._3) })
-          qualified.zip(embs).map { case (((vid, fidx, slot, b), q), e) =>
-            (vid, fidx, slot, b.x1.toDouble, b.y1.toDouble, b.x2.toDouble, b.y2.toDouble,
-              q, e.toSeq)
-          }
-        }
-      }
-      .toDF("video_id", "frame_idx", "slot", "x1", "y1", "x2", "y2", "quality", "embedding")
+    ModelStage(frames.select(col("video_id").cast("long"), col("frame_idx").cast("long"))
+        .as[(Long, Long)], batchSize,
+      Seq("video_id", "frame_idx", "slot", "x1", "y1", "x2", "y2", "quality", "embedding"),
       // row-wise passthrough contract: every emitted candidate carries its
       // source frame's (video_id, frame_idx) verbatim, so a gate written
       // AFTER this barrier that reads only those columns hoists below it
       // (graft.plans.GateHoist) and drops frames BEFORE the models run
-      .transform(graft.plans.GateHoist.declarePassthrough(_, "video_id", "frame_idx"))
+      passthrough = Seq("video_id", "frame_idx")) { chunk =>
+      // tier 1: person boxes, one batch call; person-count gate (F4)
+      val slots = ModelStage.aligned("PersonDetector.detectBatch", chunk,
+        det.get.detectBatch(chunk)).flatMap { case ((vid, fidx), boxes) =>
+        if (boxes.size < loPersons || boxes.size > hiPersons) Seq.empty
+        else boxes.zipWithIndex.collect {
+          // bbox sanity (F9)
+          case (b, slot) if b.x2 - b.x1 > 0 && b.y2 - b.y1 > 0 =>
+            (vid, fidx, slot, b)
+        }
+      }
+      // tier 2: faces per surviving slot; exactly-one-face gate (F6)
+      val oneFace = ModelStage.aligned("FaceDetector.detectBatch", slots,
+        fd.get.detectBatch(slots.map(s => (s._1, s._2, s._3)))).collect {
+        case (s, fs) if fs.count(_.score >= minFaceScore) == 1 => s
+      }
+      // tier 3: quality; gate (F7)
+      val qualified = ModelStage.aligned("FaceQualityScorer.scoreBatch", oneFace,
+        qs.get.scoreBatch(oneFace.map(s => (s._1, s._2, s._3)))).filter(_._2 > qThr)
+      // tier 4: embeddings for the final survivors only
+      ModelStage.aligned("FaceEmbedder.embedBatch", qualified,
+        em.get.embedBatch(qualified.map { case (s, _) => (s._1, s._2, s._3) })).map {
+        case (((vid, fidx, slot, b), q), e) =>
+          (vid, fidx, slot, b.x1.toDouble, b.y1.toDouble, b.x2.toDouble, b.y2.toDouble,
+            q, e.toSeq)
+      }
+    }
   }
 
   /** Phase 1: per-video reference identities (greedy dedup fold), gated

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VideoFunctions
-import graft.ml.{ExecutorSingleton, Models, Retry}
+import graft.ml.{ModelStage, Models, Retry}
 import graft.operators.Tiling
 
 /** E1 — `cut_30min` / `cut_ruidi` recomposed Spark-first
@@ -31,20 +31,18 @@ class VideoSlicing(toolFactory: () => Models.VideoTool,
   def probe(manifest: DataFrame): DataFrame = {
     val spark = manifest.sparkSession
     import spark.implicits._
-    val factory = toolFactory
-    graft.ops.Parallelism.ensure(
-      manifest.select(col("video_id").cast("long"), col("file_path").cast("string")))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        val tool = ExecutorSingleton.getOrCreate("graft.video_tool")(factory())
-        it.map { case (id, path) =>
-          tool.probe(path) match {
-            case Right((dur, fps)) => (id, path, dur, fps, null: String)
-            case Left(err)         => (id, path, 0.0, 0.0, err)
-          }
+    val tool = ModelStage.model(toolFactory)
+    ModelStage(graft.ops.Parallelism.ensure(
+        manifest.select(col("video_id").cast("long"), col("file_path").cast("string")))
+        .as[(Long, String)], batchSize = 1,
+      Seq("video_id", "file_path", "total_duration", "fps", "probe_error")) {
+      _.map { case (id, path) =>
+        tool.get.probe(path) match {
+          case Right((dur, fps)) => (id, path, dur, fps, null: String)
+          case Left(err)         => (id, path, 0.0, 0.0, err)
         }
       }
-      .toDF("video_id", "file_path", "total_duration", "fps", "probe_error")
+    }
   }
 
   /** Dead-letter duration gate (keeps rejects with status/reason).
@@ -73,22 +71,20 @@ class VideoSlicing(toolFactory: () => Models.VideoTool,
   def cut(segs: DataFrame): DataFrame = {
     val spark = segs.sparkSession
     import spark.implicits._
-    val factory = toolFactory
+    val tool = ModelStage.model(toolFactory)
     val (attempts, backoff) = (maxRetry, backoffMs)
-    segs.select(col("video_id"), col("seg_idx"), col("file_path"), col("out_path"),
+    ModelStage(segs.select(col("video_id"), col("seg_idx"), col("file_path"), col("out_path"),
         col("start_time"), col("duration"))
-      .as[(Long, Long, String, String, Double, Double)]
-      .mapPartitions { it =>
-        val tool = ExecutorSingleton.getOrCreate("graft.video_tool")(factory())
-        it.map { case (id, segIdx, src, dst, start, dur) =>
-          Retry.withRetry(attempts, backoff, jitterSeed = id * 1000 + segIdx)(
-            a => tool.cut(src, dst, start, dur, a)) match {
-            case Right(_)  => (id, segIdx, dst, 1, null: String)
-            case Left(err) => (id, segIdx, dst, 0, err)
-          }
+        .as[(Long, Long, String, String, Double, Double)], batchSize = 1,
+      Seq("video_id", "seg_idx", "out_path", "cut_status", "cut_error")) {
+      _.map { case (id, segIdx, src, dst, start, dur) =>
+        Retry.withRetry(attempts, backoff, jitterSeed = id * 1000 + segIdx)(
+          a => tool.get.cut(src, dst, start, dur, a)) match {
+          case Right(_)  => (id, segIdx, dst, 1, null: String)
+          case Left(err) => (id, segIdx, dst, 0, err)
         }
       }
-      .toDF("video_id", "seg_idx", "out_path", "cut_status", "cut_error")
+    }
   }
 
   /** Per-file summary (keeps dead-letter rows with zero counts).

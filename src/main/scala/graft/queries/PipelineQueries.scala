@@ -259,8 +259,7 @@ object PipelineQueries {
       new FrameMining(
         () => new Models.Md5PersonDetector, () => new Models.Md5FaceDetector,
         () => new Models.Md5FaceQualityScorer,
-        () => new Models.Md5FaceEmbedder(refMaxFrame = 300L),
-        modelKeyPrefix = "graft-md5")
+        () => new Models.Md5FaceEmbedder(refMaxFrame = 300L))
         .run(manifest)
     },
     Some(frameMiningOracleSql))
@@ -289,8 +288,7 @@ object PipelineQueries {
       new FrameMining(
         () => new Models.Md5PersonDetector, () => new Models.Md5FaceDetector,
         () => new Models.Md5FaceQualityScorer,
-        () => new Models.Md5FaceEmbedder(refMaxFrame = 300L),
-        modelKeyPrefix = "graft-md5")
+        () => new Models.Md5FaceEmbedder(refMaxFrame = 300L))
         // sortCheckpoint = false: the late gate below must stay in ONE
         // optimizable plan so Catalyst + GateHoist can carry it below the
         // model barriers (PlansSpec pins the collapsed shape)
@@ -585,8 +583,7 @@ object PipelineQueries {
         () => new Models.Md5GroundingMasker,
         () => new Models.FakeMatting,
         () => new Models.FakeRelighter,
-        new graft.sources.Sinks.LocalFsStore("/tmp/graft_bg_oracle_out"),
-        modelKeyPrefix = "graft-md5")
+        new graft.sources.Sinks.LocalFsStore("/tmp/graft_bg_oracle_out"))
         .run(images)
         .select("image_id", "h", "w", "max_area", "area_ratio", "n_persons")
         .orderBy("image_id")
@@ -620,8 +617,7 @@ object PipelineQueries {
         () => new Models.Md5GroundingMasker,
         () => new Models.FakeMatting,
         () => new Models.FakeRelighter,
-        new graft.sources.Sinks.LocalFsStore("/tmp/graft_bg_oracle_out"),
-        modelKeyPrefix = "graft-md5")
+        new graft.sources.Sinks.LocalFsStore("/tmp/graft_bg_oracle_out"))
       // the mis-ordering: detect EVERYTHING, box-gate, and only then
       // remember the resolution gate
       val gated = pipe.boxGates(pipe.detect(images.withColumn("tag", lit("in"))))

@@ -2,15 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ml.{ImageOps, Models}
-import graft.ml.ImageOps.{BGR, Frame, Gray, RGB}
-
-class ImageOpsSpec extends AnyFunSuite {
-
-  private def randomArrays(seed: Long, n: Int): Seq[Array[Int]] = {
-    val rng = new scala.util.Random(seed)
-    (0 until n).map(_ => Array.fill(rng.nextInt(60))(rng.nextInt(1000) - 200))
-  }
+/** Properties of the `graft.multimodal.Multimodal` image kernels: the
+  * dHash, the synthetic PNG corpus, and the md5 gray-image law the
+  * `dedup_image_dhash_oracle` replay rests on. */
+class MultimodalSpec extends AnyFunSuite {
 
   test("dHash: stable, near-dup robust, far for different content, fallback for garbage") {
     import graft.multimodal.Multimodal
@@ -65,82 +60,6 @@ class ImageOpsSpec extends AnyFunSuite {
     for (i <- hs.indices; j <- hs.indices if i < j)
       assert(java.lang.Long.bitCount(hs(i) ^ hs(j)) > 10,
         s"seeds ${seeds(i)} / ${seeds(j)} collide perceptually")
-  }
-
-  test("coercion properties: clip bounds, gray triples, swap is an involution") {
-    randomArrays(1L, 100).foreach { raw =>
-      val clipped = ImageOps.clipToUint8(Frame(RGB, raw))
-      assert(clipped.values.forall(v => v >= 0 && v <= 255))
-    }
-    randomArrays(2L, 100).foreach { raw =>
-      val g = ImageOps.grayToColor(Frame(Gray, raw))
-      assert(g.order == BGR && g.values.length == raw.length * 3)
-      assert(raw.indices.forall(i =>
-        g.values(3 * i) == raw(i) && g.values(3 * i + 1) == raw(i) && g.values(3 * i + 2) == raw(i)))
-    }
-    randomArrays(3L, 100).foreach { seed =>
-      val vals = seed.take(seed.length / 3 * 3) // whole pixels
-      val f = Frame(BGR, vals)
-      val twice = ImageOps.swapChannels(ImageOps.swapChannels(f))
-      assert(twice.order == BGR && twice.values.sameElements(vals))
-    }
-  }
-
-  test("retinaface crop coercion: float BGR gray input ends uint8 3-channel RGB") {
-    val grayFloat = Frame(Gray, Array(-5, 100, 300))
-    val out = ImageOps.coerceCrop(grayFloat, callerPassedBgr = true)
-    assert(out.order == RGB)
-    assert(out.values.toSeq == Seq(0, 0, 0, 100, 100, 100, 255, 255, 255))
-    // RGB caller passes through untouched apart from the clip
-    val rgbIn = Frame(RGB, Array(1, 2, 3))
-    assert(ImageOps.coerceCrop(rgbIn, callerPassedBgr = false).values.toSeq == Seq(1, 2, 3))
-  }
-
-  test("person detect: channel-swap retry recovers a detector that wants the other order") {
-    var calls = 0
-    // a detector that only sees people in BGR frames
-    val bgrOnly = (f: Frame) => {
-      calls += 1
-      if (f.order == BGR) Right(Seq(Models.Box(1, 2, 3, 4))) else Right(Seq.empty)
-    }
-    val (boxes, err) = ImageOps.detectWithChannelRetry(bgrOnly, Frame(RGB, Array(9, 8, 7)))
-    assert(boxes == Seq(Models.Box(1, 2, 3, 4)) && err.isEmpty && calls == 2)
-    // already-correct order: single call, no retry
-    calls = 0
-    val (b2, _) = ImageOps.detectWithChannelRetry(bgrOnly, Frame(BGR, Array(9, 8, 7)))
-    assert(b2.nonEmpty && calls == 1)
-    // gray frames never retry (reference guards ndim==3)
-    calls = 0
-    val (b3, _) = ImageOps.detectWithChannelRetry(bgrOnly, Frame(Gray, Array(5)))
-    assert(b3.isEmpty && calls == 1)
-  }
-
-  test("person detect: error surfaces as data, empty-after-retry keeps first error") {
-    val failing = (_: Frame) => Left("cuda out of memory"): Either[String, Seq[Models.Box]]
-    val (boxes, err) = ImageOps.detectWithChannelRetry(failing, Frame(RGB, Array(1, 2, 3)))
-    assert(boxes.isEmpty && err.contains("cuda out of memory"))
-    val emptyFirst = (f: Frame) =>
-      if (f.order == RGB) Left("bad tensor") else Right(Seq.empty[Models.Box])
-    val (b2, e2) = ImageOps.detectWithChannelRetry(emptyFirst, Frame(RGB, Array(1, 2, 3)))
-    assert(b2.isEmpty && e2.contains("bad tensor"))
-  }
-
-  test("face quality: raw -> RGB -> BGR retry ladder, errors as data when all fail") {
-    // model succeeds only on BGR input (third rung of the ladder)
-    var orders = List.empty[ImageOps.ChannelOrder]
-    val bgrModel = (f: Frame) => {
-      orders = orders :+ f.order
-      if (f.order == BGR) Right((0.87, "ok")) else Left(s"wrong order ${f.order}")
-    }
-    val ((score, msg), err) =
-      ImageOps.scoreWithPermutationRetry(bgrModel, Frame(Gray, Array(300, -2)))
-    assert(score == 0.87 && msg == "ok" && err.isEmpty)
-    assert(orders == List(Gray, RGB, BGR), s"ladder order was $orders")
-    // all three rungs failing: score 0.0, predict_failed, accumulated errors
-    val never = (_: Frame) => Left("nan"): Either[String, (Double, String)]
-    val ((s2, m2), e2) = ImageOps.scoreWithPermutationRetry(never, Frame(RGB, Array(1, 2, 3)))
-    assert(s2 == 0.0 && m2 == "predict_failed")
-    assert(e2.exists(e => e.contains("first_err") && e.contains("bgr_err")))
   }
 
   test("md5GrayPng: decode->resize is the identity, so dHash == direct md5 bit math") {

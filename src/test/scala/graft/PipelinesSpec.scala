@@ -368,6 +368,61 @@ class PipelinesSpec extends AnyFunSuite {
     assert(rows.map(r => (r._1, r._2)).toSet == expect)
   }
 
+  test("E4 detect: a detectBatch that returns too few results fails the stage, rows are not dropped") {
+    val root = java.nio.file.Files.createTempDirectory("graft_bg_short").toString
+    val pipe = bgPipe(root, person = () => new Models.PersonDetector {
+      private val inner = new Models.FakePersonDetector
+      def detect(videoId: Long, frameIdx: Long): Seq[Models.Box] = inner.detect(videoId, frameIdx)
+      override def detectBatch(items: Seq[(Long, Long)]): Seq[Seq[Models.Box]] =
+        super.detectBatch(items).dropRight(1)
+    })
+    val images = (1L to 40L).toDF("image_id")
+      .withColumn("image_path", format_string("/imgs/d/img_%d.jpg", col("image_id")))
+      .withColumn("h", lit(1200L)).withColumn("w", lit(1600L))
+    val err = intercept[Exception](pipe.detect(images).collect())
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString("\n")
+    val short = """PersonDetector\.detectBatch returned (\d+) results for (\d+) inputs""".r
+    val lengths = short.findFirstMatchIn(messages).map(m => (m.group(1).toInt, m.group(2).toInt))
+    assert(lengths.exists { case (got, want) => got == want - 1 },
+      s"expected the short batch to be named with both lengths, got: $messages")
+  }
+
+  /** Captions `pipe` gives two documents, read in `session`. */
+  private def captions(pipe: Captioning,
+                       session: org.apache.spark.sql.SparkSession = spark): Seq[String] = {
+    import session.implicits._
+    val input = Seq(
+      (1L, "/a.jpg", "/out/1.png"),
+      (2L, "[\"/b.jpg\",\"/c.jpg\"]", "/out/2.png")).toDF("doc_id", "input_images", "output_image")
+    pipe.run(input).select("doc_id", "caption").as[(Long, String)].collect().sortBy(_._1).map(_._2).toSeq
+  }
+
+  test("model stages: two pipelines with different models in one session each use their own") {
+    val plain = captions(new Captioning(() => new Models.FakeCaptioner))
+    val prefixed = captions(new Captioning(() => new Models.Captioner {
+      private val inner = new Models.FakeCaptioner
+      def caption(prompt: String, imagePaths: Seq[String]): String =
+        "other:" + inner.caption(prompt, imagePaths)
+    }))
+    assert(plain.forall(c => c != null && !c.startsWith("other:")))
+    assert(prefixed == plain.map("other:" + _))
+  }
+
+  test("model stages: pipelines built from the same factory load the model once per JVM") {
+    // a model loaded through a different factory first must not serve this one
+    captions(new Captioning(() => new Models.FakeCaptioner))
+    PipelinesSpec.constructed.set(0)
+    val factory = PipelinesSpec.countedCaptioner
+    val first = captions(new Captioning(factory))
+    val again = captions(new Captioning(factory))
+    // a later pass in another session reuses the same instance too
+    val otherPass = captions(new Captioning(factory), spark.newSession())
+    assert(first == again && again == otherPass)
+    assert(PipelinesSpec.constructed.get() == 1,
+      s"the captioner was built ${PipelinesSpec.constructed.get()} times, expected once")
+  }
+
   test("E4 runRecords: input_persons/output_persons assembly, any-saved filter, unreadable images") {
     val root = java.nio.file.Files.createTempDirectory("graft_bg_rec").toString
     val pipe = bgPipe(root)
@@ -394,4 +449,11 @@ class PipelinesSpec extends AnyFunSuite {
 
 object PipelinesSpec {
   val detectCalls = new java.util.concurrent.atomic.AtomicLong(0)
+  val constructed = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Counts the captioners it builds (static: survives closure serialization). */
+  val countedCaptioner: () => Models.Captioner = () => {
+    constructed.incrementAndGet()
+    new Models.FakeCaptioner
+  }
 }

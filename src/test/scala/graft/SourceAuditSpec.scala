@@ -26,6 +26,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    `ConcurrentHashMap` lives only in `SessionMemo` (plus the
   *    executor-side model singleton, which is not session-keyed), and
   *    `CheckpointBridge.checkpointRdd` is called once, by `CheckpointOps`;
+  *  - one way to load a model: `ExecutorSingleton.getOrCreate` is called
+  *    once, by `ModelStage`, whose singleton key is a digest of the model
+  *    factory, so no caller-chosen string can make two models share a slot;
   *  - the DuckDB MinHash signature (`MIN(h1 + j * h2)`) is generated once,
   *    in `MinhashSql`, and the Spark one is built once, in `Dedup`, by the
   *    native kernel, so a change to k or the hashing has one place to go
@@ -142,6 +145,13 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(outside.isEmpty,
       "hand-written concurrent map outside SessionMemo (use graft.ops.SessionMemo): " +
         outside.mkString(", "))
+  }
+
+  test("ExecutorSingleton.getOrCreate is called once, from ml/ModelStage.scala") {
+    val calls = mainCodeHits("""\bExecutorSingleton\s*\.\s*getOrCreate\s*\(""".r)
+    assert(calls.size == 1 && calls.head._1.endsWith("/ml/ModelStage.scala"),
+      "every model stage loads its models through ModelStage.model, keyed by the factory; " +
+        "ExecutorSingleton.getOrCreate called at: " + calls.map(_._2).mkString(", "))
   }
 
   test("CheckpointBridge.checkpointRdd is called once, from CheckpointOps.scala") {
