@@ -413,7 +413,7 @@ object ExtensionQueries {
     * bands, the candidate join and the Hamming verdicts bit-for-bit.
     * A +6-on-one-pixel twin (≤ 2 Hamming bits) is planted for every 10th
     * id. The arbitrary-geometry resize path stays covered by
-    * dedup_image_dhash + MultimodalSpec — this row moves the HASH + JOIN
+    * dedup_image_dhash + ImageOpsSpec — this row moves the HASH + JOIN
     * machinery under the hash oracle. */
   val dedupImageDhashOracle = QueryDef("dedup_image_dhash_oracle",
     (s, dir) => {
