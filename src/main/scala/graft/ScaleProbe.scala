@@ -132,14 +132,9 @@ object ScaleProbe {
         noop(new graft.pipelines.CorpusCuration().curate(docs(m)))
       },
       "minhash_lsh" -> { m =>
-        val d = graft.ops.Parallelism.ensure(docs(m))
-          .select(col("doc_id"),
-            array_sort(graft.functions.TextFunctions.wordShingles(col("text"), 2)).as("sh"))
-        val sigs = Dedup.withMinhashSignatureMd5(d, col("sh"), 32)
-          .select("doc_id", "sig").localCheckpoint(false)
-        noop(Dedup.lshCandidatePairs(sigs, "doc_id", "sig", 8, 4, replayable = true)
-          .withColumn("est", Dedup.estJaccard(col("sig_a"), col("sig_b"), 32))
-          .filter(col("est") >= 0.5))
+        val feat = Dedup.minhashFeatures(docs(m))
+        noop(Dedup.attachSides(Dedup.lshPairs(feat, feat, Seq((8, 4))), feat, feat, "sig")
+          .filter(Dedup.estJaccard(col("sig_a"), col("sig_b"), 32) >= 0.5))
       },
       "components" -> { m =>
         // chains of 5 over n nodes: structure (diameter, degree) constant

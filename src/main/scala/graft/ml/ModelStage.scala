@@ -4,6 +4,8 @@ import java.io.{ByteArrayOutputStream, ObjectOutputStream}
 import java.security.MessageDigest
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 
 /** Executor-side model lifecycle — the Spark analog of the reference's
@@ -23,8 +25,9 @@ object ExecutorSingleton {
   private[ml] def getOrCreate[T <: AnyRef](key: String)(init: => T): T =
     cache.computeIfAbsent(key, _ => init).asInstanceOf[T]
 
-  /** Test hook. */
+  /** Test hooks. */
   private[graft] def clear(): Unit = cache.clear()
+  private[graft] def instances: Seq[AnyRef] = cache.values.asScala.toSeq
 }
 
 /** The one model-stage operator of the media pipelines: an opaque

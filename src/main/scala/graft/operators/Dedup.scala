@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.graft.ColumnBridge
@@ -47,23 +47,6 @@ object Dedup {
     df.groupBy(md5(canonicalKey).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dup_count"))
 
-  /** k-permutation MinHash signature over a shingle array: element j is
-    * min over shingles of xxhash64(j, shingle) (seeded by position).
-    * Native single-pass kernel when bridging is available; declarative
-    * fallback is bit-compatible (same XxHash64 chain). */
-  def minhashSignature(shingles: Column, k: Int): Column = {
-    val native =
-      try Some(ColumnBridge.column(
-        graft.plans.MinHashSignature(ColumnBridge.expression(shingles), k)))
-      catch { case _: Throwable => None }
-    native.getOrElse(minhashSignatureHof(shingles, k))
-  }
-
-  /** Declarative MinHash fallback (k transform+array_min trees). */
-  def minhashSignatureHof(shingles: Column, k: Int): Column =
-    array((0 until k).map(j =>
-      array_min(transform(shingles, t => xxhash64(lit(j), t)))): _*)
-
   /** Estimated Jaccard from two equal-length signatures: matching fraction.
     * The match count is one codegen'd loop ([[graft.plans.SignatureMatchCount]]);
     * NULL when either signature is NULL. */
@@ -71,63 +54,15 @@ object Dedup {
     ColumnBridge.column(graft.plans.SignatureMatchCount(
       ColumnBridge.expression(sigA), ColumnBridge.expression(sigB))).cast("double") / k
 
-  /** LSH banding: (id, band_idx, band_hash) rows — join key for candidate
-    * generation. `bands * rowsPerBand` must equal the signature length.
-    * `replayable=true` hashes each band as the high 60 bits of md5 of the
-    * comma-joined slice (any engine recomputes it); default is engine
-    * xxhash64. Both modes join on an 8-byte LONG key — the shuffle the
-    * whole operator is designed around never ships a string bucket name.
-    * Either way the hash only NAMES the bucket — equal slices collide
-    * identically, so the candidate set is the same. */
-  def lshBands(df: DataFrame, idCol: String, sigCol: String,
-               bands: Int, rowsPerBand: Int, replayable: Boolean = false): DataFrame = {
-    val bandStructs = array((0 until bands).map { b =>
-      val bandSlice = slice(col(sigCol), b * rowsPerBand + 1, rowsPerBand)
-      val h = if (replayable) md5Hash60(array_join(bandSlice.cast("array<string>"), ","))
-              else xxhash64(bandSlice)
-      struct(lit(b).as("band_idx"), h.as("band_hash"))
-    }: _*)
-    // NULL signatures (zero-shingle docs) generate no bands at all: the
-    // md5 path would null the band hash (dropped by the equi-join anyway)
-    // but xxhash64 hashes a null slice to the bare seed — every null-sig
-    // doc would share one bucket. Filter once here, before the explode.
-    df.filter(col(sigCol).isNotNull)
-      .select(col(idCol), col(sigCol), explode(bandStructs).as("band"))
-      .select(col(idCol), col(sigCol), col("band.band_idx"), col("band.band_hash"))
-  }
-
-  /** Candidate pairs from LSH banding (distinct id pairs sharing any band),
-    * each carrying both signatures for estimation/verification.
-    *
-    * The band self-join and the distinct run over BARE (id_a, id_b) rows;
-    * signatures attach afterwards, once per surviving pair — the same
-    * ship-arrays-late shape as [[graft.operators.Similarity.lshNearDupPairs]].
-    * Carrying the two 32-element arrays THROUGH the join (sig shipped once
-    * per band row, then once per pre-distinct collision, then hashed inside
-    * a distinct over ~1 KB composite rows) measured 10.6× the rows but 30×
-    * the time at the 10× scale probe; id-only rows restore linear scaling.
-    * The candidate SET is unchanged, so oracle replays are unaffected.
-    *
-    * PRECONDITION: `idCol` is unique in `df` (one signature per id). The
-    * sig-attach joins emit one row per (pair × id occurrence), so a
-    * duplicated id would duplicate its pairs — the pre-rewrite 4-column
-    * distinct would have collapsed them. Every caller feeds a frame keyed
-    * by id (survivors of an exact-dedup groupBy or a per-doc signature
-    * select), which is also what makes the banding itself meaningful. */
-  def lshCandidatePairs(df: DataFrame, idCol: String, sigCol: String,
-                        bands: Int, rowsPerBand: Int, replayable: Boolean = false): DataFrame =
-    lshCandidateIdPairs(df, idCol, sigCol, bands, rowsPerBand, replayable)
-      .join(df.select(col(idCol).as("id_a"), col(sigCol).as("sig_a")), "id_a")
-      .join(df.select(col(idCol).as("id_b"), col(sigCol).as("sig_b")), "id_b")
-      .select("id_a", "id_b", "sig_a", "sig_b")
-
-  // ── Oracle-replayable (md5-keyed) variants ─────────────────────────────
+  // ── md5-keyed MinHash LSH: features → pairs → verify ─────────────────
   //
-  // xxhash64 exists in no other engine, so signatures built on it can only
-  // ever be rows-only checked. These variants re-key the sketches on
-  // md5-derived integers — the same engine-exact technique splitBucket /
-  // hashBucket use — so an external engine (the DuckDB oracle) replays
-  // signatures, bands, candidate pairs, and verdicts bit-for-bit.
+  // Every sketch, band key and verdict is built from md5-derived integers —
+  // the same engine-exact technique splitBucket / hashBucket use — so an
+  // external engine (the DuckDB oracle, `MinhashSql`) replays signatures,
+  // bands, candidate pairs and verdicts bit-for-bit. Every MinHash LSH
+  // caller composes the three stages below: [[minhashFeatures]] (one
+  // checkpointed sketch frame), [[lshPairs]] (the one band join) and
+  // [[jaccard]] / [[attachSides]] (verification).
 
   /** High 60 bits of md5 as a non-negative long (hex chars 1-15).
     * Replayable: `CAST(('0x' || substring(md5(x),1,15)) AS BIGINT)`. */
@@ -148,12 +83,12 @@ object Dedup {
     * digest bytes, and folds the k Kirsch–Mitzenmacher minima
     * `g_j = h1 + j*h2` in the same loop — the published standard for
     * deriving k hash functions from two (Kirsch & Mitzenmacher, ESA'06),
-    * and strictly cheaper at 100 TB than k full hashes per shingle (the
-    * xxhash64 kernel path pays k=32 hashes/shingle; this pays 1 md5 + k
-    * adds). The sketch rides the document scan: no explode, no k-column
-    * aggregate, no shuffle — only the band join shuffles. Replayable: any
-    * engine recomputes `g_j` from `CAST(('0x' || substring(md5(t),...)) AS
-    * BIGINT)` (`MinhashSql`). Requires k ≤ 64 (overflow-free slots).
+    * and strictly cheaper at 100 TB than k full hashes per shingle (this
+    * pays 1 md5 + k adds). The sketch rides the document scan: no explode,
+    * no k-column aggregate, no shuffle — only the band join shuffles.
+    * Replayable: any engine recomputes `g_j` from `CAST(('0x' ||
+    * substring(md5(t),...)) AS BIGINT)` (`MinhashSql`). Requires k ≤ 64
+    * (overflow-free slots).
     *
     * `hashedName` also emits the sorted-distinct `h1` shingle hashes from
     * the SAME pass — for callers that build both the signature and a
@@ -165,7 +100,7 @@ object Dedup {
     * explode+GROUP BY formulation (and a replaying engine's UNNEST), which
     * drops zero-shingle docs; otherwise every such doc would band-hash the
     * same empty slice into one spurious LSH bucket. A NULL sig falls out of
-    * [[lshBands]]. Null shingles are skipped. */
+    * [[lshPairs]]. Null shingles are skipped. */
   def withMinhashSignatureMd5(df: DataFrame, shingles: Column, k: Int,
                               sigName: String = "sig",
                               hashedName: Option[String] = None): DataFrame = {
@@ -179,28 +114,103 @@ object Dedup {
     }
   }
 
-  /** The bare-id candidate-pair half of [[lshCandidatePairs]] — distinct
-    * (id_a, id_b) sharing any band, NO signature attach. For callers that
-    * never read the signatures off the pairs (or attach their own per-doc
-    * features once), skipping the two sig-attach joins entirely. */
-  def lshCandidateIdPairs(df: DataFrame, idCol: String, sigCol: String,
-                          bands: Int, rowsPerBand: Int,
-                          replayable: Boolean = false): DataFrame = {
-    val bd = lshBands(df, idCol, sigCol, bands, rowsPerBand, replayable)
-      .select(col(idCol), col("band_idx"), col("band_hash"))
-    val collisions = bd.select(col("band_idx"), col("band_hash"), col(idCol).as("id_a"))
-      .join(bd.select(col("band_idx"), col("band_hash"), col(idCol).as("id_b")),
-        Seq("band_idx", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    // Explicit-count hash exchange, which the distinct reuses (no second
-    // exchange): the pair shuffle is a few hundred kB, so AQE would
-    // coalesce a plain distinct to ONE partition, and every downstream
-    // per-pair stage — the estimate screen, the verify joins, the
-    // components edge checkpoint — would then run on one task. AQE cannot
-    // see that per-row compute in the map-output bytes (the
-    // Parallelism.byRange trap); an explicit count it does not coalesce.
-    Parallelism.byHash(collisions, col("id_a"), col("id_b")).distinct()
+  /** Features stage: a `(doc_id, text)` frame → ONE checkpointed
+    * `(doc_id, sig, sh)` frame — the k = 32 md5 signature and the sorted
+    * 60-bit-hashed set of the word-bigram shingles, both from a single md5
+    * pass. The band join, the estimate and both verify sides read this
+    * one materialized frame; the verify joins ship 8-byte longs, never
+    * shingle strings, and hashed-distinct cardinalities equal the string
+    * cardinalities, so every Jaccard is the string set's. The
+    * [[Parallelism.ensure]] floor comes first: a corpus read as one row
+    * group would otherwise run the whole md5 build on one core. */
+  def minhashFeatures(docs: DataFrame): DataFrame =
+    sketchCheckpoint(Parallelism.ensure(docs).select(col("doc_id"), col("text")))
+
+  /** `df` with `text` replaced by the signature `sig` and hashed shingle
+    * set `sh` of its word bigrams, checkpointed; rows failing `shingleIf`
+    * keep their other columns and get null `sig`/`sh`. */
+  private def sketchCheckpoint(df: DataFrame, shingleIf: Option[Column] = None): DataFrame = {
+    val shingles = array_sort(TextFunctions.wordShingles(col("text"), 2))
+    withMinhashSignatureMd5(df.withColumn("shw", shingleIf.fold(shingles)(when(_, shingles))),
+        col("shw"), 32, hashedName = Some("sh"))
+      .drop("text", "shw")
+      .localCheckpoint()
+  }
+
+  /** Pairs stage — the one LSH band join: distinct `(id_a, id_b)` pairs,
+    * `id_a` a `doc_id` of `left` and `id_b` of `right`, whose `sig`s agree
+    * on every position of some band, kept where `pairIf` holds (`id_a <
+    * id_b` for a self-join; `lit(true)` for a batch × corpus join).
+    *
+    * Each `(bands, rowsPerBand)` geometry (`bands * rowsPerBand` = the
+    * signature length) keys its bands on `(band_idx, band_hash)`, the hash
+    * being the high 60 bits of md5 of the comma-joined slice
+    * (`MinhashSql.bandSelects`): the shuffle ships an 8-byte LONG, never a
+    * string bucket name, and equal slices collide identically. With
+    * several geometries the band rows and the pairs also carry `bands` and
+    * `rpb`: one join serves every geometry, collisions stay within their
+    * own geometry, and each pair comes out once per geometry it collides
+    * under. NULL signatures (zero-shingle docs) band nowhere.
+    *
+    * Only ids cross the join; callers attach signatures or shingle sets
+    * afterwards, once per surviving pair ([[attachSides]]). Carrying the
+    * 32-element arrays THROUGH the join measured 10.6× the rows but 30×
+    * the time at the 10× scale probe. Ids must be unique within each side
+    * — a duplicated id would duplicate its pairs at the attach joins.
+    *
+    * The distinct runs on an explicit-count hash exchange, which it reuses
+    * (no second exchange): the pair shuffle is a few hundred kB, so AQE
+    * would coalesce a plain distinct to ONE partition, and every
+    * downstream per-pair stage — the estimate screen, the verify joins, a
+    * components edge checkpoint — would then run on one task. AQE cannot
+    * see that per-row compute in the map-output bytes (the
+    * Parallelism.byRange trap); an explicit count it does not coalesce. */
+  def lshPairs(left: DataFrame, right: DataFrame, geometries: Seq[(Int, Int)],
+               pairIf: Column = col("id_a") < col("id_b")): DataFrame = {
+    val tags = if (geometries.size > 1) Seq("bands", "rpb") else Nil
+    def banded(f: DataFrame, id: String): DataFrame = geometries.map { case (b, r) =>
+      val bandStructs = array((0 until b).map { i =>
+        val part = slice(col("sig"), i * r + 1, r).cast("array<string>")
+        struct(lit(i).as("band_idx"), md5Hash60(array_join(part, ",")).as("band_hash"))
+      }: _*)
+      val rows = f.filter(col("sig").isNotNull)
+        .select(col("doc_id"), explode(bandStructs).as("band"))
+        .select(col("doc_id"), col("band.band_idx"), col("band.band_hash"))
+      val tagCols = if (tags.isEmpty) Nil else Seq(lit(b).as("bands"), lit(r).as("rpb"))
+      rows.select((tagCols ++ Seq(col("band_idx"), col("band_hash"), col("doc_id").as(id))): _*)
+    }.reduce(_ unionByName _)
+    val collisions = banded(left, "id_a")
+      .join(banded(right, "id_b"), tags ++ Seq("band_idx", "band_hash"))
+      .filter(pairIf)
+      .select((tags ++ Seq("id_a", "id_b")).map(col): _*)
+    // Repeats dropped within each partition BEFORE the one exchange: a pair
+    // colliding in several bands would otherwise cross the shuffle once
+    // per band. The seen-set is capped (cleared when full), so memory stays
+    // bounded; the distinct above the exchange is what makes pairs unique.
+    val local = collisions.mapPartitions(dropRepeats)(Encoders.row(collisions.schema))
+    Parallelism.byHash(local, col("id_a"), col("id_b")).distinct()
+  }
+
+  private val dropRepeats: Iterator[Row] => Iterator[Row] = { rows =>
+    val seen = scala.collection.mutable.HashSet.empty[Row]
+    rows.filter { r => if (seen.size >= (1 << 16)) seen.clear(); seen.add(r) }
+  }
+
+  /** Verify stage: exact Jaccard of two DISTINCT, SORTED sets. */
+  def jaccard(a: Column, b: Column): Column = {
+    val inter = sortedIntersectCount(a, b)
+    inter.cast("double") / (size(a) + size(b) - inter).cast("double")
+  }
+
+  /** `pairs(id_a, id_b, ...)` with each `cols` column of `left` attached
+    * to `id_a` as `<c>_a` and of `right` to `id_b` as `<c>_b` — one join
+    * per side, on the features frames' `doc_id`. */
+  def attachSides(pairs: DataFrame, left: DataFrame, right: DataFrame,
+                  cols: String*): DataFrame = {
+    def side(f: DataFrame, s: String) =
+      f.select(col("doc_id").as(s"id_$s") +: cols.map(c => col(c).as(s"${c}_$s")): _*)
+    pairs.join(side(left, "a"), "id_a").join(side(right, "b"), "id_b")
+      .select((pairs.columns.toSeq ++ cols.map(_ + "_a") ++ cols.map(_ + "_b")).map(col): _*)
   }
 
   /** The near-dup clustering chain over a `(doc_id, text)` frame, shared
@@ -222,11 +232,8 @@ object Dedup {
     * crosses it (the r12 cluster-tax finding — on a 4-executor topology
     * every downstream read of a text-carrying barrier paid cross-process
     * serialization of the widest column, 1.96× single-JVM task-CPU at the
-    * 100× tier). The barrier holds the survivors' signature and
-    * 60-bit-hashed shingle set from ONE md5 pass, so the band join reads
-    * a materialized sig and the verify joins ship 8-byte longs; hashed-
-    * distinct cardinalities equal string cardinalities, so every Jaccard
-    * is unchanged.
+    * 100× tier). The checkpoint is the features stage's, over every doc
+    * with only the survivors sketched.
     *
     * The exact pre-stage is LOAD-BEARING at scale: LSH over a corpus that
     * still holds exact-dup groups bands every group of m identical docs
@@ -240,30 +247,19 @@ object Dedup {
       .select((col("doc_id") +: col("text") +: carry): _*)
       .withColumn("content_hash", md5(bagOfWordsKey(col("text"))))
     val groups = keyed.groupBy("content_hash").agg(min(col("doc_id")).as("keep_id"))
-    val withKeep = withMinhashSignatureMd5(
-        keyed.join(groups, "content_hash")
-          .withColumn("shw", when(col("doc_id") === col("keep_id"),
-            array_sort(TextFunctions.wordShingles(col("text"), 2)))),
-        col("shw"), 32, hashedName = Some("sh"))
-      .drop("content_hash", "text", "shw")
-      .localCheckpoint()
+    val withKeep = sketchCheckpoint(keyed.join(groups, "content_hash").drop("content_hash"),
+      shingleIf = Some(col("doc_id") === col("keep_id")))
     val survivors = withKeep.filter(col("doc_id") === col("keep_id"))
-    val sh = survivors.select(col("doc_id"), col("sh"))
     // Estimate screen BEFORE the verify join: the estimate lives on the
     // pair rows already (no extra shuffle), while the verify join ships
     // two shingle arrays per pair — 15× superlinear wall at the 10× probe
     // without it (band collisions on template-similar corpora make the
     // linear candidate set a LARGE one, ~62 pairs/doc).
-    val pairs = lshCandidatePairs(survivors, "doc_id", "sig",
-        bands = 8, rowsPerBand = 4, replayable = true)
-      .withColumn("est", estJaccard(col("sig_a"), col("sig_b"), 32))
-      .filter(col("est") >= 0.35)
-    val edges = pairs
-      .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("inter", sortedIntersectCount(col("sh_a"), col("sh_b")))
-      .filter(col("inter").cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double") >= 0.5)
+    val pairs = attachSides(lshPairs(survivors, survivors, Seq((8, 4))),
+        survivors, survivors, "sig")
+      .filter(estJaccard(col("sig_a"), col("sig_b"), 32) >= 0.35)
+    val edges = attachSides(pairs.select("id_a", "id_b"), survivors, survivors, "sh")
+      .filter(jaccard(col("sh_a"), col("sh_b")) >= 0.5)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
     val comps = Components.connectedComponents(
       survivors.select(col("doc_id").as("id")), edges)

@@ -28,7 +28,7 @@ object Sharding {
   /** Append (rank, shard): rank = position in (sizeCol desc, idCol asc)
     * order; shard = snake assignment into `nShards`. Deterministic —
     * the sort key is a total order PROVIDED `idCol` is unique (the same
-    * precondition [[Dedup.lshCandidatePairs]] states): a duplicated id
+    * precondition [[Dedup.lshPairs]] states): a duplicated id
     * makes the rank of the tied rows run-dependent, which would break
     * byte-identical replays. Callers own id uniqueness — it is not
     * re-verified here (a distinct-count pass at 100 TB is a full extra

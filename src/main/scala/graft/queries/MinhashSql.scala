@@ -38,7 +38,7 @@ private[queries] object MinhashSql {
     s"SELECT doc_id, ${(0 until k).map(j => s"MIN(h1 + $j * h2) AS s$j").mkString(", ")} FROM th GROUP BY doc_id"
 
   /** `(doc_id, band_idx, band_hash)` rows of `sig` at `bands × rpb`: the
-    * same 60-bit md5 bucket key as `Dedup.lshBands(replayable = true)`, so
+    * same 60-bit md5 bucket key as `Dedup.lshPairs`, so
     * equal slices collide identically and the join key stays a long. */
   def bandSelects(bands: Int, rpb: Int): String = {
     require(bands * rpb == k, s"bands ($bands) x rows/band ($rpb) must equal k ($k)")

@@ -237,6 +237,18 @@ object PipelineQueries {
       ORDER BY t1.video_id, frame_idx"""
   }
 
+  // One factory value per model, shared by every query that runs it: a
+  // model's executor-singleton key is the digest of its factory
+  // (graft.ml.ModelStage), so each lambda literal of the same model would
+  // load one more instance into the JVM.
+  private val md5PersonDetector = () => new Models.Md5PersonDetector
+  private val md5FaceDetector = () => new Models.Md5FaceDetector
+  private val md5FaceQualityScorer = () => new Models.Md5FaceQualityScorer
+  private val md5FaceEmbedder = () => new Models.Md5FaceEmbedder(refMaxFrame = 300L)
+  private val md5GroundingMasker = () => new Models.Md5GroundingMasker
+  private val fakeMatting = () => new Models.FakeMatting
+  private val fakeRelighter = () => new Models.FakeRelighter
+
   /** Oracle COMPANION for pipeline_frame_mining (the dedup_greedy_oracle
     * constraints realized as MODEL FAKES — [[Models.Md5PersonDetector]]
     * and friends): the REAL two-phase E3 pipeline runs end to end —
@@ -257,9 +269,7 @@ object PipelineQueries {
         .filter(col("video_id") % 200 === 0)
         .withColumn("total_frames", lit(3010L))
       new FrameMining(
-        () => new Models.Md5PersonDetector, () => new Models.Md5FaceDetector,
-        () => new Models.Md5FaceQualityScorer,
-        () => new Models.Md5FaceEmbedder(refMaxFrame = 300L))
+        md5PersonDetector, md5FaceDetector, md5FaceQualityScorer, md5FaceEmbedder)
         .run(manifest)
     },
     Some(frameMiningOracleSql))
@@ -286,9 +296,7 @@ object PipelineQueries {
         .filter(col("video_id") % 100 === 0)
         .withColumn("total_frames", lit(3010L))
       new FrameMining(
-        () => new Models.Md5PersonDetector, () => new Models.Md5FaceDetector,
-        () => new Models.Md5FaceQualityScorer,
-        () => new Models.Md5FaceEmbedder(refMaxFrame = 300L))
+        md5PersonDetector, md5FaceDetector, md5FaceQualityScorer, md5FaceEmbedder)
         // sortCheckpoint = false: the late gate below must stay in ONE
         // optimizable plan so Catalyst + GateHoist can carry it below the
         // model barriers (PlansSpec pins the collapsed shape)
@@ -301,8 +309,8 @@ object PipelineQueries {
     () => new Models.FakePersonDetector,
     () => new Models.FakeFaceDetector,
     () => new Models.FakeGroundingMasker,
-    () => new Models.FakeMatting,
-    () => new Models.FakeRelighter,
+    fakeMatting,
+    fakeRelighter,
     new graft.sources.Sinks.LocalFsStore("/tmp/graft_bg_out"))
 
   /** The part-derived synthetic image frame the E4 queries run on —
@@ -578,11 +586,7 @@ object PipelineQueries {
         (lit(400L) + (col("p_partkey") * 37) % 1200).as("h"),
         (lit(600L) + (col("p_partkey") * 53) % 1600).as("w"))
       new graft.pipelines.BackgroundCuration(
-        () => new Models.Md5PersonDetector,
-        () => new Models.Md5FaceDetector,
-        () => new Models.Md5GroundingMasker,
-        () => new Models.FakeMatting,
-        () => new Models.FakeRelighter,
+        md5PersonDetector, md5FaceDetector, md5GroundingMasker, fakeMatting, fakeRelighter,
         new graft.sources.Sinks.LocalFsStore("/tmp/graft_bg_oracle_out"))
         .run(images)
         .select("image_id", "h", "w", "max_area", "area_ratio", "n_persons")
@@ -612,11 +616,7 @@ object PipelineQueries {
         (lit(400L) + (col("p_partkey") * 37) % 1200).as("h"),
         (lit(600L) + (col("p_partkey") * 53) % 1600).as("w"))
       val pipe = new graft.pipelines.BackgroundCuration(
-        () => new Models.Md5PersonDetector,
-        () => new Models.Md5FaceDetector,
-        () => new Models.Md5GroundingMasker,
-        () => new Models.FakeMatting,
-        () => new Models.FakeRelighter,
+        md5PersonDetector, md5FaceDetector, md5GroundingMasker, fakeMatting, fakeRelighter,
         new graft.sources.Sinks.LocalFsStore("/tmp/graft_bg_oracle_out"))
       // the mis-ordering: detect EVERYTHING, box-gate, and only then
       // remember the resolution gate

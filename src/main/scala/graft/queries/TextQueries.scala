@@ -117,9 +117,7 @@ object TextQueries {
     val a = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
     val b = sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
     val pairs = a.join(broadcast(b), col("id_a") < col("id_b"))
-      .withColumn("inter", Dedup.sortedIntersectCount(col("sh_a"), col("sh_b")))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
+      .withColumn("jaccard", Dedup.jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= 0.6)
       .select("id_a", "id_b", "jaccard")
     (sh, pairs)
@@ -319,38 +317,20 @@ object TextQueries {
       FROM n LEFT JOIN ca USING (doc_id)
       ORDER BY n.doc_id"""))
 
-  /** MinHash+LSH near-dup candidates, verified with true shingle Jaccard.
-    * md5-keyed replayable signatures → full hash-oracle evidence; the
-    * xxhash64 native kernel remains the engine-private fast path
-    * ([[Dedup.minhashSignature]], bit-compat spec'd). */
+  /** MinHash+LSH near-dup candidates, verified with true shingle Jaccard:
+    * the [[Dedup.minhashFeatures]] → [[Dedup.lshPairs]] (8×4) → verify
+    * stages over md5-keyed replayable signatures → full hash-oracle
+    * evidence. */
   val dedupMinhashLsh = QueryDef("dedup_minhash_lsh",
     (s, dir) => {
-      // ONE feature checkpoint (doc_id, sh, sig) — the zero-shuffle
-      // narrow-map signature (same md5 math the oracle replays) rides the
-      // shingle build, so banding, est, and both verification sides read
-      // one materialized frame (r16: was two checkpoints; and the pairs
-      // attach sig+sh together, one join per side instead of two —
-      // there is no est pre-screen here, so nothing ships early).
-      val feat = Dedup.withMinhashSignatureMd5(
-          graft.ops.Parallelism.ensure(
-            table(s, dir, "documents").filter(col("doc_id") < 500))
-            .select(col("doc_id"), array_sort(wordShingles(col("text"), 2)).as("sh")),
-          col("sh"), 32)
-        .select("doc_id", "sh", "sig")
-        .localCheckpoint()
-      val ids = Dedup.lshCandidateIdPairs(feat, "doc_id", "sig",
-        bands = 8, rowsPerBand = 4, replayable = true)
-      ids
-        .join(feat.select(col("doc_id").as("id_a"), col("sh").as("sh_a"),
-          col("sig").as("sig_a")), "id_a")
-        .join(feat.select(col("doc_id").as("id_b"), col("sh").as("sh_b"),
-          col("sig").as("sig_b")), "id_b")
-        .withColumn("est_jaccard", Dedup.estJaccard(col("sig_a"), col("sig_b"), 32))
-        .withColumn("inter", Dedup.sortedIntersectCount(col("sh_a"), col("sh_b")))
-        .withColumn("true_jaccard", col("inter").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
+      val feat = Dedup.minhashFeatures(table(s, dir, "documents").filter(col("doc_id") < 500))
+      // no estimate pre-screen here, so sig and sh attach together, one
+      // join per side
+      Dedup.attachSides(Dedup.lshPairs(feat, feat, Seq((8, 4))), feat, feat, "sh", "sig")
+        .select(col("id_a"), col("id_b"),
+          Dedup.estJaccard(col("sig_a"), col("sig_b"), 32).as("est_jaccard"),
+          Dedup.jaccard(col("sh_a"), col("sh_b")).as("true_jaccard"))
         .filter(col("true_jaccard") >= 0.3)
-        .select("id_a", "id_b", "est_jaccard", "true_jaccard")
         // ckpt before the output sort — same double-intersect reasoning
         // as mine_contrastive_pairs (r16)
         .localCheckpoint()
@@ -366,31 +346,18 @@ object TextQueries {
     * pairs the encoder should map together) or `hard_negative` (< 0.2 —
     * sketch-similar enough to band-collide yet lexically far, exactly the
     * confusable pairs contrastive losses need; ambiguous middle dropped).
-    * Same linear candidate machinery as dedup ([[Dedup.lshCandidatePairs]]
-    * ship-arrays-late shape), same bounded slice as `dedup_minhash_lsh`;
+    * Same linear candidate machinery as dedup ([[Dedup.lshPairs]], ids
+    * only through the band join), same bounded slice as `dedup_minhash_lsh`;
     * the whole chain replays via [[minhashPairSql]] at the mining band
     * geometry. */
   val mineContrastivePairs = QueryDef("mine_contrastive_pairs",
     (s, dir) => {
-      // ONE feature checkpoint (r16, was two); the mining never reads the
-      // signatures off the pairs (no est column in the output), so the
-      // candidate pairs stay BARE IDS and only the shingle arrays attach,
-      // once per side — two fewer joins and no wasted sig shipping.
-      val feat = Dedup.withMinhashSignatureMd5(
-          graft.ops.Parallelism.ensure(
-            table(s, dir, "documents").filter(col("doc_id") < 500))
-            .select(col("doc_id"), array_sort(wordShingles(col("text"), 2)).as("sh")),
-          col("sh"), 32)
-        .select("doc_id", "sh", "sig")
-        .localCheckpoint()
-      val pairs = Dedup.lshCandidateIdPairs(feat, "doc_id", "sig",
-        bands = 16, rowsPerBand = 2, replayable = true)
-      val shA = feat.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-      val shB = feat.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-      pairs.join(shA, "id_a").join(shB, "id_b")
-        .withColumn("inter", Dedup.sortedIntersectCount(col("sh_a"), col("sh_b")))
-        .withColumn("true_jaccard", col("inter").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
+      // the mining never reads the signatures off the pairs (no est column
+      // in the output), so only the shingle sets attach, once per side
+      val feat = Dedup.minhashFeatures(table(s, dir, "documents").filter(col("doc_id") < 500))
+      Dedup.attachSides(Dedup.lshPairs(feat, feat, Seq((16, 2))), feat, feat, "sh")
+        .select(col("id_a"), col("id_b"),
+          Dedup.jaccard(col("sh_a"), col("sh_b")).as("true_jaccard"))
         .filter(col("true_jaccard") >= 0.5 || col("true_jaccard") < 0.2)
         .select(col("id_a"), col("id_b"), col("true_jaccard"),
           when(col("true_jaccard") >= 0.5, lit("positive"))
@@ -493,46 +460,21 @@ object TextQueries {
         .select(col("doc_id"), col("text"), col("ex_id"))
         .localCheckpoint() // read by the near-dup stage and final assembly
       val rest = exactMatch.filter(col("ex_id").isNull).select("doc_id", "text")
-      // ONE feature checkpoint per side (r16, was shingles + signatures =
-      // two each): signature and 60-bit-hashed shingle set from a SINGLE
-      // md5 pass. The verify join ships 8-byte longs instead of 8-word
-      // shingle strings (the lsh_calibration discipline — ~3× lighter
-      // through the join); hashed-distinct cardinalities equal the string
-      // cardinalities, so every tj — and every verdict — is unchanged.
-      def feat(df: org.apache.spark.sql.DataFrame) =
-        Dedup.withMinhashSignatureMd5(
-            df.select(col("doc_id"),
-              array_sort(wordShingles(col("text"), 2)).as("shw")),
-            col("shw"), 32, hashedName = Some("sh"))
-          .select("doc_id", "sig", "sh")
-          .localCheckpoint()
-      val featE = feat(existing); val featB = feat(rest)
-      def banded(sigs: org.apache.spark.sql.DataFrame) = Dedup.lshBands(
-          sigs, "doc_id", "sig", bands = 8, rowsPerBand = 4, replayable = true)
-        .select(col("doc_id"), col("band_idx"), col("band_hash"))
-      // bare-id band join + distinct, signatures attached once per
-      // surviving pair (the lshCandidatePairs ship-arrays-late shape);
-      // the est pre-screen still runs BEFORE the shingle arrays attach —
-      // at scale the screen is what keeps the array shuffle linear
-      // (the pipeline_dedup_corpus 10× probe measured 15× without it).
+      val featE = Dedup.minhashFeatures(existing)
+      val featB = Dedup.minhashFeatures(rest)
+      // batch (id_a) × corpus (id_b): no id order between the sides. The
+      // est pre-screen runs BEFORE the shingle sets attach — at scale the
+      // screen is what keeps the array shuffle linear (the
+      // pipeline_dedup_corpus 10× probe measured 15× without it).
       // r15: checkpointing the corpus band index here was A/B'd and LOST
       // (exec 2.2->3.0 s: the materialization + checkpoint read cost more
       // than the 8-band md5 explode it saved) — left live.
-      val cands = banded(featB).withColumnRenamed("doc_id", "b_id")
-        .join(banded(featE).withColumnRenamed("doc_id", "e_id"),
-          Seq("band_idx", "band_hash"))
-        .select("b_id", "e_id").distinct()
-        .join(featB.select(col("doc_id").as("b_id"), col("sig").as("sig_b")), "b_id")
-        .join(featE.select(col("doc_id").as("e_id"), col("sig").as("sig_e")), "e_id")
-        .withColumn("est", Dedup.estJaccard(col("sig_b"), col("sig_e"), 32))
-        .filter(col("est") >= 0.35)
-      val near = cands
-        .join(featB.select(col("doc_id").as("b_id"), col("sh").as("sh_b")), "b_id")
-        .join(featE.select(col("doc_id").as("e_id"), col("sh").as("sh_e")), "e_id")
-        .withColumn("inter", Dedup.sortedIntersectCount(col("sh_b"), col("sh_e")))
-        .filter(col("inter").cast("double") /
-          (size(col("sh_b")) + size(col("sh_e")) - col("inter")).cast("double") >= 0.5)
-        .groupBy(col("b_id").as("doc_id")).agg(min(col("e_id")).as("near_id"))
+      val cands = Dedup.attachSides(
+          Dedup.lshPairs(featB, featE, Seq((8, 4)), pairIf = lit(true)), featB, featE, "sig")
+        .filter(Dedup.estJaccard(col("sig_a"), col("sig_b"), 32) >= 0.35)
+      val near = Dedup.attachSides(cands.select("id_a", "id_b"), featB, featE, "sh")
+        .filter(Dedup.jaccard(col("sh_a"), col("sh_b")) >= 0.5)
+        .groupBy(col("id_a").as("doc_id")).agg(min(col("id_b")).as("near_id"))
       exactMatch.join(near, Seq("doc_id"), "left")
         .select(col("doc_id"),
           when(col("ex_id").isNotNull, lit("exact_dup"))
@@ -1209,53 +1151,16 @@ object TextQueries {
   def lshCalibrationReport(docs: org.apache.spark.sql.DataFrame,
                            chunks: Int = 0): org.apache.spark.sql.DataFrame = {
     require(chunks >= 0, s"chunks must be >= 0 (0 = auto), got $chunks")
-    // ONE feature checkpoint carrying signature AND 60-bit-hashed shingle
-    // set, both derived from a SINGLE md5 pass over the shingles (r16,
-    // guide §1.2/§2.3: the old sh → sigs + sh → shh shape paid two
-    // checkpoints and hashed every shingle twice). The hashed sets keep
-    // the verify join shipping 8-byte longs, never 8-word strings (the
-    // dup_ngrams discipline; string-array verify spilled the 20×-probe
-    // sort). distinct-AFTER-hash keeps both engines identical even if
-    // md5-60 ever collided within a doc; tj values are unchanged — md5 is
-    // replayed exactly in the oracle.
-    // ensure(): the corpus arrives as one row group on the registered
-    // path, so without the floor the whole md5/signature build runs on a
-    // single core (r16 — the F1 lesson applied here; measured 8.4 s plan
-    // isolated before, the build distributes across the session's cores
-    // after).
-    val feat = Dedup.withMinhashSignatureMd5(
-        graft.ops.Parallelism.ensure(docs).select(col("doc_id"),
-          array_sort(wordShingles(col("text"), 2)).as("shw")),
-        col("shw"), 32, hashedName = Some("sh"))
-      .select("doc_id", "sig", "sh")
-      .localCheckpoint() // read by the band join and both verify-join sides
-    val sigs = feat.select("doc_id", "sig")
-    val shh = feat.select("doc_id", "sh")
-    // bare-id candidate pairs per config (no signature attach -- the
-    // calibration never reads them). The configs NEST (strict subset of
-    // permissive, spec'd), so pairs are tagged per config and the
-    // exact-Jaccard verify runs ONCE per distinct pair instead of once
-    // per config -- the verify join is what ships the shingle arrays,
-    // and this ships each pair's arrays exactly once (measured
-    // 10.5 s -> ~4 s at sf0.1). tj is a pure function of the pair, so
-    // the per-config rows are value-identical and the oracle replay is
-    // untouched. r16: the three per-config band self-joins + distincts
-    // fuse into ONE join + distinct keyed on (bands, rpb, band_idx,
-    // band_hash) — within-config collisions only, identical pair rows,
-    // a third of the exchange stages (guide §2.4).
-    val bdAll = Seq((16, 2), (8, 4), (4, 8)).map { case (b, r) =>
-      Dedup.lshBands(sigs, "doc_id", "sig", b, r, replayable = true)
-        .select(lit(b).as("bands"), lit(r).as("rpb"),
-          col("doc_id"), col("band_idx"), col("band_hash"))
-    }.reduce(_ unionByName _)
-    val tagged = bdAll
-      .select(col("bands"), col("rpb"), col("band_idx"), col("band_hash"),
-        col("doc_id").as("id_a"))
-      .join(bdAll.select(col("bands"), col("rpb"), col("band_idx"),
-          col("band_hash"), col("doc_id").as("id_b")),
-        Seq("bands", "rpb", "band_idx", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("bands", "rpb", "id_a", "id_b").distinct()
+    val feat = Dedup.minhashFeatures(docs)
+    // bare-id candidate pairs tagged per config (no signature attach --
+    // the calibration never reads them), from ONE band join over all three
+    // geometries. The configs NEST (strict subset of permissive, spec'd),
+    // so the exact-Jaccard verify runs ONCE per distinct pair instead of
+    // once per config -- the verify join is what ships the shingle sets,
+    // and this ships each pair's sets exactly once (measured 10.5 s -> ~4 s
+    // at sf0.1). tj is a pure function of the pair, so the per-config rows
+    // are value-identical and the oracle replay is untouched.
+    val tagged = Dedup.lshPairs(feat, feat, Seq((16, 2), (8, 4), (4, 8)))
       .localCheckpoint()
     val nChunks = if (chunks >= 1) chunks
       else math.max(1L, (graft.operators.Similarity.corpusCount(docs)
@@ -1264,14 +1169,9 @@ object TextQueries {
     // bare-id pair set is read by every slice — checkpoint once when
     // slicing so the distinct doesn't re-run per slice
     val pairs = if (nChunks > 1) pairsAll.localCheckpoint() else pairsAll
-    def scoreSlice(p: org.apache.spark.sql.DataFrame) = p
-      .join(shh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(shh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("inter", Dedup.sortedIntersectCount(col("sh_a"), col("sh_b")))
-      .select(col("id_a"), col("id_b"),
-        (col("inter").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
-          .as("tj"))
+    def scoreSlice(p: org.apache.spark.sql.DataFrame) =
+      Dedup.attachSides(p, feat, feat, "sh")
+        .select(col("id_a"), col("id_b"), Dedup.jaccard(col("sh_a"), col("sh_b")).as("tj"))
     val scored =
       if (nChunks == 1) scoreSlice(pairs)
       else (0 until nChunks)

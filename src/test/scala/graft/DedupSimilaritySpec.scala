@@ -28,8 +28,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("minhash estimate tracks true jaccard; exact dups estimate 1.0") {
     val sh = corpus.select(col("doc_id"), TextFunctions.wordShingles(col("text"), 2).as("sh"))
-    val sigs = sh.withColumn("sig", Dedup.minhashSignature(col("sh"), 64))
-    val pairs = Dedup.lshCandidatePairs(sigs, "doc_id", "sig", bands = 16, rowsPerBand = 4)
+    val sigs = Dedup.withMinhashSignatureMd5(sh, col("sh"), 64)
+    val pairs = Dedup.attachSides(Dedup.lshPairs(sigs, sigs, Seq((16, 4))), sigs, sigs, "sig")
       .withColumn("est", Dedup.estJaccard(col("sig_a"), col("sig_b"), 64))
       .select("id_a", "id_b", "est").as[(Long, Long, Double)].collect()
       .map(p => (p._1, p._2) -> p._3).toMap
@@ -51,19 +51,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val nullSigs = sigs.filter(col("sig").isNull)
       .select("doc_id").as[Long].collect().toSet
     assert(nullSigs == Set(10L, 11L, 12L))
-    val pairs = Dedup.lshCandidatePairs(sigs, "doc_id", "sig", bands = 4, rowsPerBand = 2)
+    val pairs = Dedup.lshPairs(sigs, sigs, Seq((4, 2)))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((0L, 1L)), s"spurious empty-doc pairs: $pairs")
-  }
-
-  test("native minhash kernel is bit-compatible with the declarative fallback") {
-    val sh = corpus.select(col("doc_id"),
-      TextFunctions.wordShingles(col("text"), 2).as("sh"))
-    val nat = sh.select(col("doc_id"), Dedup.minhashSignature(col("sh"), 32).as("sig"))
-      .as[(Long, Seq[Long])].collect().toMap
-    val hof = sh.select(col("doc_id"), Dedup.minhashSignatureHof(col("sh"), 32).as("sig"))
-      .as[(Long, Seq[Long])].collect().toMap
-    assert(nat == hof)
   }
 
   test("simhash: identical docs hash equal; unrelated docs far in Hamming") {
@@ -706,8 +696,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .select(col("doc_id"), array_sort(TextFunctions.wordShingles(col("text"), 2)).as("sh"))
     val sigs = Dedup.withMinhashSignatureMd5(sh, col("sh"), 32).select("doc_id", "sig")
     def cands(b: Int, r: Int): Set[(Long, Long)] =
-      Dedup.lshCandidatePairs(sigs, "doc_id", "sig", bands = b, rowsPerBand = r,
-          replayable = true)
+      Dedup.lshPairs(sigs, sigs, Seq((b, r)))
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val (c16, c8, c4) = (cands(16, 2), cands(8, 4), cands(4, 8))
     assert(c4.subsetOf(c8) && c8.subsetOf(c16), "banding candidate sets must nest")

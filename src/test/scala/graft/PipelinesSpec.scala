@@ -231,6 +231,24 @@ class PipelinesSpec extends AnyFunSuite {
     assert(out1.map(_.toString).sorted.toSeq == out2.map(_.toString).sorted.toSeq)
   }
 
+  test("the md5-model oracle and misordered queries share one model instance per class") {
+    // a model's singleton key is its factory's digest, so a lambda literal
+    // per query would load one instance per query into the JVM
+    val dir = java.nio.file.Files.createTempDirectory("graft_model_share").toString
+    spark.range(0, 800).select(col("id").as("event_id")).write.parquet(s"$dir/events.parquet")
+    spark.range(1, 201).select(col("id").as("p_partkey")).write.parquet(s"$dir/part.parquet")
+    graft.ml.ExecutorSingleton.clear()
+    import graft.queries.PipelineQueries._
+    Seq(pipelineFrameMiningOracle, pipelineFrameMiningMisordered,
+        pipelineBgCurationOracle, pipelineBgCurationMisordered)
+      .foreach(q => q.spark(spark, dir).count())
+    val perClass = graft.ml.ExecutorSingleton.instances
+      .groupBy(_.getClass.getSimpleName).map { case (c, xs) => c -> xs.size }
+    assert(Seq("Md5PersonDetector", "Md5FaceDetector").forall(perClass.contains),
+      s"the queries ran no detector: $perClass")
+    assert(perClass.values.forall(_ == 1), s"model instances per class: $perClass")
+  }
+
   test("E3 run: phase-1 detection executes exactly once (refs checkpointed, not recomputed)") {
     graft.ml.ExecutorSingleton.clear()
     PipelinesSpec.detectCalls.set(0)

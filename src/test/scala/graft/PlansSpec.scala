@@ -172,8 +172,7 @@ class PlansSpec extends AnyFunSuite {
     val docs = spark.sparkContext.parallelize((0 until 60).map(i =>
       (i.toLong, Seq("a b", "b c", s"c d${i % 4}", s"d${i % 3} e")))).toDF("doc_id", "sh")
     val sigs = graft.operators.Dedup.withMinhashSignatureMd5(docs, col("sh"), 8)
-    val pairs = graft.operators.Dedup.lshCandidateIdPairs(sigs, "doc_id", "sig",
-      bands = 4, rowsPerBand = 2, replayable = true)
+    val pairs = graft.operators.Dedup.lshPairs(sigs, sigs, Seq((4, 2)))
     assert(pairs.queryExecution.toRdd.getNumPartitions == width,
       s"candidate pairs coalesced:\n${pairs.queryExecution.executedPlan}")
     assert(pairs.count() > 0)
@@ -181,6 +180,33 @@ class PlansSpec extends AnyFunSuite {
     val finalPlan = pairs.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     val exchanges = "Exchange hashpartitioning\\(id_a".r.findAllIn(finalPlan).size
     assert(exchanges == 1, s"expected one pair exchange:\n$finalPlan")
+  }
+
+  test("dedup_incremental candidate pairs keep the session's shuffle width under AQE") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(width > 1, "the check needs more than one shuffle partition")
+    val verdicts = graft.queries.TextQueries.incrementalVerdicts(graft.ops.Parallelism.ensure(
+      graft.queries.Tables.table(spark, sf, "documents")))
+    assert(verdicts.queryExecution.toRdd.count() > 0)
+    val helper = new AdaptiveSparkPlanHelper {}
+    def pairStage(s: ShuffleQueryStageExec) = s.shuffle.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.expressions.collect { case a: Attribute => a.name } == Seq("id_a", "id_b")
+      case _ => false
+    }
+    val plan = verdicts.queryExecution.executedPlan
+    val stages = helper.collect(plan) { case s: ShuffleQueryStageExec if pairStage(s) => s }
+    assert(stages.size == 1, s"expected one pair exchange:\n$plan")
+    assert(stages.head.shuffle.numPartitions == width, s"pair exchange narrowed:\n$plan")
+    val reads = helper.collect(plan) {
+      case r: AQEShuffleReadExec if r.child.isInstanceOf[ShuffleQueryStageExec] &&
+          pairStage(r.child.asInstanceOf[ShuffleQueryStageExec]) => r.partitionSpecs.size
+    }
+    assert(reads.forall(_ == width), s"candidate pairs coalesced to $reads partitions:\n$plan")
   }
 
   test("semantic-dedup candidate generation is a bucket equi-join, never a nested loop") {

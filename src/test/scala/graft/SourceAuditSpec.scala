@@ -32,7 +32,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the DuckDB MinHash signature (`MIN(h1 + j * h2)`) is generated once,
   *    in `MinhashSql`, and the Spark one is built once, in `Dedup`, by the
   *    native kernel, so a change to k or the hashing has one place to go
-  *    on each side.
+  *    on each side; likewise the Spark LSH band join and the exact
+  *    Jaccard formula live only in `Dedup`.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
@@ -186,6 +187,17 @@ class SourceAuditSpec extends AnyFunSuite {
     } yield f
     assert(copies.isEmpty,
       "declarative h1 + j*h2 MinHash minimum in: " + copies.mkString(", "))
+  }
+
+  test("the LSH band join key and the exact Jaccard denominator live only in operators/Dedup.scala") {
+    Seq("band_hash join key" -> "\"band_hash\"".r,
+        "size(a) + size(b) - inter Jaccard denominator" -> """size\([^)]*\)\s*\+\s*size\([^)]*\)\s*-""".r)
+      .foreach { case (what, pattern) =>
+        val sites = mainCodeHits(pattern)
+        assert(sites.nonEmpty && sites.forall(_._1.endsWith("/operators/Dedup.scala")),
+          s"every MinHash LSH caller composes Dedup.lshPairs / Dedup.jaccard; $what at: " +
+            sites.map(_._2).mkString(", "))
+      }
   }
 
   test("every driver-side action carries a '// bounded:' justification") {
