@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.graft.ColumnBridge
@@ -164,7 +164,9 @@ object Dedup {
     * downstream per-pair stage — the estimate screen, the verify joins, a
     * components edge checkpoint — would then run on one task. AQE cannot
     * see that per-row compute in the map-output bytes (the
-    * Parallelism.byRange trap); an explicit count it does not coalesce. */
+    * Parallelism.byRange trap); an explicit count it does not coalesce.
+    * Both phases of that distinct sit above the exchange, so a pair
+    * colliding in several bands crosses the shuffle once per band. */
   def lshPairs(left: DataFrame, right: DataFrame, geometries: Seq[(Int, Int)],
                pairIf: Column = col("id_a") < col("id_b")): DataFrame = {
     val tags = if (geometries.size > 1) Seq("bands", "rpb") else Nil
@@ -183,17 +185,7 @@ object Dedup {
       .join(banded(right, "id_b"), tags ++ Seq("band_idx", "band_hash"))
       .filter(pairIf)
       .select((tags ++ Seq("id_a", "id_b")).map(col): _*)
-    // Repeats dropped within each partition BEFORE the one exchange: a pair
-    // colliding in several bands would otherwise cross the shuffle once
-    // per band. The seen-set is capped (cleared when full), so memory stays
-    // bounded; the distinct above the exchange is what makes pairs unique.
-    val local = collisions.mapPartitions(dropRepeats)(Encoders.row(collisions.schema))
-    Parallelism.byHash(local, col("id_a"), col("id_b")).distinct()
-  }
-
-  private val dropRepeats: Iterator[Row] => Iterator[Row] = { rows =>
-    val seen = scala.collection.mutable.HashSet.empty[Row]
-    rows.filter { r => if (seen.size >= (1 << 16)) seen.clear(); seen.add(r) }
+    Parallelism.byHash(collisions, col("id_a"), col("id_b")).distinct()
   }
 
   /** Verify stage: exact Jaccard of two DISTINCT, SORTED sets. */
