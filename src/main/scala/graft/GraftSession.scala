@@ -25,8 +25,30 @@ import graft.plans.GraftFunctions
   * Extra session confs need no env passthrough: Spark reads every
   * `spark.*` JVM system property into the session's SparkConf, so
   * `JAVA_TOOL_OPTIONS=-Dspark.k=v` reaches any main.
+  *
+  * Generated code is compiled once per JVM, not once per session. Spark
+  * caches each Janino-compiled class by (classloader, source). Two
+  * defaults made every `newSession()` of a long-lived context (one session
+  * per job, as in perfbench's passes and [[graft.ops.MemoLaws]]) compile
+  * its classes again: 108–131 compiles and 1.6–3.2 s of a ~5 s perfbench
+  * pass, after the warm pass had compiled the same source.
+  *  - Artifact isolation gives each session its own executor classloader,
+  *    so the cache never hit across sessions. The engine adds no session
+  *    artifact (no jar, file or class at runtime; SourceAuditSpec pins
+  *    that), so isolation is off and every session shares the application
+  *    classloader.
+  *  - The cache held 100 entries, fewer than one pass uses, so even one
+  *    session cycled the LRU; see [[CodegenCacheEntries]].
   */
 object GraftSession {
+
+  /** Size of the JVM-wide generated-class cache, a static conf read once
+    * per JVM. Each distinct class is compiled twice, once on the driver and
+    * once in a task, under different classloaders. One perfbench pass
+    * takes 108–131 entries, and the seven perfbench units at sf0.001 about
+    * 240 (CodegenCacheSpec). 256 still left 10–13 recompiles per
+    * corpus_session pass; 1024 holds the working set with headroom. */
+  private val CodegenCacheEntries = 1024
 
   /** Apply graft's engine settings to a builder before `getOrCreate()`. */
   def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
@@ -36,6 +58,9 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // naive event timestamps read as UTC instants (oracle parity)
       .config("spark.sql.session.timeZone", "UTC")
+      // one classloader, so one generated-class cache, for every session
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
 
   /** Local session (tests, single-node runs): `local[cores]` with one
     * shuffle partition per core. */

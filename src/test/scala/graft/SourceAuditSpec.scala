@@ -22,6 +22,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    the marker (visible in review, greppable) or failing here;
   *  - sessions are built only by `GraftSession`, across main and test
   *    sources, so every entry point runs the same engine confs and rules;
+  *  - no code adds a session artifact (`addArtifact`, `addJar`,
+  *    `ADD JAR`), and the artifact-isolation and codegen-cache confs are
+  *    set only in `GraftSession`, which turns isolation off so that every
+  *    session shares one generated-class cache;
   *  - one way to memoize per session and one way to fuse a checkpoint:
   *    `ConcurrentHashMap` lives only in `SessionMemo` (plus the
   *    executor-side model singleton, which is not session-keyed), and
@@ -128,15 +132,36 @@ class SourceAuditSpec extends AnyFunSuite {
         outside.mkString(", "))
   }
 
-  /** Code (non-comment) lines under `src/main/scala` matching `pattern`,
-    * as (source path, "path:line"). */
-  private def mainCodeHits(pattern: scala.util.matching.Regex): Seq[(String, String)] =
+  /** Code (non-comment) lines under `dirs` matching `pattern`, as
+    * (source path, "path:line"). */
+  private def codeHits(pattern: scala.util.matching.Regex, dirs: String*): Seq[(String, String)] =
     for {
-      (f, lines) <- sourcesUnder("src/main/scala")
+      (f, lines) <- dirs.flatMap(sourcesUnder)
       flags = commentFlags(lines)
       (l, i) <- lines.zipWithIndex
       if !flags(i) && pattern.findFirstIn(l).isDefined
     } yield (f, s"$f:${i + 1}")
+
+  private def mainCodeHits(pattern: scala.util.matching.Regex): Seq[(String, String)] =
+    codeHits(pattern, "src/main/scala")
+
+  test("no session artifact is added, and the codegen-cache confs are set only in GraftSession.scala") {
+    // GraftSession turns artifact isolation off so that every session
+    // shares one classloader, and so one codegen cache; that loses nothing
+    // only while no code adds a jar, file or class to a session
+    val added = mainCodeHits("""\baddArtifacts?\b|\baddJar\b|(?i)\badd\s+jars?\b""".r)
+    assert(added.isEmpty,
+      "session artifact added (artifact isolation is off in GraftSession): " +
+        added.map(_._2).mkString(", "))
+    val allowed = Seq("/GraftSession.scala", "/SourceAuditSpec.scala")
+    Seq("spark.sql.artifact.isolation.enabled", "spark.sql.codegen.cache.maxEntries").foreach { conf =>
+      val sites = codeHits(java.util.regex.Pattern.quote(conf).r, "src/main/scala", "src/test/scala")
+      val outside = sites.filterNot(h => allowed.exists(h._1.endsWith))
+      assert(sites.exists(_._1.endsWith(allowed.head)) && outside.isEmpty,
+        s"$conf is one engine constant, set in GraftSession.configure; also set at: " +
+          outside.map(_._2).mkString(", "))
+    }
+  }
 
   test("ConcurrentHashMap appears only in SessionMemo.scala and ml/ModelStage.scala") {
     val hits = mainCodeHits("""\bConcurrentHashMap\b""".r)
