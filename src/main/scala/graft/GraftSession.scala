@@ -1,5 +1,8 @@
 package graft
 
+import java.lang.management.ManagementFactory
+
+import com.sun.management.HotSpotDiagnosticMXBean
 import org.apache.logging.log4j.Level
 import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
@@ -39,6 +42,10 @@ import graft.plans.GraftFunctions
   *    classloader.
   *  - The cache held 100 entries, fewer than one pass uses, so even one
   *    session cycled the LRU; see [[CodegenCacheEntries]].
+  *
+  * A local session sizes Spark's memory pages to its JVM's heap regions
+  * (see [[localPageBytes]]), so that the page every aggregate and sorter
+  * task allocates is an ordinary young-generation array.
   */
 object GraftSession {
 
@@ -49,6 +56,33 @@ object GraftSession {
     * 240 (CodegenCacheSpec). 256 still left 10–13 recompiles per
     * corpus_session pass; 1024 holds the working set with headroom. */
   private val CodegenCacheEntries = 1024
+
+  /** Tungsten page size for a session whose tasks run in this JVM (a
+    * `local` master): a quarter of a G1 heap region, so that no page is a
+    * humongous object; None off G1.
+    *
+    * Spark's default page is execution memory / cores / 16, rounded up to
+    * a power of two, which works out to 16 MB in a 2 GB, 4-core JVM.
+    * Every hash aggregate, sorter and shuffle sorter task allocates one
+    * page on its first row, however few rows it holds. G1 allocates an
+    * array of half a region or more (regions are 1 MB at a 2 GB heap)
+    * straight into the old generation, and once old-generation occupancy
+    * passes G1's concurrent-start threshold, each such allocation starts
+    * a marking cycle. Whether a JVM got there depended on its earlier heap sizing,
+    * so perfbench corpus_session JVMs ran in one of two modes: 9–15
+    * marking cycles in a 10-second run, or 62–64 with 8.3–10.3
+    * CPU-seconds per timed pass instead of 5.2–6.6. With quarter-region
+    * pages, ten runs spent 5.2–6.6 CPU-seconds in every pass after the
+    * first (5–6 marking cycles in the runs logged).
+    *
+    * A task's page table holds 8192 pages, so quarter-region pages still
+    * address 2048 regions: about the whole heap, as G1 sizes a region at
+    * about 1/2048 of it. */
+  private[graft] def localPageBytes: Option[Long] = {
+    val vm = ManagementFactory.getPlatformMXBean(classOf[HotSpotDiagnosticMXBean])
+    if (vm.getVMOption("UseG1GC").getValue != "true") None
+    else Some(vm.getVMOption("G1HeapRegionSize").getValue.toLong / 4)
+  }
 
   /** Apply graft's engine settings to a builder before `getOrCreate()`. */
   def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
@@ -86,6 +120,8 @@ object GraftSession {
   private def build(master: String, shufflePartitions: Int): SparkSession = {
     val b = configure(SparkSession.builder().master(master), shufflePartitions)
       .config("spark.ui.enabled", "false")
+    if (master == "local" || master.startsWith("local["))
+      localPageBytes.foreach(b.config("spark.buffer.pageSize", _))
     if (master.startsWith("local-cluster"))
       b.config("spark.executor.extraClassPath", ExecClasspath.absolute)
         .config("spark.executor.memory", ExecMem.resolve(master))
