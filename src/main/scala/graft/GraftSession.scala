@@ -12,8 +12,8 @@ import graft.plans.GraftFunctions
 
 /** The one SparkSession factory: every main, the test session and the
   * benchmark build their session here. A session comes out configured the
-  * way the engine expects — native expressions and optimizer rules
-  * registered ([[GraftFunctions.register]]), AQE with skew-join splitting
+  * way the engine expects — optimizer rules installed
+  * ([[GraftFunctions.register]]), AQE with skew-join splitting
   * on, nanosecond-parquet compatibility, UTC, and a shuffle-partition
   * default sized to the cluster instead of Spark's fixed 200 (AQE
   * coalesces downward from there at runtime). Logs run at WARN, with the
@@ -21,9 +21,9 @@ import graft.plans.GraftFunctions
   *
   * Existing sessions work too: apply [[configure]] to your own builder
   * (on a cluster, shuffle partitions ≈ 2-3× total executor cores is the
-  * standard start), and every `Tables.table` call registers the native
-  * functions lazily; the declarative fallbacks keep any un-registered
-  * session correct (just slower).
+  * standard start), and every `Tables.table` call installs the optimizer
+  * rules lazily. The native expressions need no registration: operators
+  * build them directly, so they resolve in any session.
   *
   * Extra session confs need no env passthrough: Spark reads every
   * `spark.*` JVM system property into the session's SparkConf, so

@@ -91,8 +91,9 @@ object Plans {
     sb.append(s"Auto-generated by `runMain graft.Plans` against `$dir`.\n")
     sb.append("Evidence for the scale design: filters/pruning reach the scan, small\n")
     sb.append("sides broadcast, generators stay shuffle-free, native kernels\n")
-    sb.append("(graft_cosine / graft_simhash / graft_sorted_intersect_count /\n")
-    sb.append("graft_hyperplane_buckets) appear in the hot paths.\n")
+    sb.append("(graft_cosine / graft_topk / graft_sorted_intersect_count /\n")
+    sb.append("graft_hyperplane_buckets, each built directly as a Catalyst\n")
+    sb.append("expression) appear in the hot paths.\n")
     headline.foreach { name =>
       sb.append(s"\n## $name\n\n```\n")
       sb.append(explain(spark, dir, name))

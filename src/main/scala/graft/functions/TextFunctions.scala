@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Text-analysis column functions for large-scale training-data curation:
   * tokenization, shingling, language-ID heuristics, quality scoring,
@@ -19,53 +20,27 @@ object TextFunctions {
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")
 
   /** Distinct character n-grams; texts shorter than n collapse to [text].
-    * Native one-pass kernel ([[graft.plans.CharNgrams]]) when
-    * constructible; the declarative `substr`-per-window form re-scans the
-    * string per gram (O(len²)/doc) and stays only as the fallback. */
+    * One-pass native kernel ([[graft.plans.CharNgrams]]); `n` must be
+    * >= 1. */
   def charShingles(text: Column, n: Int): Column =
     charNgrams(text, n, distinct = true)
 
   /** ALL character n-grams in order (duplicates kept) — the LM-training
-    * extraction. Same native/fallback split as [[charShingles]]. */
-  def charNgrams(text: Column, n: Int, distinct: Boolean): Column = {
-    val native =
-      try Some(org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.plans.CharNgrams(
-          org.apache.spark.sql.graft.ColumnBridge.expression(text), n, distinct)))
-      catch { case _: Throwable => None }
-    native.getOrElse {
-      val all = transform(sequence(lit(1), length(text) - (n - 1)),
-        i => text.substr(i, lit(n)))
-      when(length(text) >= n, if (distinct) array_distinct(all) else all)
-        .otherwise(array(text))
-    }
-  }
+    * extraction. */
+  def charNgrams(text: Column, n: Int, distinct: Boolean): Column =
+    ColumnBridge.column(graft.plans.CharNgrams(ColumnBridge.expression(text), n, distinct))
 
   /** Distinct word n-grams (space-joined); short docs collapse to the
-    * whole-token join. Native one-pass kernel
-    * ([[graft.plans.WordNgrams]]) when constructible; the declarative
-    * transform-per-window form interprets n lambdas per window and
-    * stays only as the fallback. */
+    * whole-token join. One-pass native kernel ([[graft.plans.WordNgrams]]);
+    * `n` must be >= 1. */
   def wordShingles(text: Column, n: Int): Column =
     wordNgrams(text, n, distinct = true)
 
   /** Word n-grams with occurrence control: `distinct = false` keeps every
     * occurrence in order (duplicate-n-gram-fraction counting), `true`
-    * gives the shingle SET form. Same native/fallback split. */
-  def wordNgrams(text: Column, n: Int, distinct: Boolean): Column = {
-    val native =
-      try Some(org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.plans.WordNgrams(
-          org.apache.spark.sql.graft.ColumnBridge.expression(text), n, distinct)))
-      catch { case _: Throwable => None }
-    native.getOrElse {
-      val ts = tokens(text)
-      val all = transform(sequence(lit(1), size(ts) - (n - 1)), i =>
-        concat_ws(" ", (0 until n).map(o => element_at(ts, i + o)): _*))
-      when(size(ts) >= n, if (distinct) array_distinct(all) else all)
-        .otherwise(array(concat_ws(" ", ts)))
-    }
-  }
+    * gives the shingle SET form. */
+  def wordNgrams(text: Column, n: Int, distinct: Boolean): Column =
+    ColumnBridge.column(graft.plans.WordNgrams(ColumnBridge.expression(text), n, distinct))
 
   /** Fraction of tokens found in `words` (0.0 for empty docs). */
   def wordlistRatio(text: Column, words: Seq[String]): Column =
@@ -162,9 +137,7 @@ object TextFunctions {
     * Catalyst formulation of canonical composition, so this is
     * unconditionally the native expression. */
   def normalizeNfc(text: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.plans.NormalizeNfc(
-        org.apache.spark.sql.graft.ColumnBridge.expression(text)))
+    ColumnBridge.column(graft.plans.NormalizeNfc(ColumnBridge.expression(text)))
 
   /** URL canonicalization for crawl-corpus dedup: drop the fragment,
     * strip utm_* tracking params (non-leading globally; a leading ?utm
@@ -197,13 +170,8 @@ object TextFunctions {
 
   /** Deterministic document fingerprint: position-weighted codepoint sum
     * (weight cycles 1..64). Order-sensitive — reordered text changes the
-    * fingerprint — yet exactly reproducible in any engine. */
+    * fingerprint — yet exactly reproducible in any engine. One-pass native
+    * kernel ([[graft.plans.Fingerprint64]]). */
   def fingerprint(text: Column): Column =
-    if (graft.plans.GraftFunctions.nativeAvailable)
-      call_function("graft_fingerprint", text)
-    else
-      aggregate(
-        transform(sequence(lit(1), length(text)),
-          i => (ascii(text.substr(i, lit(1))) * ((i - 1) % 64 + 1)).cast("long")),
-        lit(0L), (acc, x) => acc + x)
+    ColumnBridge.column(graft.plans.Fingerprint64(ColumnBridge.expression(text)))
 }

@@ -26,14 +26,13 @@ import graft.ops.Parallelism
   */
 object Dedup {
 
-  /** Intersection size of two DISTINCT, SORTED shingle arrays: sorted-merge
-    * native expression when registered (no per-pair hash-set allocation),
-    * `size(array_intersect(...))` otherwise. Exact integer either way, so
-    * swapping paths can never change a Jaccard oracle result. */
+  /** Intersection size of two DISTINCT, SORTED shingle arrays: the
+    * sorted-merge native expression ([[graft.plans.SortedIntersectCount]],
+    * no per-pair hash-set allocation). Exact integer, equal to
+    * `size(array_intersect(a, b))` on such inputs. */
   def sortedIntersectCount(a: Column, b: Column): Column =
-    if (graft.plans.GraftFunctions.nativeAvailable)
-      call_function("graft_sorted_intersect_count", a, b)
-    else size(array_intersect(a, b))
+    ColumnBridge.column(graft.plans.SortedIntersectCount(
+      ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** Canonical bag-of-words key: sorted distinct tokens, space-joined.
     * Invariant to token order/repetition — catches shuffled/duplicated
@@ -258,27 +257,12 @@ object Dedup {
     (withKeep, comps)
   }
 
-  /** 64-bit SimHash per row. Native path: one per-row expression
-    * ([[graft.plans.SimHash64]]) — a pure narrow map, zero shuffles, so the
-    * sketch rides the document scan. Fallback (no registration): relational
-    * explode → 64 conditional-sum aggregates → bit reassembly (one shuffle). */
+  /** 64-bit SimHash per row: one per-row native expression
+    * ([[graft.plans.SimHash64]], splitmix64 token hashes) — a pure narrow
+    * map, zero shuffles, so the sketch rides the document scan. */
   def simhash64(df: DataFrame, idCol: String, tokensCol: Column): DataFrame =
-    if (graft.plans.GraftFunctions.nativeAvailable)
-      df.select(col(idCol), call_function("graft_simhash", tokensCol).as("simhash"))
-    else simhash64Relational(df, idCol, tokensCol)
-
-  /** Relational SimHash fallback (engine-builtin hashing via xxhash64). */
-  def simhash64Relational(df: DataFrame, idCol: String, tokensCol: Column): DataFrame = {
-    val hashed = df.select(col(idCol), explode(tokensCol).as("_tok"))
-      .select(col(idCol), xxhash64(lit(0), col("_tok")).as("_th"))
-    val votes = (0 until 64).map(j =>
-      sum(when((shiftright(col("_th"), j) % 2 =!= 0), 1).otherwise(-1)).as(s"_v$j"))
-    val grouped = hashed.groupBy(col(idCol)).agg(votes.head, votes.tail: _*)
-    val bits = (0 until 64).map(j =>
-      when(col(s"_v$j") > 0, shiftleft(lit(1L), j)).otherwise(lit(0L)))
-    grouped.withColumn("simhash", bits.reduce(_.bitwiseOR(_)))
-      .select(col(idCol), col("simhash"))
-  }
+    df.select(col(idCol),
+      ColumnBridge.column(graft.plans.SimHash64(ColumnBridge.expression(tokensCol))).as("simhash"))
 
   // ── Bottom-k (KMV) set sketch ──────────────────────────────────────────
 

@@ -3,9 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** IVF (inverted-file) approximate nearest neighbour — the coarse-
-  * quantizer scale path next to [[Similarity.lshTopK]]: k-means centroids
+  * quantizer scale path next to [[Similarity.lshTopKPlanes]]: k-means centroids
   * partition the corpus into `nLists` inverted lists; a query probes its
   * `nProbe` nearest centroids and ranks exactly within those lists only.
   *
@@ -130,35 +131,14 @@ object Ivf {
     centers
   }
 
-  /** Squared L2 distance from a float-array column to a literal center. */
-  private def distSq(vec: Column, center: Array[Double]): Column =
-    aggregate(
-      zip_with(vec, array(center.map(lit): _*), (x, c) => {
-        val d = x.cast("double") - c
-        d * d
-      }),
-      lit(0.0), (acc, v) => acc + v)
-
-  /** The `nProbe` nearest centroid ids for a vector column. Native fused
-    * kernel when constructible (centroids baked into ONE expression —
-    * O(1) planning, tight primitive loop); declarative argmin over
-    * literal-struct arrays otherwise (identical order: distance asc, id
-    * asc). The declarative form's nLists×dim literal tree costs seconds
-    * of Catalyst analysis per query — measured 5.9s planning at
-    * nLists=32/dim=64 — so the native path matters even before rows flow. */
-  private def probes(vec: Column, centers: Array[Array[Double]], nProbe: Int): Column = {
-    val native =
-      try Some(org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.plans.CentroidProbes(
-          org.apache.spark.sql.graft.ColumnBridge.expression(vec), centers, nProbe)))
-      catch { case _: Throwable => None }
-    native.getOrElse {
-      val scored = array(centers.zipWithIndex.map { case (ctr, j) =>
-        struct(distSq(vec, ctr).as("d"), lit(j).as("list_id"))
-      }: _*)
-      transform(slice(array_sort(scored), 1, nProbe), s => s.getField("list_id"))
-    }
-  }
+  /** The `nProbe` nearest centroid ids for a vector column (distance
+    * asc, id asc): one fused native kernel with the centroids baked in —
+    * O(1) planning and a tight primitive loop. (An argmin over literal
+    * structs costs seconds of Catalyst analysis per query — measured 5.9 s
+    * planning at nLists=32/dim=64.) `nProbe` must lie in [1, #centers]. */
+  private def probes(vec: Column, centers: Array[Array[Double]], nProbe: Int): Column =
+    ColumnBridge.column(
+      graft.plans.CentroidProbes(ColumnBridge.expression(vec), centers, nProbe))
 
   /** Nearest-centroid id as a pure expression. */
   private def nearestList(vec: Column, centers: Array[Array[Double]]): Column =

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Product quantization (PQ) — the codebook compression step of a
   * billion-vector ANN index (Jégou et al., "Product Quantization for
@@ -17,7 +18,7 @@ import org.apache.spark.sql.functions._
   *  - codebooks train on a BOUNDED hash-spread sample (same rationale as
   *    [[Ivf.build]]) with the same deterministic driver-local Lloyd;
   *  - encoding is a narrow argmin expression per subspace riding the
-  *    scan (fused [[graft.plans.CentroidProbes]] kernel when available)
+  *    scan (the fused [[graft.plans.CentroidProbes]] kernel)
   *    — no shuffle, no model object;
   *  - ADC is fully relational: codes explode to (id, sub, code) rows —
   *    nSub rows per vector — and meet the broadcast lookup table in an
@@ -52,30 +53,11 @@ object Pq {
     Codebooks(nSub, subDim, centers)
   }
 
-  /** Squared L2 from a (sub)vector column to a literal center. */
-  private def distSq(vec: Column, center: Array[Double]): Column =
-    aggregate(
-      zip_with(vec, array(center.map(lit): _*), (x, c) => {
-        val d = x.cast("double") - c
-        d * d
-      }),
-      lit(0.0), (acc, v) => acc + v)
-
-  /** Nearest-centroid code for one subspace (fused kernel when available;
-    * declarative argmin fallback with identical distance-asc, id-asc order). */
-  private def nearestSub(sub: Column, centers: Array[Array[Double]]): Column = {
-    val native =
-      try Some(org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.plans.CentroidProbes(
-          org.apache.spark.sql.graft.ColumnBridge.expression(sub), centers, 1)))
-      catch { case _: Throwable => None }
-    native.map(a => element_at(a, 1)).getOrElse {
-      val scored = array(centers.zipWithIndex.map { case (ctr, j) =>
-        struct(distSq(sub, ctr).as("d"), lit(j).as("idx"))
-      }: _*)
-      element_at(transform(slice(array_sort(scored), 1, 1), s => s.getField("idx")), 1)
-    }
-  }
+  /** Nearest-centroid code for one subspace (the fused
+    * [[graft.plans.CentroidProbes]] kernel: distance asc, id asc). */
+  private def nearestSub(sub: Column, centers: Array[Array[Double]]): Column =
+    element_at(ColumnBridge.column(
+      graft.plans.CentroidProbes(ColumnBridge.expression(sub), centers, 1)), 1)
 
   /** Append the PQ code column: array of nSub small ints, a pure narrow
     * map over the scan. */
@@ -85,9 +67,8 @@ object Pq {
       nearestSub(slice(col(vecCol), s * cb.subDim + 1, cb.subDim), cb.centers(s))
     }: _*))
 
-  /** Squared L2 between two array COLUMNS (query subvector × centroid) —
-    * the same left fold as the literal-center [[distSq]], so the two
-    * forms are bit-identical. */
+  /** Squared L2 between two array COLUMNS (query subvector × centroid),
+    * a left-to-right double fold. */
   private def distSqCols(vec: Column, center: Column): Column =
     aggregate(
       zip_with(vec, center, (x, c) => {

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Embedding similarity search: exact brute-force cosine top-k (broadcast
   * the query set against a distributed candidate scan) and an LSH-bucketed
@@ -10,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: brute-force is a broadcast-nested-loop over the candidate
   * scan — linear in corpus size, no shuffle of the big side, and the top-k
-  * window partitions by query id (tiny partitions). The LSH path turns the
+  * is a bounded-heap aggregate per query id. The LSH path turns the
   * all-pairs problem into an equi-join on bucket id: one shuffle keyed by
   * bucket, candidate work proportional to bucket occupancy. Stand-in for
   * the reference's AdaFace embedding similarity
@@ -29,13 +30,12 @@ object Similarity {
       lit(0.0), (acc, v) => acc + v))
 
   /** Cosine similarity, 0.0 when either norm is 0 (reference's missing-
-    * input default, common/transform/similarity_op.py:16-21). Uses the
-    * native codegen expression ([[graft.plans.CosineSimilarity]], same
-    * left-fold math → bit-identical results) when a session has it
-    * registered; falls back to the declarative HOF form otherwise. */
+    * input default, common/transform/similarity_op.py:16-21): the native
+    * codegen expression [[graft.plans.CosineSimilarity]], whose left-fold
+    * math is bit-identical to [[cosineHof]]. */
   def cosine(a: Column, b: Column): Column =
-    if (graft.plans.GraftFunctions.nativeAvailable) call_function("graft_cosine", a, b)
-    else cosineHof(a, b)
+    ColumnBridge.column(graft.plans.CosineSimilarity(
+      ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** Declarative HOF cosine (the documented-fold reference form). */
   def cosineHof(a: Column, b: Column): Column = {
@@ -46,27 +46,20 @@ object Similarity {
   }
 
   /** Top-k `(qid, rank, id, sim)` rows from scored pairs, ties broken by
-    * id asc. Native path: the [[graft.plans.TopKAgg]] bounded-heap
-    * aggregate — a sort-free O(n log k) single pass whose map-side partial
-    * ships one k-entry buffer per query per partition and needs no Window
-    * node (the window form, even with Spark's InferWindowGroupLimit
-    * pruning, fully sorts every scored row locally before the limit).
-    * Fallback: `row_number()` window (identical output —
-    * DedupSimilaritySpec equivalence test). */
+    * id asc: the [[graft.plans.TopKAgg]] bounded-heap aggregate — a
+    * sort-free O(n log k) single pass whose map-side partial ships one
+    * k-entry buffer per query per partition and needs no Window node (the
+    * window form, even with Spark's InferWindowGroupLimit pruning, fully
+    * sorts every scored row locally before the limit). */
   def rankTopK(paired: DataFrame, k: Int,
                qidCol: String = "qid", idCol: String = "vec_id"): DataFrame =
-    if (graft.plans.GraftFunctions.nativeAvailable)
-      paired.groupBy(qidCol)
-        .agg(call_function("graft_topk", col("sim"), col(idCol), lit(k)).as("topk"))
-        .select(col(qidCol), posexplode(col("topk")).as(Seq("pos", "entry")))
-        .select(col(qidCol), (col("pos") + 1).cast("long").as("rank"),
-          col("entry.id").as(idCol), col("entry.score").as("sim"))
-    else {
-      val w = Window.partitionBy(qidCol).orderBy(col("sim").desc, col(idCol).asc)
-      paired.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col(qidCol), col("rank").cast("long").as("rank"), col(idCol), col("sim"))
-    }
+    paired.groupBy(qidCol)
+      .agg(ColumnBridge.column(graft.plans.TopKAgg(
+        ColumnBridge.expression(col("sim")), ColumnBridge.expression(col(idCol)),
+        ColumnBridge.expression(lit(k))).toAggregateExpression()).as("topk"))
+      .select(col(qidCol), posexplode(col("topk")).as(Seq("pos", "entry")))
+      .select(col(qidCol), (col("pos") + 1).cast("long").as("rank"),
+        col("entry.id").as(idCol), col("entry.score").as("sim"))
 
   /** Exact top-k neighbors for each query vector (excluding self):
     * broadcast queries × candidate scan → cosine → bounded-heap rank. */
@@ -112,12 +105,6 @@ object Similarity {
     rankTopK(rer, k, "qid", idCol)
   }
 
-  /** Deterministic random hyperplanes (seeded Gaussian), as literal arrays. */
-  def hyperplanes(nPlanes: Int, dim: Int, seed: Long = 42L): Seq[Array[Double]] = {
-    val rng = new scala.util.Random(seed)
-    Seq.fill(nPlanes)(Array.fill(dim)(rng.nextGaussian()))
-  }
-
   /** Oracle-replayable hyperplanes: component (t,j,i) is the high 60 bits
     * of md5("salt:t:j:i") as a long — EXACT in SQL text, so an external
     * engine regenerates the planes bit-for-bit and replays the buckets.
@@ -143,38 +130,18 @@ object Similarity {
     md5PlaneInts(nPlanes, nTables, dim, salt).map(_.map(_.map(h =>
       h.toDouble / (1L << 60).toDouble * 2.0 - 1.0)))
 
-  /** Hyperplane count sized for a target mean bucket occupancy — the
-    * 100 TB depth lever the 20× scale probe quantifies: with a FIXED
+  /** LSH hyperplane count sized for a target mean bucket occupancy —
+    * the 100 TB depth lever the 20× scale probe quantifies: with a FIXED
     * plane count, occupancy grows with the corpus and bucket-join
     * candidate work approaches n²/2^planes; each extra plane halves
-    * occupancy, so planes must grow with log₂(n). Sizing uses the
-    * plan-statistics row estimate (stats, never a count pass — the
-    * [[graft.operators.Pq.adcRerankTopK]] shortlist pattern; the
-    * estimate only steers, an overestimate merely deepens the index).
-    * Driver-side sizing only — no libm value ever reaches the data
-    * plane, so oracle replays are unaffected when the chosen depth is
-    * inlined into a generated oracle. */
-  def autoPlanes(df: DataFrame, targetOccupancy: Long = 64L,
-                 minPlanes: Int = 8, maxPlanes: Int = 24): Int = {
-    require(targetOccupancy > 0 && minPlanes >= 1 && maxPlanes >= minPlanes)
-    val stats = df.queryExecution.optimizedPlan.stats
-    val defaultRow = math.max(1, df.schema.map(_.dataType.defaultSize).sum)
-    val est = stats.rowCount.map(_.toLong)
-      .getOrElse((stats.sizeInBytes / defaultRow).toLong).max(1L)
-    val p = math.ceil(math.log(est.toDouble / targetOccupancy.toDouble) /
-      math.log(2.0)).toInt
-    math.min(maxPlanes, math.max(minPlanes, p))
-  }
-
-  /** [[autoPlanes]] from a KNOWN exact count — the oracle-replayable
-    * depth rule the REGISTERED queries default to: planes = the smallest
-    * p in [minPlanes, maxPlanes] with targetOccupancy·2^p ≥ n. Pure
-    * integer doubling, no libm — an external engine reproduces the
-    * chosen depth from the same COUNT(*) with no last-ulp ambiguity
-    * (ceil(log2(x)) in floats can differ across engines exactly at the
-    * power-of-two boundaries this rule lands on). Costs one count pass
-    * at query build; pipelines that cannot afford it use the
-    * plan-statistics [[autoPlanes]] with the same clamps. */
+    * occupancy, so planes must grow with log₂(n). From a KNOWN exact
+    * count n: planes = the smallest p in [minPlanes, maxPlanes] with
+    * targetOccupancy·2^p ≥ n. Pure integer doubling, no libm — an
+    * external engine reproduces the chosen depth from the same COUNT(*)
+    * with no last-ulp ambiguity (ceil(log2(x)) in floats can differ
+    * across engines exactly at the power-of-two boundaries this rule
+    * lands on). Costs one count pass at query build ([[corpusCount]]
+    * memoizes it per session). */
   def autoPlanesExact(n: Long, targetOccupancy: Long = 64L,
                       minPlanes: Int = 8, maxPlanes: Int = 24): Int = {
     require(n >= 0 && targetOccupancy > 0 && minPlanes >= 1 &&
@@ -200,54 +167,23 @@ object Similarity {
   def corpusCount(df: DataFrame): Long =
     countMemo(df.sparkSession, df.queryExecution.analyzed.canonicalized)(df.count())
 
-  /** LSH bucket id: sign bit per hyperplane packed into a long. */
-  def hyperplaneBucket(vec: Column, planes: Seq[Array[Double]]): Column =
-    planes.zipWithIndex.map { case (p, j) =>
-      val planeCol = array(p.map(lit): _*)
-      when(dot(vec, planeCol) >= 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
-    }.reduce(_.bitwiseOR(_))
-
   /** Multi-table hyperplane bucketing: each row explodes into `nTables`
     * (table_idx, bucket) keys, one independent plane set per table —
     * classic (L tables × k bits) LSH. A neighbor is a candidate if ANY
     * table agrees on all k sign bits, which recovers the recall a single
-    * table loses when one hyperplane slices through a cluster. Native
-    * fused expression when available; declarative per-table dots
-    * otherwise (identical fold math → identical buckets). */
-  private def tableBuckets(vec: Column, planeMatrix: Array[Array[Array[Double]]]): Column = {
-    val native =
-      try Some(org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.plans.HyperplaneBuckets(
-          org.apache.spark.sql.graft.ColumnBridge.expression(vec), planeMatrix)))
-      catch { case _: Throwable => None }
-    native.getOrElse(
-      array(planeMatrix.indices.map { t =>
-        hyperplaneBucket(vec, planeMatrix(t).toSeq)
-      }: _*))
-  }
-
-  private def seededPlaneMatrix(nPlanes: Int, nTables: Int, dim: Int): Array[Array[Array[Double]]] = {
-    require(dim > 0, "embedding dimension must be positive")
-    Array.tabulate(nTables)(t =>
-      hyperplanes(nPlanes, dim, seed = 42L + t).map(_.clone()).toArray)
-  }
+    * table loses when one hyperplane slices through a cluster. One fused
+    * native expression ([[graft.plans.HyperplaneBuckets]]). */
+  private def tableBuckets(vec: Column, planeMatrix: Array[Array[Array[Double]]]): Column =
+    ColumnBridge.column(
+      graft.plans.HyperplaneBuckets(ColumnBridge.expression(vec), planeMatrix))
 
   /** Approximate top-k: candidates restricted to rows sharing any LSH
     * table bucket with the query, then exact cosine rank over the
     * deduplicated candidate set. One shuffle keyed by (table, bucket);
-    * candidate work scales with bucket occupancy, not corpus².
-    * `dim` is the embedding dimension — the hyperplanes are drawn at that
-    * length, and the native kernel rejects mismatched vectors instead of
-    * silently truncating the bucket signal. */
-  def lshTopK(candidates: DataFrame, queries: DataFrame, k: Int, nPlanes: Int,
-              dim: Int, nTables: Int = 4,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame =
-    lshTopKPlanes(candidates, queries, k, seededPlaneMatrix(nPlanes, nTables, dim),
-      idCol, vecCol, qidCol, qvecCol)
-
-  /** [[lshTopK]] with an explicit plane matrix — pass [[md5Planes]] for a
-    * fully oracle-replayable bucket function. */
+    * candidate work scales with bucket occupancy, not corpus². Pass
+    * [[md5Planes]] at the corpus dimension for a fully oracle-replayable
+    * bucket function; the native kernel rejects vectors of another
+    * length instead of silently truncating the bucket signal. */
   def lshTopKPlanes(candidates: DataFrame, queries: DataFrame, k: Int,
                     planeMatrix: Array[Array[Array[Double]]],
                     idCol: String = "vec_id", vecCol: String = "embedding",

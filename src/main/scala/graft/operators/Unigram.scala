@@ -421,51 +421,6 @@ object Unigram {
     dps.reduce(_ unionByName _)
   }
 
-  /** Fused forward+backward pass: both DP directions in ONE unrolled
-    * loop, one combined frame (and ONE localCheckpoint job) per step
-    * instead of two. Step i's rows carry `dir` ('f'/'b'); the piece join
-    * keys on the direction's own substring (prefix span ending at i vs
-    * suffix span of length i) inside one equi-join, and the per-(w, dir)
-    * pivot/add-chain is exactly [[forward]]'s/[[backward]]'s — values
-    * are BIT-IDENTICAL to the separate passes (spec-pinned), only the
-    * job count changes. Motivation: the full-EM trainer's cost is plan
-    * time — ~60 driver-orchestrated checkpoint jobs for 3 rounds × (2
-    * directions × (1 seed + maxWordLen steps)) — and fusing directions
-    * halves the DP job count (26.5 s cold plan measured before, r13).
-    * Returns (fwd, bwd) views of the shared checkpointed frames with
-    * [[forward]]'s/[[backward]]'s exact schemas. */
-  def forwardBackward(words: DataFrame, pieces: DataFrame,
-                      maxWordLen: Int, maxPieceLen: Int): (DataFrame, DataFrame) = {
-    var dps = Vector(words
-      .select(col("w"), col("wc"), lit(0).as("idx"), lit(1.0).as("v"))
-      .withColumn("dir", explode(array(lit("f"), lit("b"))))
-      .localCheckpoint())
-    for (i <- 1 to maxWordLen) {
-      val lo = math.max(0, i - maxPieceLen)
-      val prev = dps.slice(lo, i).reduce(_ unionByName _)
-      val terms = prev.filter(length(col("w")) >= i)
-        .join(pieces,
-          col("piece") === when(col("dir") === "f",
-              substring(col("w"), col("idx") + 1, lit(i) - col("idx")))
-            .otherwise(substring(col("w"),
-              length(col("w")) - lit(i) + 1, lit(i) - col("idx"))))
-        .select(col("w"), col("wc"), col("dir"),
-          (lit(i) - col("idx")).as("d"), (col("v") * col("p")).as("v"))
-      val aggs = (1 to maxPieceLen)
-        .map(d => max(when(col("d") === d, col("v"))).as(s"t$d"))
-      dps = dps :+ terms.groupBy("w", "wc", "dir").agg(aggs.head, aggs.tail: _*)
-        .select(col("w"), col("wc"), col("dir"), lit(i).as("idx"),
-          (1 to maxPieceLen).map(d => coalesce(col(s"t$d"), lit(0.0)))
-            .reduce(_ + _).as("v"))
-        .localCheckpoint()
-    }
-    val all = dps.reduce(_ unionByName _)
-    (all.filter(col("dir") === "f")
-       .select(col("w"), col("wc"), col("idx").as("pos"), col("v").as("a")),
-     all.filter(col("dir") === "b")
-       .select(col("w"), col("wc"), col("idx").as("r"), col("v").as("b")))
-  }
-
   /** Quantized expected piece counts — the full-EM E-step: for every
     * span (i−d, i] of every word whose substring is a vocabulary piece,
     * the posterior mass routed through that span is

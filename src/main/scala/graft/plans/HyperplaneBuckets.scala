@@ -13,9 +13,10 @@ import org.apache.spark.sql.types._
   * reads the vector once — the bucket computation is the per-row hot loop
   * of LSH indexing at corpus scale.
   *
-  * Same math as the declarative form (left-to-right double fold per
-  * plane, `>= 0` sign) → identical buckets. The plane matrix is baked
-  * into the expression (deterministic seeded Gaussians), not a child.
+  * Each plane is a left-to-right double fold with a `>= 0` sign, the
+  * bucket function the DuckDB oracles replay. The plane matrix is baked
+  * into the expression (the md5-derived `Similarity.md5Planes`), not a
+  * child.
   */
 case class HyperplaneBuckets(child: Expression, planes: Array[Array[Array[Double]]])
   extends UnaryExpression with CodegenFallback {
@@ -32,12 +33,11 @@ case class HyperplaneBuckets(child: Expression, planes: Array[Array[Array[Double
     val arr = input.asInstanceOf[ArrayData]
     val n = arr.numElements()
     // Fail loudly on a dimension mismatch: truncating would silently
-    // hash into wrong buckets (the declarative fallback null-pads
-    // instead, so the two paths would diverge).
+    // hash into wrong buckets.
     if (planes.nonEmpty && planes(0).nonEmpty && planes(0)(0).length != n)
       throw new IllegalArgumentException(
         s"graft_hyperplane_buckets: embedding dim $n != hyperplane dim ${planes(0)(0).length}; " +
-          "pass the corpus dimension to Similarity.lshTopK")
+          "build the planes at the corpus dimension (Similarity.md5Planes)")
     val vec = new Array[Double](n)
     var i = 0
     while (i < n) { vec(i) = arr.getFloat(i).toDouble; i += 1 }

@@ -11,8 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * tokenize on single spaces (empties dropped), emit every `n`-token
   * window joined with `" "`; `distinct = true` keeps first occurrences
   * (`array_distinct` semantics). Docs with fewer than `n` tokens
-  * collapse to `[all tokens joined]` — the convention of the
-  * declarative form in [[graft.functions.TextFunctions.wordShingles]].
+  * collapse to `[all tokens joined]` — the shingling convention of
+  * [[graft.functions.TextFunctions.wordShingles]].
   *
   * Replaces `transform(sequence(1, size(ts)-n+1), i -> concat_ws(" ",
   * element_at(ts, i), …))`, which materializes the token array, then

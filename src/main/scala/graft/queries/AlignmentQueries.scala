@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.queries.OracleSql.toksSql
 
 /** Post-training (SFT / RLHF) data-prep queries — the steps between a
   * curated corpus and a fine-tuning run: chat-template rendering with
@@ -17,8 +18,6 @@ import graft.functions.TextFunctions._
   */
 object AlignmentQueries {
   import Tables.table
-
-  private val toksSql = "list_filter(string_split(text, ' '), t -> t <> '')"
 
   // ── chat_template ───────────────────────────────────────────────────────
 

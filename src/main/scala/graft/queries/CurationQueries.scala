@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.queries.OracleSql.toksSql
 import graft.streaming.EventStream
 
 /** Corpus-curation queries a training-data pipeline runs between ingest and
@@ -15,8 +16,6 @@ import graft.streaming.EventStream
   */
 object CurationQueries {
   import Tables.table
-
-  private val toksSql = "list_filter(string_split(text, ' '), t -> t <> '')"
 
   /** PII scrub over text with deterministically synthesized PII (the
     * corpus itself is clean, so both sides inject `user<id>@example.com`

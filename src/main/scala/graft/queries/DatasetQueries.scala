@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
 import graft.operators.{Components, Dedup, Similarity}
+import graft.queries.OracleSql.{dotSql, normSql, toksSql, stopListSql}
 
 /** Dataset-level curation capabilities: semantic (embedding) dedup at
   * corpus scale, quality-based duplicate-cluster representative selection,
@@ -14,13 +15,6 @@ import graft.operators.{Components, Dedup, Similarity}
   */
 object DatasetQueries {
   import Tables.table
-
-  private val dotSql = (a: String, b: String) =>
-    s"list_reduce([CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE) for i in generate_series(1, len($a))], (x, y) -> x + y)"
-  private val normSql = (a: String) =>
-    s"sqrt(list_reduce([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in $a], (p, q) -> p + q))"
-  private val toksSql = "list_filter(string_split(text, ' '), t -> t <> '')"
-  private val stopListSql = "['the','a','an','of','and','to','in','is','it','for']"
 
   // ── dedup_semantic ──────────────────────────────────────────────────────
 

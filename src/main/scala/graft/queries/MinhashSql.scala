@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.queries.OracleSql.toksSql
+
 /** DuckDB replay of the md5 MinHash-LSH family ([[graft.operators.Dedup]]'s
   * replayable path), written once: the word-bigram shingle set, the md5
   * `h1`/`h2` pair per shingle, the k-slot `MIN(h1 + j·h2)` signature, the
@@ -65,8 +67,6 @@ private[queries] object MinhashSql {
   def trueJaccard(a: String, b: String): String =
     s"""CAST(len(list_intersect($a.sh, $b.sh)) AS DOUBLE) /
                CAST(len($a.sh) + len($b.sh) - len(list_intersect($a.sh, $b.sh)) AS DOUBLE)"""
-
-  private val toksSql = "list_filter(string_split(text, ' '), t -> t <> '')"
 
   /** Replay of `Dedup.nearDupClusters` over `documents`, ending in
     * `wk(doc_id, source, text, toks, keep_id)` (every doc with its exact

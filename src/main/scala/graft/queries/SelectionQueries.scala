@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
 import graft.operators.Similarity
+import graft.queries.OracleSql.{dotSql, normSql, toksSql, stopListSql}
 
 /** Data-SELECTION capabilities: the decisions a training-data pipeline makes
   * about WHICH documents/vectors to keep and how to weight them — topic
@@ -26,13 +27,6 @@ import graft.operators.Similarity
   */
 object SelectionQueries {
   import Tables.table
-
-  private val dotSql = (a: String, b: String) =>
-    s"list_reduce([CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE) for i in generate_series(1, len($a))], (x, y) -> x + y)"
-  private val normSql = (a: String) =>
-    s"sqrt(list_reduce([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in $a], (p, q) -> p + q))"
-  private val toksSql = "list_filter(string_split(text, ' '), t -> t <> '')"
-  private val stopListSql = "['the','a','an','of','and','to','in','is','it','for']"
 
   // ── shared stage builders ───────────────────────────────────────────────
 

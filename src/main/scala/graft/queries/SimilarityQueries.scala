@@ -3,17 +3,13 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.queries.OracleSql.{dotSql, normSql}
 
 /** Embedding similarity-search capability queries over `embeddings`.
   * Cosine math is a documented left-fold in double precision, so the
   * DuckDB oracle replays it bit-exactly with list_reduce. */
 object SimilarityQueries {
   import Tables.table
-
-  private val dotSql = (a: String, b: String) =>
-    s"list_reduce([CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE) for i in generate_series(1, len($a))], (x, y) -> x + y)"
-  private val normSql = (a: String) =>
-    s"sqrt(list_reduce([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in $a], (p, q) -> p + q))"
 
   /** Exact brute-force cosine top-10 per probe vector (broadcast probes). */
   val cosineTopK = QueryDef("cosine_topk",

@@ -18,9 +18,11 @@ object Tables {
     * [[graft.operators.Similarity.corpusCount]] memo hits across queries
     * — a Verify/Bench session invoking several auto-depth stages pays ONE
     * count job for the shared corpus instead of one per stage. Safe for
-    * the read-only testdata contract; frames are immutable and the memo
-    * is bounded by #LIVE sessions × #tables ([[graft.ops.SessionMemo]]
-    * drops a stopped session's entries). */
+    * the read-only testdata contract; frames are immutable. The memo holds
+    * one entry per (session, table) for as long as the SparkContext runs:
+    * [[graft.ops.SessionMemo]] drops entries only when the context stops,
+    * so every `newSession()` that reads a table keeps its frames alive
+    * until then. */
   private val frames = new graft.ops.SessionMemo[String, DataFrame]
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
@@ -36,7 +38,8 @@ object Tables {
     // The ns-epoch view of a naive timestamp is its UTC reading (DuckDB's
     // epoch_ns does the same), so the NTZ→instant cast must run under UTC.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // Native expressions (graft_cosine) into the harness-provided session.
+    // Optimizer rules (IntersectCountRewrite, GateHoist) into the
+    // harness-provided session.
     graft.plans.GraftFunctions.register(spark)
     // NOTE on input parallelism: the driver testdata is one file with ONE
     // row group per table (the atomic split unit), so scan-rooted narrow

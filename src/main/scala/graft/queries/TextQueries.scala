@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
 import graft.operators.Dedup
+import graft.queries.OracleSql.{toksSql, stopListSql}
 
 /** Training-data text-analysis + dedup capability queries over `documents`.
   * All DuckDB-oracle-backed — MinHash/SimHash run their md5-keyed
@@ -14,9 +15,6 @@ import graft.operators.Dedup
   */
 object TextQueries {
   import Tables.table
-
-  private val stopListSql = "['the','a','an','of','and','to','in','is','it','for']"
-  private val toksSql = "list_filter(string_split(text, ' '), t -> t <> '')"
 
   /** Token counting: whitespace tokens + a BPE-ish regex segmentation
     * (letter runs / digit runs / single non-space symbols — the cheap

@@ -4,12 +4,14 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Bridge to the package-private Column <-> Expression conversions, for
-  * wiring graft's native Catalyst expressions into the DataFrame API when
-  * the expression carries non-column parameters (e.g. a baked-in plane
-  * matrix) and therefore can't go through the function registry. Living
-  * in `org.apache.spark.sql` is the standard technique extension
-  * libraries use to reach `private[sql]` surface. */
+/** Bridge to the package-private Column <-> Expression conversions: the
+  * one way graft's native Catalyst expressions enter the DataFrame API.
+  * Each operator builds its kernel as an expression over the argument
+  * columns' expressions (non-column parameters such as a plane matrix
+  * baked in), so the kernel needs no per-session function registration
+  * and resolves in any session. Living in `org.apache.spark.sql` is the
+  * standard technique extension libraries use to reach `private[sql]`
+  * surface. */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

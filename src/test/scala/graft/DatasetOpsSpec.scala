@@ -220,18 +220,17 @@ class DatasetOpsSpec extends AnyFunSuite {
       s"dropped $nDropped, co-located twin pairs $coCell")
   }
 
-  test("autoPlanes: depth grows with log2 of the row estimate, clamped to the floor") {
-    val spark = TestSpark.spark
-    // small corpora sit at the floor; spark.range carries exact rowCount stats
-    assert(Similarity.autoPlanes(spark.range(1000).toDF()) == 8)
+  test("autoPlanesExact: depth grows with log2 of the count, clamped to the floor") {
+    // small corpora sit at the floor
+    assert(Similarity.autoPlanesExact(1000L) == 8)
     // 64M rows at target occupancy 64 → ceil(log2(1M)) = 20 planes
-    assert(Similarity.autoPlanes(spark.range(64L * 1024 * 1024).toDF()) == 20)
+    assert(Similarity.autoPlanesExact(64L * 1024 * 1024) == 20)
     // doubling the corpus adds exactly one plane (the halving lever)
-    val p1 = Similarity.autoPlanes(spark.range(1L << 26).toDF())
-    val p2 = Similarity.autoPlanes(spark.range(1L << 27).toDF())
+    val p1 = Similarity.autoPlanesExact(1L << 26)
+    val p2 = Similarity.autoPlanesExact(1L << 27)
     assert(p2 == p1 + 1)
     // the cap holds for absurd row counts
-    assert(Similarity.autoPlanes(spark.range(Long.MaxValue / 4).toDF()) == 24)
+    assert(Similarity.autoPlanesExact(Long.MaxValue / 4) == 24)
   }
 
   test("corpus_drift law: stopword buckets drift, most of the grid is stable") {

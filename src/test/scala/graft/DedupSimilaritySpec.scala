@@ -81,7 +81,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val exact = Similarity.bruteForceTopK(vecs, queries, k = 5)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.lshTopK(vecs, queries, k = 5, nPlanes = 6, dim = 64)
+    val approx = Similarity.lshTopKPlanes(vecs, queries, k = 5,
+        Similarity.md5Planes(nPlanes = 6, nTables = 4, dim = 64))
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
     val recall = (exact & approx).size.toDouble / exact.size
     assert(recall >= 0.6, s"recall $recall too low")
@@ -98,13 +99,15 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val exact = Similarity.bruteForceTopK(vecs, queries, k = 5)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.lshTopK(vecs, queries, k = 5, nPlanes = 6, dim = 24)
+    val approx = Similarity.lshTopKPlanes(vecs, queries, k = 5,
+        Similarity.md5Planes(nPlanes = 6, nTables = 4, dim = 24))
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
     val recall = (exact & approx).size.toDouble / exact.size
     assert(recall >= 0.6, s"24-d recall $recall too low")
     // wrong dim must fail loudly, not silently truncate the bucket signal
     val boom = intercept[Exception] {
-      Similarity.lshTopK(vecs, queries, k = 5, nPlanes = 6, dim = 64).collect()
+      Similarity.lshTopKPlanes(vecs, queries, k = 5,
+        Similarity.md5Planes(nPlanes = 6, nTables = 4, dim = 64)).collect()
     }
     assert(boom.getMessage != null)
   }

@@ -651,33 +651,6 @@ class SelectionSpec extends AnyFunSuite {
     assert(math.abs(bf - want) <= 1e-12, s"beta=$bf want=$want")
   }
 
-  test("Unigram.forwardBackward: fused pass is bit-identical to the separate DP directions") {
-    import spark.implicits._
-    import graft.operators.Unigram
-    // the fusion halves the trainer's checkpoint-job count; it must be a
-    // pure scheduling change — every (w, pos/r) mass EXACTLY equal
-    // (same pivot, same IEEE add chain), pinned on a real vocabulary
-    val words = graft.queries.Tables
-      .table(spark, "/root/testdata/sf0.001", "documents")
-      .select(explode(graft.functions.TextFunctions.tokens(col("text"))).as("w"))
-      .filter(col("w").rlike("^[a-z0-9]+$") && length(col("w")) <= 8)
-      .groupBy("w").agg(count(lit(1)).as("wc"))
-      .localCheckpoint()
-    val p = Unigram.probs(Unigram.seed(words, 4, 80)).localCheckpoint()
-    val sepF = Unigram.forward(words, p, 8, 4)
-      .select("w", "pos", "a").as[(String, Int, Double)].collect().sortBy(r => (r._1, r._2))
-    val sepB = Unigram.backward(words, p, 8, 4)
-      .select("w", "r", "b").as[(String, Int, Double)].collect().sortBy(r => (r._1, r._2))
-    val (ff, fb) = Unigram.forwardBackward(words, p, 8, 4)
-    val fusedF = ff.select("w", "pos", "a").as[(String, Int, Double)]
-      .collect().sortBy(r => (r._1, r._2))
-    val fusedB = fb.select("w", "r", "b").as[(String, Int, Double)]
-      .collect().sortBy(r => (r._1, r._2))
-    assert(sepF.nonEmpty && sepB.nonEmpty)
-    assert(fusedF.toSeq == sepF.toSeq, "fused forward diverged (must be bit-identical)")
-    assert(fusedB.toSeq == sepB.toSeq, "fused backward diverged (must be bit-identical)")
-  }
-
   test("Unigram full-EM: expected counts diverge from Viterbi counts (mass splits across segmentations)") {
     import spark.implicits._
     import org.apache.spark.sql.types.DecimalType

@@ -33,6 +33,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - one way to load a model: `ExecutorSingleton.getOrCreate` is called
   *    once, by `ModelStage`, whose singleton key is a digest of the model
   *    factory, so no caller-chosen string can make two models share a slot;
+  *  - one way to call a native kernel: no `call_function("graft_…")`, no
+  *    `nativeAvailable` probe, no `createOrReplaceTempFunction` and no
+  *    `catch { case _: Throwable => None }` fallback in main source;
   *  - the DuckDB MinHash signature (`MIN(h1 + j * h2)`) is generated once,
   *    in `MinhashSql`, and the Spark one is built once, in `Dedup`, by the
   *    native kernel, so a change to k or the hashing has one place to go
@@ -212,6 +215,21 @@ class SourceAuditSpec extends AnyFunSuite {
     } yield f
     assert(copies.isEmpty,
       "declarative h1 + j*h2 MinHash minimum in: " + copies.mkString(", "))
+  }
+
+  test("native kernels are built one way, with no name registry, session probe or catch-all fallback") {
+    // every graft_* expression is built through ColumnBridge by its
+    // operator, so it resolves in any session; a by-name call or a
+    // swallowed kernel require() would bring back a second, silently
+    // different path
+    Seq("by-name graft_* call" -> """call_function\(\s*"graft_""".r,
+        "active-session probe" -> """\bnativeAvailable\b""".r,
+        "function registration" -> """\bcreateOrReplaceTempFunction\b""".r,
+        "catch-all fallback to None" -> """case\s+_\s*:\s*Throwable\s*=>\s*None""".r)
+      .foreach { case (what, pattern) =>
+        val sites = mainCodeHits(pattern)
+        assert(sites.isEmpty, s"$what in main source: " + sites.map(_._2).mkString(", "))
+      }
   }
 
   test("the LSH band join key and the exact Jaccard denominator live only in operators/Dedup.scala") {

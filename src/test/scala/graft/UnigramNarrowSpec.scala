@@ -92,8 +92,8 @@ class UnigramNarrowSpec extends AnyFunSuite {
       .localCheckpoint()
     val pm = Unigram.probsMicroMap(kept)
     val p = Unigram.probsMicro(kept).localCheckpoint()
-    val (f, b) = Unigram.forwardBackward(words, p,
-      Unigram.MaxWordLen, Unigram.MaxPieceLen)
+    val f = Unigram.forward(words, p, Unigram.MaxWordLen, Unigram.MaxPieceLen)
+    val b = Unigram.backward(words, p, Unigram.MaxWordLen, Unigram.MaxPieceLen)
     val rel = Unigram.expectedCounts(words, p, f, b, kept, Unigram.MaxPieceLen)
     val fb = Unigram.fbArrays(words, pm, Unigram.MaxWordLen, Unigram.MaxPieceLen)
     val nar = Unigram.expectedCountsNarrow(fb, pm, kept, Unigram.MaxPieceLen)
