@@ -12,7 +12,7 @@ import graft.plans.GraftFunctions
 
 /** The one SparkSession factory: every main, the test session and the
   * benchmark build their session here. A session comes out configured the
-  * way the engine expects — optimizer rules installed
+  * way the engine expects — the GateHoist optimizer rule installed
   * ([[GraftFunctions.register]]), AQE with skew-join splitting
   * on, nanosecond-parquet compatibility, UTC, and a shuffle-partition
   * default sized to the cluster instead of Spark's fixed 200 (AQE
@@ -22,7 +22,7 @@ import graft.plans.GraftFunctions
   * Existing sessions work too: apply [[configure]] to your own builder
   * (on a cluster, shuffle partitions ≈ 2-3× total executor cores is the
   * standard start), and every `Tables.table` call installs the optimizer
-  * rules lazily. The native expressions need no registration: operators
+  * rule lazily. The native expressions need no registration: operators
   * build them directly, so they resolve in any session.
   *
   * Extra session confs need no env passthrough: Spark reads every

@@ -105,17 +105,8 @@ object ScaleProbe {
     // documents). Replicas 0–63 keep the identity multiplier, so every
     // ≤ 64× row measured before the fix is unaffected; A/B and topology
     // ratios at 100× shared the aliased corpus on both sides and stand.
-    // SPARK_GRAFT_SALT_ALIASED=1 is a MEASUREMENT knob: it swaps in the
-    // period-64 pre-r12 pairing so a same-window fixed-vs-aliased corpus
-    // CPU pair can close the r12 watch item (the aliased corpus's twin
-    // bands are geometry, not ids — the densified ids and the pack
-    // guard apply to both sides, so the pair prices corpus geometry
-    // alone). Never a shipped configuration.
-    def permuteCoord(rep: org.apache.spark.sql.Column,
-                     i: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      if (sys.env.get("SPARK_GRAFT_SALT_ALIASED").contains("1"))
-        graft.ops.ProbeSalts.coordPermutationAliased(rep, i)
-      else graft.ops.ProbeSalts.coordPermutation(rep, i)
+    // The period-64 pairing survives only as the salt-period law's
+    // negative control (ProbeSalts.coordPermutationAliased).
 
     def docs(m: Int) = replicate(
       spark.read.parquet(s"$dir/documents.parquet"), m, "doc_id", saltText = true)
@@ -164,22 +155,11 @@ object ScaleProbe {
             m, "image_id", saltText = false)))
       },
       "line_dedup" -> { m =>
-        // the dedup_lines core: aligned 10-token segments → corpus count →
-        // scrub lines seen >= 5×. Salted replicas keep line counts linear.
-        val W = 10
-        val base = graft.ops.Parallelism.ensure(docs(m))
-          .withColumn("toks", graft.functions.TextFunctions.tokens(col("text")))
-          .withColumn("n_lines",
-            floor((size(col("toks")).cast("long") + lit(W - 1)) / lit(W)).cast("long"))
-          .localCheckpoint(false)
-        val lines = base.select(col("doc_id"), col("toks"),
-            explode(sequence(lit(1L), col("n_lines"))).as("i"))
-          .select(col("doc_id"), col("i"), concat_ws(" ",
-            slice(col("toks"), ((col("i") - 1) * W + 1).cast("int"), lit(W))).as("line"))
-        val boiler = lines.groupBy("line").agg(count(lit(1)).as("c"))
-          .filter(col("c") >= 5).select("line")
-        noop(lines.join(boiler, "line")
-          .groupBy("doc_id").agg(count(lit(1)).as("n_removed")))
+        // dedup_lines via the SHARED stage builder: salted replicas keep
+        // line counts linear; the planted nav header is one boilerplate
+        // line across every replica
+        noop(graft.queries.TextQueries.dedupLinesSorted(
+          docs(m).select(col("doc_id"), col("text"))))
       },
       "bloom_prune" -> { m =>
         // fixed small side, replicated big side: the scan-side prune work
@@ -246,21 +226,12 @@ object ScaleProbe {
         noop(graft.queries.DatasetQueries.semanticComponents(corpus))
       },
       "corpus_overlap" -> { m =>
-        // 20 sources, 10× the distinct shingles per source: times the
-        // bottom-k window sketch and the exact intersect join at set
-        // sizes the sketch exists to avoid
-        val ex = docs(m)
-          .select(col("source"),
-            explode(graft.functions.TextFunctions.wordShingles(col("text"), 3)).as("t"))
-          .distinct().localCheckpoint(false)
-        val bk = Dedup.bottomKSketch(ex, "source", "t", 32)
-        val inter = ex.select(col("source").as("src_a"), col("t"))
-          .join(ex.select(col("source").as("src_b"), col("t")), "t")
-          .filter(col("src_a") < col("src_b"))
-          .groupBy("src_a", "src_b").agg(count(lit(1)).as("ni"))
-        noop(inter.join(bk.select(col("source").as("src_a"), col("hs").as("ha")), "src_a")
-          .join(bk.select(col("source").as("src_b"), col("hs").as("hb")), "src_b")
-          .withColumn("est", Dedup.kmvJaccardEst(col("ha"), col("hb"), 32)))
+        // corpus_overlap via the SHARED stage builder — 20 sources, m× the
+        // distinct shingles per source: times the bottom-k window sketch
+        // and the exact intersect join at set sizes the sketch exists to
+        // avoid
+        noop(graft.queries.DatasetQueries.corpusOverlapPairs(
+          docs(m).select(col("source"), col("text"))))
       },
       "dedup_corpus" -> { m =>
         // the composed exact → minhash-LSH → components → verdict chain:
@@ -532,7 +503,7 @@ object ScaleProbe {
         val rep = (col("vec_id") / 100000000L).cast("int")
         val corpus = emb0.withColumn("embedding",
           transform(col("embedding"), (_, i) =>
-            element_at(col("embedding"), permuteCoord(rep, i))))
+            element_at(col("embedding"), graft.ops.ProbeSalts.coordPermutation(rep, i))))
         // DENSIFY replica ids (rep·nBase + orig) so the id domain stays
         // < 2³² at every tier and the probe measures the SHIPPED packed
         // proposal exchange: the r12 1e8-stride salt exceeded the pack
@@ -568,7 +539,7 @@ object ScaleProbe {
         val rep = (col("vec_id") / 100000000L).cast("int")
         val corpus = emb0.withColumn("embedding",
           transform(col("embedding"), (_, i) =>
-            element_at(col("embedding"), permuteCoord(rep, i))))
+            element_at(col("embedding"), graft.ops.ProbeSalts.coordPermutation(rep, i))))
         val nBase = spark.read.parquet(s"$dir/embeddings.parquet")
           .agg(max(col("vec_id"))).head().getLong(0) + 1L // bounded: 1-row agg
         val emb = corpus.withColumn("vec_id",
@@ -642,7 +613,7 @@ object ScaleProbe {
         val rep = (col("vec_id") / 100000000L).cast("int")
         val base = emb0.withColumn("embedding",
           transform(col("embedding"), (_, i) =>
-            element_at(col("embedding"), permuteCoord(rep, i))))
+            element_at(col("embedding"), graft.ops.ProbeSalts.coordPermutation(rep, i))))
           .localCheckpoint(false)
         // Twin offset derived from the per-replica max id (mirrors the
         // registered query's max(vec_id)+1) — a fixed 1e6 offset would

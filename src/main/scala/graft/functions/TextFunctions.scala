@@ -42,13 +42,10 @@ object TextFunctions {
   def wordNgrams(text: Column, n: Int, distinct: Boolean): Column =
     ColumnBridge.column(graft.plans.WordNgrams(ColumnBridge.expression(text), n, distinct))
 
-  /** Fraction of tokens found in `words` (0.0 for empty docs). */
-  def wordlistRatio(text: Column, words: Seq[String]): Column =
-    wordlistRatioTokens(tokens(text), words)
-
-  /** [[wordlistRatio]] over an already-materialized token column —
-    * pipelines that need several token-derived metrics tokenize ONCE and
-    * pass the column (tokenization dominates the per-metric cost). */
+  /** Fraction of the tokens in `ts` found in `words` (0.0 for empty
+    * docs). Takes an already-materialized token column — pipelines that
+    * need several token-derived metrics tokenize ONCE and pass the column
+    * (tokenization dominates the per-metric cost). */
   def wordlistRatioTokens(ts: Column, words: Seq[String]): Column = {
     val n = size(ts)
     val k = size(filter(ts, t => t.isin(words: _*)))

@@ -19,17 +19,18 @@ import graft.ops.Parallelism
   *    linear in corpus size, never the O(n²) pair space; the self-join hits
   *    only same-bucket rows, and near-dup verification runs on the
   *    candidate set only;
-  *  - SimHash blocking: a 64-bit sketch per doc, pairs only within equal
-  *    16-bit bands (pigeonhole: any pair with Hamming distance <= 12 shares
-  *    at least one of 4 bands... guaranteed for <= 3; wider distances are
-  *    caught probabilistically by multiple bands).
+  *  - SimHash blocking: a 60-bit sketch per doc, pairs only within equal
+  *    15-bit bands (pigeonhole: a pair with Hamming distance <= 3 shares
+  *    at least one of 4 bands; wider distances are caught
+  *    probabilistically by multiple bands).
   */
 object Dedup {
 
   /** Intersection size of two DISTINCT, SORTED shingle arrays: the
     * sorted-merge native expression ([[graft.plans.SortedIntersectCount]],
     * no per-pair hash-set allocation). Exact integer, equal to
-    * `size(array_intersect(a, b))` on such inputs. */
+    * `size(array_intersect(a, b))` on such inputs, null elements included
+    * (PlansSpec checks both). */
   def sortedIntersectCount(a: Column, b: Column): Column =
     ColumnBridge.column(graft.plans.SortedIntersectCount(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
@@ -257,13 +258,6 @@ object Dedup {
     (withKeep, comps)
   }
 
-  /** 64-bit SimHash per row: one per-row native expression
-    * ([[graft.plans.SimHash64]], splitmix64 token hashes) — a pure narrow
-    * map, zero shuffles, so the sketch rides the document scan. */
-  def simhash64(df: DataFrame, idCol: String, tokensCol: Column): DataFrame =
-    df.select(col(idCol),
-      ColumnBridge.column(graft.plans.SimHash64(ColumnBridge.expression(tokensCol))).as("simhash"))
-
   // ── Bottom-k (KMV) set sketch ──────────────────────────────────────────
 
   /** Bottom-k (KMV) sketch per key: the k SMALLEST md5-derived 60-bit
@@ -312,13 +306,13 @@ object Dedup {
       .otherwise(lit(0.0))
   }
 
-  /** Oracle-replayable 60-bit SimHash: md5-keyed token hashes, bit votes
-    * folded relationally (explode → 60 conditional sums, map-side partial
-    * → bit reassembly; one shuffle on idCol). The 64-bit native kernel
-    * ([[simhash64]]) is the zero-shuffle fast path; this variant trades
-    * one agg shuffle for a sketch any engine can recompute. Docs with no
+  /** The engine's SimHash: a 60-bit sketch from md5-keyed token hashes,
+    * bit votes folded relationally (explode → 60 conditional sums,
+    * map-side partial → bit reassembly; one shuffle on idCol), so any
+    * engine can recompute it and the oracle hash-checks it. Docs with no
     * tokens produce no row (no bits to vote) — matching a replaying
-    * engine's UNNEST-of-empty-list semantics. */
+    * engine's UNNEST-of-empty-list semantics. Band it with
+    * [[simhashPairs]] at `nBands = 4, bandBits = 15`. */
   def simhash60Md5(df: DataFrame, idCol: String, tokensCol: Column): DataFrame = {
     val hashed = df.select(col(idCol), explode(tokensCol).as("_tok"))
       .select(col(idCol), md5Hash60(col("_tok")).as("_th"))
@@ -333,8 +327,9 @@ object Dedup {
 
   /** Near-dup pairs by banded SimHash blocking: pairs sharing any
     * bandBits-wide band, kept when Hamming distance <= maxHamming.
-    * Defaults fit the 64-bit sketch (4×16); the 60-bit md5 sketch uses
-    * 4×15. Pigeonhole: any pair with distance < nBands shares a band. */
+    * Defaults fit a 64-bit code (4×16, the dHash image hashes); the
+    * 60-bit [[simhash60Md5]] sketch uses 4×15. Pigeonhole: any pair with
+    * distance < nBands shares a band. */
   def simhashPairs(df: DataFrame, idCol: String, simhashCol: String,
                    maxHamming: Int, nBands: Int = 4, bandBits: Int = 16): DataFrame = {
     val mask = (1L << bandBits) - 1

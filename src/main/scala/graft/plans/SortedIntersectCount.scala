@@ -8,12 +8,13 @@ import org.apache.spark.sql.types._
 
 /** Intersection size of two SORTED arrays (string or long elements) via
   * a merge scan —
-  * O(n+m) comparisons, no per-call hash-set allocation. Drop-in for
+  * O(n+m) comparisons, no per-call hash-set allocation. Equals
   * `size(array_intersect(a, b))` when both sides are `array_sort`ed and
   * distinct (shingle sets): array_intersect builds a hash set per CALL,
   * which on an all-pairs Jaccard join means one hash set per PAIR; the
   * merge scan turns the hot loop into pointer-chasing-free comparisons.
-  * Exact integer result → oracle-identical wherever it replaces the HOF.
+  * Exact integer result → oracle-identical wherever it stands in for the
+  * HOF. Built only through `Dedup.sortedIntersectCount`.
   */
 case class SortedIntersectCount(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -41,8 +42,8 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_sorted_intersect_count"
 
-  /** Null elements: the rewrite only feeds this SORTED-DISTINCT inputs,
-    * so each side holds at most one null and array_sort places it LAST.
+  /** Null elements: callers feed this SORTED-DISTINCT inputs, so each
+    * side holds at most one null and array_sort places it LAST.
     * The merge scan therefore stops at the first null slot, and — matching
     * `size(array_intersect(...))` — counts one extra when BOTH sides end
     * with a null (array_intersect keeps null iff both arrays contain it). */

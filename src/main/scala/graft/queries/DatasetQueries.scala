@@ -581,11 +581,12 @@ object DatasetQueries {
     * from approx_distinct). Why bottom-k and not the K-M k-permutation
     * signature: see [[graft.operators.Dedup.bottomKSketch]] — the
     * permutation minima collapse into one correlated coin at corpus
-    * set sizes (measured |est − exact| up to 0.97 on this table). */
-  val corpusOverlap = QueryDef("corpus_overlap",
-    (s, dir) => {
+    * set sizes (measured |est − exact| up to 0.97 on this table).
+    *
+    * Shared corpus-overlap stages — the REGISTERED query and ScaleProbe
+    * both call this on a (source, text) frame. */
+  def corpusOverlapPairs(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
       val k = 32
-      val docs = table(s, dir, "documents").select(col("source"), col("text"))
       val ex = docs
         .select(col("source"), explode(wordShingles(col("text"), 3)).as("t"))
         .distinct()
@@ -609,8 +610,12 @@ object DatasetQueries {
             (col("n_a") + col("n_b") - coalesce(col("ni"), lit(0L))).cast("double"))
             .as("jaccard"),
           Dedup.kmvJaccardEst(col("ha"), col("hb"), k).as("est_jaccard"))
-        .orderBy("src_a", "src_b")
-    },
+  }
+
+  val corpusOverlap = QueryDef("corpus_overlap",
+    (s, dir) => corpusOverlapPairs(
+        table(s, dir, "documents").select(col("source"), col("text")))
+      .orderBy("src_a", "src_b"),
     Some(corpusOverlapOracleSql))
 
   // ── shard_assign ────────────────────────────────────────────────────────

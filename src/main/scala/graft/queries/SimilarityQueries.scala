@@ -326,10 +326,8 @@ object SimilarityQueries {
   // Max live bare-id proposal rows per NN-descent slice (~16 bytes/row →
   // ~1.5 GB through the scored join per slice): sf0.1's 2000 vectors
   // (3.2M proposals) stay single-slice, the 50× probe's 100k vectors
-  // (160M) slice ~2x-per-48g-heap. Overridable for probe experiments.
-  private def knnChunkProposals: Long =
-    graft.ops.MeasurementKnobs.get("SPARK_GRAFT_KNN_CHUNK_PROPOSALS")
-      .map(_.toLong).getOrElse(96000000L)
+  // (160M) slice ~2x-per-48g-heap.
+  private val knnChunkProposals = 96000000L
   private lazy val knnCodePlanes =
     Similarity.md5Planes(knnCodeBitsPerWord, knnCodeWords, 64, "graft-knn-code")
 
@@ -735,13 +733,18 @@ object SimilarityQueries {
     * Spark applicationId as well as the sf dir: two concurrent processes
     * over the same scale factor (bench + verify, parallel CI) would
     * otherwise interleave one process's overwrite/compact swap with the
-    * other's probe — spurious failures at best, wrong rows at worst. */
+    * other's probe — spurious failures at best, wrong rows at worst.
+    * The directory is deleted when the JVM exits; the index stays
+    * readable until then, since the query's frame reads it lazily. */
   private def indexScratchPath(s: org.apache.spark.sql.SparkSession,
-                               dir: String, kind: String): String =
-    java.nio.file.Paths.get(
+                               dir: String, kind: String): String = {
+    val path = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"),
       s"graft_ivf_${kind}_${s.sparkContext.applicationId}_" +
         java.nio.file.Paths.get(dir).getFileName.toString).toString
+    org.apache.spark.sql.graft.ShutdownDeleteBridge.deleteOnExit(new java.io.File(path))
+    path
+  }
 
   val annIvfPersisted = QueryDef("ann_ivf_persisted",
     (s, dir) => {

@@ -38,8 +38,7 @@ object Tables {
     // The ns-epoch view of a naive timestamp is its UTC reading (DuckDB's
     // epoch_ns does the same), so the NTZ→instant cast must run under UTC.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // Optimizer rules (IntersectCountRewrite, GateHoist) into the
-    // harness-provided session.
+    // The GateHoist optimizer rule into the harness-provided session.
     graft.plans.GraftFunctions.register(spark)
     // NOTE on input parallelism: the driver testdata is one file with ONE
     // row group per table (the atomic split unit), so scan-rooted narrow

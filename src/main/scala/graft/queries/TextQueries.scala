@@ -8,10 +8,8 @@ import graft.operators.Dedup
 import graft.queries.OracleSql.{toksSql, stopListSql}
 
 /** Training-data text-analysis + dedup capability queries over `documents`.
-  * All DuckDB-oracle-backed — MinHash/SimHash run their md5-keyed
-  * replayable variants here (signatures, bands, pairs all recomputable by
-  * any engine); the xxhash64 kernel paths stay as the engine-private fast
-  * path, pinned by property specs.
+  * All DuckDB-oracle-backed — MinHash/SimHash are md5-keyed (signatures,
+  * bands, pairs all recomputable by any engine).
   */
 object TextQueries {
   import Tables.table
@@ -397,10 +395,9 @@ object TextQueries {
       SELECT id_a, id_b, hamming FROM pr WHERE hamming <= 6 ORDER BY id_a, id_b"""
   }
 
-  /** SimHash near-dup pairs via banded Hamming blocking — md5-keyed 60-bit
-    * replayable sketch ([[Dedup.simhash60Md5]]) → hash-oracle evidence;
-    * the zero-shuffle 64-bit native kernel ([[Dedup.simhash64]]) remains
-    * the fast path, property-spec'd. */
+  /** SimHash near-dup pairs via banded Hamming blocking over the engine's
+    * one SimHash, the md5-keyed 60-bit sketch ([[Dedup.simhash60Md5]]),
+    * which the oracle replays bit for bit. */
   val dedupSimhash = QueryDef("dedup_simhash",
     (s, dir) => {
       val docs = table(s, dir, "documents").filter(col("doc_id") < 500)
@@ -594,16 +591,17 @@ object TextQueries {
     * Scale: one narrow segment map, ONE count shuffle with map-side
     * partials, a join back (AQE picks broadcast vs shuffle — the
     * boilerplate set is small in a healthy corpus, huge in a raw crawl),
-    * and a narrow reassembly map over the checkpointed base. */
-  val dedupLinesQ = QueryDef("dedup_lines",
-    (s, dir) => {
+    * and a narrow reassembly map over the checkpointed base.
+    *
+    * Shared line-dedup stages — the REGISTERED query and ScaleProbe both
+    * call this on a (doc_id, text) frame. The result is sorted by doc_id:
+    * the sort sits below the reassembly map. */
+  def dedupLinesSorted(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
       val W = 10
       val nav = "home about contact privacy terms sitemap login search menu footer"
       // r15: range by doc_id (see dedup_spans) — the floor doubles as the
       // exchange the final per-doc reassembly sorts within.
-      val base = graft.ops.Parallelism.byRange(
-          table(s, dir, "documents").select(col("doc_id"), col("text")),
-          col("doc_id"))
+      val base = graft.ops.Parallelism.byRange(docs, col("doc_id"))
         .select(col("doc_id"),
           when(col("doc_id") % 4 === 0, concat(lit(nav + " "), col("text")))
             .otherwise(col("text")).as("t"))
@@ -633,7 +631,11 @@ object TextQueries {
             filter(sequence(lit(1L), col("n_lines")),
               i => !array_contains(rem, i)),
             i => lineAt(i))).as("clean"))
-    },
+  }
+
+  val dedupLinesQ = QueryDef("dedup_lines",
+    (s, dir) => dedupLinesSorted(
+      table(s, dir, "documents").select(col("doc_id"), col("text"))),
     Some("""WITH p AS (SELECT doc_id,
           CASE WHEN doc_id % 4 = 0
                THEN 'home about contact privacy terms sitemap login search menu footer ' || text

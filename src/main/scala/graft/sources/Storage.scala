@@ -1,32 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Storage-layout helpers for the 100 TB path: partitioned layouts so
-  * readers prune whole directories, and bucketed tables so repeat joins
-  * and aggregations on the bucket key skip their shuffle entirely
-  * (co-located joins — the precomputed-partitioning contract Spark's
-  * catalog tables provide).
+/** Storage-layout helpers for the 100 TB path: small-file compaction
+  * into range-clustered files, and a Z-order clustering key, so parquet
+  * footer stats let readers skip whole files.
   */
 object Storage {
-
-  /** Write parquet partitioned by `cols` — predicate on a partition
-    * column prunes at the directory level (PartitionFilters, not data
-    * scan). */
-  def writePartitioned(df: DataFrame, path: String, cols: String*): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(cols: _*).parquet(path)
-
-  /** Save as a bucketed+sorted catalog table: `buckets` files per
-    * partition hashed on `bucketCol`. Joins/aggregations between tables
-    * bucketed the same way on the same key execute without an Exchange. */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    buckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
 
   /** Small-file compaction with clustering: rewrite a parquet directory
     * into ≈`targetFileMB`-sized files, range-partitioned AND sorted on

@@ -57,14 +57,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("simhash: identical docs hash equal; unrelated docs far in Hamming") {
-    val sk = Dedup.simhash64(corpus, "doc_id", TextFunctions.tokens(col("text")))
-      .as[(Long, Long)].collect().toMap
+    val sketches = Dedup.simhash60Md5(corpus, "doc_id", TextFunctions.tokens(col("text")))
+    val sk = sketches.as[(Long, Long)].collect().toMap
     assert(sk(0L) == sk(1L))
     assert(java.lang.Long.bitCount(sk(0L) ^ sk(2L)) <= 6)
     assert(java.lang.Long.bitCount(sk(0L) ^ sk(3L)) > 10)
-    val pairs = Dedup.simhashPairs(
-      Dedup.simhash64(corpus, "doc_id", TextFunctions.tokens(col("text"))),
-      "doc_id", "simhash", maxHamming = 6)
+    val pairs = Dedup.simhashPairs(sketches, "doc_id", "simhash", maxHamming = 6,
+        nBands = 4, bandBits = 15)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((0L, 1L)) && pairs.contains((0L, 2L)))
     assert(!pairs.contains((0L, 3L)) && !pairs.contains((1L, 3L)))

@@ -14,7 +14,7 @@ import graft.operators.{Dedup, Ivf, Similarity}
 class KernelBuildSpec extends AnyFunSuite {
   import TestSpark.spark
 
-  /** The five kernel-backed operators over frames of `s`, each collected
+  /** The four kernel-backed operators over frames of `s`, each collected
     * in a fixed order. */
   private def kernelRows(s: SparkSession): Seq[Seq[Row]] = {
     import s.implicits._
@@ -31,9 +31,8 @@ class KernelBuildSpec extends AnyFunSuite {
     val inter = sets.select(col("id"), Dedup.sortedIntersectCount(col("l"), col("r")).as("n"))
     val docs = Seq((0L, "the cat sat on the mat"), (1L, "café über 世界"), (2L, ""))
       .toDF("doc_id", "text")
-    val sketch = Dedup.simhash64(docs, "doc_id", TextFunctions.tokens(col("text")))
     val fp = docs.select(col("doc_id"), TextFunctions.fingerprint(col("text")).as("fp"))
-    Seq(cos, top, inter, sketch, fp).map(sorted)
+    Seq(cos, top, inter, fp).map(sorted)
   }
 
   private def sorted(f: DataFrame): Seq[Row] =
@@ -46,31 +45,6 @@ class KernelBuildSpec extends AnyFunSuite {
     val inRegistered = kernelRows(spark)
     assert(inChild == inRegistered)
     assert(inRegistered.forall(_.nonEmpty))
-  }
-
-  test("simhash64 gives the same sketches whichever session is active") {
-    import spark.implicits._
-    val docs = Seq((0L, "the cat sat on the mat"), (1L, "a b c d e f g"), (2L, "x"))
-      .toDF("doc_id", "text")
-    def sketches(): Seq[(Long, Long)] =
-      Dedup.simhash64(docs, "doc_id", TextFunctions.tokens(col("text")))
-        .orderBy("doc_id").as[(Long, Long)].collect().toSeq
-    SparkSession.setActiveSession(spark)
-    val registered = sketches()
-    val other = GraftSession.local(4).newSession()
-    SparkSession.setActiveSession(other)
-    val underOther = try sketches() finally SparkSession.setActiveSession(spark)
-    assert(underOther == registered)
-    // the splitmix64 kernel, not an engine-builtin hash
-    val tokens = Array("the", "cat", "sat", "on", "the", "mat")
-    val votes = new Array[Int](64)
-    tokens.foreach { t =>
-      val h = graft.plans.SimHash64.tokenHash(
-        org.apache.spark.unsafe.types.UTF8String.fromString(t))
-      (0 until 64).foreach(j => votes(j) += (if (((h >>> j) & 1L) != 0L) 1 else -1))
-    }
-    val want = (0 until 64).foldLeft(0L)((acc, j) => if (votes(j) > 0) acc | (1L << j) else acc)
-    assert(registered.head == ((0L, want)))
   }
 
   test("invalid kernel arguments throw IllegalArgumentException when the frame is built") {

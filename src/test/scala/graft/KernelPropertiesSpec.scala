@@ -102,18 +102,6 @@ class KernelPropertiesSpec extends AnyFunSuite {
     }, min = 150)
   }
 
-  test("SimHash64: permutation-invariant and duplication-idempotent (vote algebra)") {
-    val toks = Gen.nonEmptyListOf(Gen.identifier.map(_.take(6)))
-    check("simhashPerm", Prop.forAll(toks, Gen.choose(0L, 1L << 30)) { (ts, seed) =>
-      def h(xs: Seq[String]): Any =
-        SimHash64(Literal.create(xs, ArrayType(StringType))).eval(null)
-      val shuffled = new scala.util.Random(seed).shuffle(ts)
-      // votes are a sum over tokens → order-free; doubling every vote
-      // cannot flip any sign → duplication-idempotent
-      h(ts) == h(shuffled) && h(ts) == h(ts ++ ts)
-    })
-  }
-
   test("HyperplaneBuckets equals per-table naive dot-product signs") {
     val dim = 5
     val vecGen = Gen.listOfN(dim, Gen.choose(-3, 3).map(_.toFloat))

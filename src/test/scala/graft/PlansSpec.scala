@@ -41,49 +41,33 @@ class PlansSpec extends AnyFunSuite {
 
   test("native expressions are in the executed plans") {
     assert(plan(SparkEntry.queries("cosine_topk")(spark, sf)).contains("graft_cosine"))
-    // the registered dedup_simhash query runs the md5-replayable sketch;
-    // the native kernel remains the fast-path API — pin its plan directly
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    assert(plan(graft.operators.Dedup.simhash64(docs, "doc_id",
-      graft.functions.TextFunctions.tokens(col("text")))).contains("graft_simhash"))
     assert(plan(SparkEntry.queries("dedup_ngram_jaccard")(spark, sf))
       .contains("graft_sorted_intersect_count"))
   }
 
-  test("optimizer rule rewrites builtin sorted-intersect form to the native kernel") {
+  test("sortedIntersectCount equals size(array_intersect), nulls included") {
     import spark.implicits._
-    // parquet-backed (a literal frame would constant-fold before the rule)
+    import graft.operators.Dedup.sortedIntersectCount
+    // parquet-backed, so the kernel runs in generated code (a literal
+    // frame would be evaluated on the driver instead)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val df = docs.select(col("doc_id"), size(array_intersect(
+    val df = docs.select(col("doc_id"), sortedIntersectCount(
         array_sort(array_distinct(split(col("text"), " "))),
-        array_sort(array_distinct(split(col("source"), "c"))))).as("n"))
-    assert(plan(df).contains("graft_sorted_intersect_count"),
-      s"rule did not fire:\n${plan(df)}")
+        array_sort(array_distinct(split(col("source"), "c")))).as("n"))
     val builtinEquiv = docs.select(col("doc_id"), size(array_intersect(
         array_distinct(split(col("text"), " ")),
         array_distinct(split(col("source"), "c")))).as("n"))
     assert(df.orderBy("doc_id").as[(Long, Int)].collect().toSeq ==
       builtinEquiv.orderBy("doc_id").as[(Long, Int)].collect().toSeq)
-    // non-distinct inputs → rule must NOT fire (array_intersect dedups,
-    // the merge scan counts duplicate matches)
-    val nonDistinct = docs.select(size(array_intersect(
-      array_sort(split(col("text"), " ")), array_sort(split(col("text"), " ")))).as("n"))
-    assert(!plan(nonDistinct).contains("graft_sorted_intersect_count"))
-    // custom comparator → rule must NOT fire (merge scan assumes binary order)
-    val custom = docs.selectExpr(
-      "size(array_intersect(array_sort(array_distinct(split(text, ' ')), (l, r) -> CASE WHEN l > r THEN -1 WHEN l < r THEN 1 ELSE 0 END), array_sort(array_distinct(split(text, ' '))))) AS n")
-    assert(!plan(custom).contains("graft_sorted_intersect_count"))
-    // null elements: rewritten plan must match array_intersect semantics
+    // null elements: the kernel must match array_intersect semantics
     // (null kept iff BOTH sides contain it), not NPE on the null slot
     val withNulls = docs.limit(8).select(col("doc_id"),
       concat(split(col("text"), " "),
         when(col("doc_id") % 2 === 0, array(lit(null).cast("string")))
           .otherwise(array().cast("array<string>"))).as("ta"),
       concat(split(col("source"), "c"), array(lit(null).cast("string"))).as("sa"))
-    val nulled = withNulls.select(col("doc_id"), size(array_intersect(
-      array_sort(array_distinct(col("ta"))), array_sort(array_distinct(col("sa"))))).as("n"))
-    assert(plan(nulled).contains("graft_sorted_intersect_count"),
-      s"rule did not fire on nullable elements:\n${plan(nulled)}")
+    val nulled = withNulls.select(col("doc_id"), sortedIntersectCount(
+      array_sort(array_distinct(col("ta"))), array_sort(array_distinct(col("sa")))).as("n"))
     val nulledBuiltin = withNulls.select(col("doc_id"), size(array_intersect(
       array_distinct(col("ta")), array_distinct(col("sa")))).as("n"))
     assert(nulled.orderBy("doc_id").as[(Long, Int)].collect().toSeq ==

@@ -376,81 +376,4 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(pf.sliding(2).forall(w => w(1) <= w(0)), pf.mkString(","))
     assert(pf.last < 0.1 && pf.head == 0.5)
   }
-
-  // ------------------------------------------------------------------
-  // Measurement-knob registry law (r13 verdict task 8): ONE law that
-  // (a) asserts value-identity for EVERY registered SPARK_GRAFT_*
-  // measurement knob on a fixed corpus, and (b) scans src/main for knob
-  // tokens so an unclassified knob cannot ship. The per-knob pins this
-  // replaces could silently not-exist for a new knob; the source scan
-  // makes that impossible.
-  // ------------------------------------------------------------------
-
-  /** Run `k.probe` with the knob unset, then set to its measurement
-    * value, and require identical row multisets. Shared with the
-    * negative case below. */
-  private def knobIdentityHolds(k: graft.ops.MeasurementKnobs.Knob,
-                                sf: String): Boolean = {
-    import graft.ops.MeasurementKnobs
-    def rows(): Seq[String] = {
-      val df = k.probe(TestSpark.spark, sf)
-      df.collect().map(_.toString).sorted.toSeq
-    }
-    MeasurementKnobs.overrides = Map.empty
-    val base = try rows() finally MeasurementKnobs.overrides = Map.empty
-    assert(base.nonEmpty, s"${k.name}: probe returned no rows — vacuous law")
-    MeasurementKnobs.overrides = Map(k.name -> k.measurementValue)
-    val variant = try rows() finally MeasurementKnobs.overrides = Map.empty
-    variant == base
-  }
-
-  test("measurement-knob registry law: every registered knob is value-identical on a fixed corpus") {
-    import graft.ops.MeasurementKnobs
-    val sf = "/root/testdata/sf0.001"
-    for (k <- MeasurementKnobs.valueIdentity)
-      assert(knobIdentityHolds(k, sf),
-        s"${k.name}=${k.measurementValue} changed probe rows — a measurement " +
-          "knob must change HOW the plan executes, never WHAT it returns")
-  }
-
-  test("measurement-knob registry law: detects a deliberately value-changing knob (negative case)") {
-    import graft.ops.MeasurementKnobs
-    import org.apache.spark.sql.functions.{col, lit, when}
-    // a fake knob whose gated path CHANGES a value — the law must fail it
-    val bad = MeasurementKnobs.Knob("SPARK_GRAFT_TEST_NEGATIVE", "1",
-      "test-only: flips a column value when set",
-      (s, _) => {
-        val flip = MeasurementKnobs.get("SPARK_GRAFT_TEST_NEGATIVE").contains("1")
-        s.range(10).select(col("id"),
-          (if (flip) when(col("id") === 3, lit(-1L)).otherwise(col("id"))
-           else col("id")).as("v"))
-      })
-    assert(!knobIdentityHolds(bad, "/root/testdata/sf0.001"),
-      "negative case failed: the law passed a value-changing knob")
-  }
-
-  test("measurement-knob registry law: every SPARK_GRAFT_* token in src/main is classified") {
-    import graft.ops.MeasurementKnobs
-    val srcRoot = new java.io.File("src/main/scala")
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val token = "SPARK_GRAFT_[A-Z_]+".r
-    val inSource: Set[String] = scalaFiles(srcRoot).flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try token.findAllIn(src.mkString).toList finally src.close()
-    }.toSet
-    val registered = MeasurementKnobs.valueIdentity.map(_.name).toSet
-    val excluded = MeasurementKnobs.excluded.keySet
-    assert((registered & excluded).isEmpty,
-      s"knobs both registered and excluded: ${registered & excluded}")
-    val unclassified = inSource -- registered -- excluded
-    assert(unclassified.isEmpty,
-      s"unclassified SPARK_GRAFT_* knobs in src/main: ${unclassified.mkString(", ")} — " +
-        "add each to MeasurementKnobs.valueIdentity (with a probe) or " +
-        "MeasurementKnobs.excluded (with a reason)")
-    // no stale registry entries: every classified name still exists in source
-    val stale = (registered ++ excluded) -- inSource
-    assert(stale.isEmpty, s"registry names no longer in src/main: ${stale.mkString(", ")}")
-  }
 }

@@ -36,6 +36,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - one way to call a native kernel: no `call_function("graft_…")`, no
   *    `nativeAvailable` probe, no `createOrReplaceTempFunction` and no
   *    `catch { case _: Throwable => None }` fallback in main source;
+  *  - the environment is read only for session topology and bench
+  *    harness settings (`GraftSession`, `ExecMem`, `Bench`), so no plan
+  *    switch can hide in an env variable; `GraftFunctions.register` is
+  *    the one place optimizer rules are installed, and it installs only
+  *    `GateHoist`;
   *  - the DuckDB MinHash signature (`MIN(h1 + j * h2)`) is generated once,
   *    in `MinhashSql`, and the Spark one is built once, in `Dedup`, by the
   *    native kernel, so a change to k or the hashing has one place to go
@@ -241,6 +246,28 @@ class SourceAuditSpec extends AnyFunSuite {
           s"every MinHash LSH caller composes Dedup.lshPairs / Dedup.jaccard; $what at: " +
             sites.map(_._2).mkString(", "))
       }
+  }
+
+  test("the environment is read only in GraftSession.scala, ops/ExecMem.scala and Bench.scala") {
+    // session topology and bench harness settings are the only env
+    // configuration; no plan switch may be read from the environment
+    val reads = mainCodeHits("""\bsys\s*\.\s*env\b|\bSystem\s*\.\s*getenv\b""".r)
+    val allowed = Seq("/GraftSession.scala", "/ops/ExecMem.scala", "/Bench.scala")
+    assert(allowed.forall(a => reads.exists(_._1.endsWith(a))),
+      "an allowed environment reader no longer reads it: " + reads.map(_._2).mkString(", "))
+    val outside = reads.filterNot(h => allowed.exists(h._1.endsWith)).map(_._2)
+    assert(outside.isEmpty, "environment read outside session/harness configuration: " +
+      outside.mkString(", "))
+  }
+
+  test("extraOptimizations is assigned only in plans/GraftFunctions.scala, and installs only GateHoist") {
+    val sites = mainCodeHits("""\bextraOptimizations\s*=(?!=)""".r)
+    assert(sites.nonEmpty && sites.forall(_._1.endsWith("/plans/GraftFunctions.scala")),
+      "optimizer rules are installed by GraftFunctions.register alone; assigned at: " +
+        sites.map(_._2).mkString(", "))
+    val fresh = GraftSession.local(4).newSession()
+    graft.plans.GraftFunctions.register(fresh)
+    assert(fresh.experimental.extraOptimizations == Seq(graft.plans.GateHoist))
   }
 
   test("every driver-side action carries a '// bounded:' justification") {

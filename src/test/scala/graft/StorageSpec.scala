@@ -11,7 +11,7 @@ class StorageSpec extends AnyFunSuite {
   test("partitioned write: reads prune partitions at the directory level") {
     val dir = java.nio.file.Files.createTempDirectory("graft_part").toString + "/docs"
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    Storage.writePartitioned(docs, dir, "lang")
+    docs.write.mode("overwrite").partitionBy("lang").parquet(dir)
     val read = spark.read.parquet(dir).filter(col("lang") === "de")
     val plan = read.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("lang"),
@@ -99,6 +99,21 @@ class StorageSpec extends AnyFunSuite {
     assert(probe() == beforeRows, "rows changed after completed-swap recovery")
   }
 
+  test("IVF lifecycle queries register their index directories for deletion at JVM exit") {
+    // SimilarityQueries.indexScratchPath's naming, rebuilt here so the
+    // check does not itself register the paths
+    val sf = "/root/testdata/sf0.001"
+    Seq("ann_ivf_persisted" -> "persisted", "ann_ivf_incremental" -> "incr",
+        "ann_ivf_compact" -> "compact").foreach { case (query, kind) =>
+      val rows = SparkEntry.queries(query)(spark, sf).count()
+      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
+        s"graft_ivf_${kind}_${spark.sparkContext.applicationId}_sf0.001")
+      assert(rows > 0 && dir.isDirectory, s"$query: index at $dir not readable")
+      assert(org.apache.spark.sql.graft.ShutdownDeleteProbe.registered(dir),
+        s"$query: $dir is not deleted at JVM exit")
+    }
+  }
+
   test("zOrderKey: matches scalar Morton interleave; locality beats 1-D sort") {
     import spark.implicits._
     def morton(x: Long, y: Long): Long =
@@ -122,8 +137,10 @@ class StorageSpec extends AnyFunSuite {
     try {
       val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       val o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-      Storage.writeBucketed(li.select("l_orderkey", "l_quantity"), "li_bucketed", "l_orderkey", 8)
-      Storage.writeBucketed(o.select("o_orderkey", "o_totalprice"), "o_bucketed", "o_orderkey", 8)
+      li.select("l_orderkey", "l_quantity").write.mode("overwrite")
+        .bucketBy(8, "l_orderkey").sortBy("l_orderkey").format("parquet").saveAsTable("li_bucketed")
+      o.select("o_orderkey", "o_totalprice").write.mode("overwrite")
+        .bucketBy(8, "o_orderkey").sortBy("o_orderkey").format("parquet").saveAsTable("o_bucketed")
       val joined = spark.table("li_bucketed")
         .join(spark.table("o_bucketed"), col("l_orderkey") === col("o_orderkey"))
       val plan = joined.queryExecution.executedPlan.toString

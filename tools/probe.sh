@@ -21,7 +21,7 @@
 #   -M mainClass  default graft.ScaleProbe (graft.Verify, graft.MemoProbe,
 #                 graft.Bench also work)
 #   KEY=VAL       exported into the probe's environment (e.g.
-#                 SPARK_GRAFT_SHUFFLE=1600, SPARK_GRAFT_KNN_CHUNK_PROPOSALS=...);
+#                 SPARK_GRAFT_SHUFFLE=1600, SPARK_GRAFT_EXEC_MEM=20g);
 #                 session-conf A/Bs ride the JVM: Spark reads spark.*
 #                 system properties, so pass
 #                 JAVA_TOOL_OPTIONS="-Dspark.k=v -Dspark.k2=v2"
