@@ -312,7 +312,13 @@ object CurationQueries {
     * decontamination every benchmark-honest LLM corpus runs). The test
     * side — in production a few-MB benchmark suite, here the salted 10%
     * split — broadcasts; the corpus side streams through the map-side
-    * gram join and one partial-agg shuffle on doc_id. Never O(n²). */
+    * gram join and one partial-agg shuffle on doc_id. Never O(n²).
+    *
+    * The two distinct counts are set sizes in ONE aggregate, not two
+    * `countDistinct`s: those plan through an `Expand` whose group order
+    * the optimizer picks per build (so a fresh session recompiles), and
+    * that doubles every joined row before the partial aggregate. Per-doc
+    * state is that document's shared grams and the test docs they hit. */
   val decontaminateQ = QueryDef("decontaminate",
     (s, dir) => {
       // Parallelism floor: single-row-group inputs otherwise shingle the
@@ -328,8 +334,8 @@ object CurationQueries {
       // list is tiny relative to the corpus at any scale.
       train.join(broadcast(test), "gram")
         .groupBy("doc_id")
-        .agg(countDistinct(col("gram")).as("shared_ngrams"),
-          countDistinct(col("test_id")).as("n_test_docs"))
+        .agg(size(collect_set(col("gram"))).cast("long").as("shared_ngrams"),
+          size(collect_set(col("test_id"))).cast("long").as("n_test_docs"))
         .coalesce(1).sortWithinPartitions("doc_id")
     },
     Some("""WITH b AS (SELECT doc_id, text,

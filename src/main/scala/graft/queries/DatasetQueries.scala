@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
@@ -460,19 +461,28 @@ object DatasetQueries {
     * lowest id (a crawl's canonical page beats its mirror with truncated
     * boilerplate). Over [[nearDupClusters]]: verdicts expand back over
     * every doc through its content group's keep_id; per cluster keep the
-    * max-quality member, ties to min doc_id. */
+    * max-quality member, ties to min doc_id.
+    *
+    * Scale shape: one keyed pass over the memoized frames — the
+    * membership join, then two windows over the same `comp` partitioning
+    * (`mxq`, then the min doc_id among the members at `mxq`) that share
+    * ONE exchange; no aggregate and no join back. A cluster whose
+    * qualities are all null has no representative and is dropped, as the
+    * oracle's inner join drops it. AQE's skew split does not apply to a
+    * comp-keyed window: a giant cluster is one long task, not memory
+    * (each member row is three primitives and WindowExec spills) — the
+    * trade-off `Components`' star variant and `Agg.top1PerBin` make. */
   val dedupRepresentative = QueryDef("dedup_representative",
     (s, dir) => {
       val (withKeep, comps) = nearDupClusters(s, dir)
-      val members = withKeep
+      val w = Window.partitionBy("comp")
+      withKeep
         .select(col("doc_id"), col("keep_id"), col("quality"))
         .join(comps, col("keep_id") === comps("id"))
-        .select(col("doc_id"), col("comp"), col("quality"))
-      val mq = members.groupBy("comp").agg(max(col("quality")).as("mxq"))
-      val reps = members.join(mq, "comp")
-        .filter(col("quality") === col("mxq"))
-        .groupBy("comp").agg(min(col("doc_id")).as("rep_id"))
-      members.join(reps, "comp")
+        .withColumn("mxq", max(col("quality")).over(w))
+        .withColumn("rep_id",
+          min(when(col("quality") === col("mxq"), col("doc_id"))).over(w))
+        .filter(col("rep_id").isNotNull)
         .select(col("doc_id"), col("comp"), col("quality"), col("rep_id"),
           when(col("doc_id") === col("rep_id"), 1).otherwise(0).as("keep"))
         .orderBy("doc_id")
@@ -492,18 +502,19 @@ object DatasetQueries {
     * A/Bs drop-vs-down-weight.
     *
     * Scale shape: the clustering chain is the certified-linear LSH path;
-    * the weighting adds one count shuffle over comp (map-side partials)
-    * and a narrow join back. Weight = one IEEE divide, effective tokens
-    * = one IEEE multiply — both replayed exactly. */
+    * the weighting is one keyed pass over its memoized frames — the
+    * membership join, then a `count` window over `comp` (one exchange, no
+    * aggregate and no join back). As in `dedup_representative`, AQE's
+    * skew split does not apply to the comp-keyed window; a giant cluster
+    * costs one long task, not memory. Weight = one IEEE divide, effective
+    * tokens = one IEEE multiply — both replayed exactly. */
   val dedupSoftWeights = QueryDef("dedup_soft_weights",
     (s, dir) => {
       val (withKeep, comps) = nearDupClusters(s, dir)
-      val members = withKeep
+      withKeep
         .select(col("doc_id"), col("keep_id"), col("n_tok"))
         .join(comps, col("keep_id") === comps("id"))
-        .select(col("doc_id"), col("comp"), col("n_tok"))
-      val sizes = members.groupBy("comp").agg(count(lit(1)).as("cluster_size"))
-      members.join(sizes, "comp")
+        .withColumn("cluster_size", count(lit(1)).over(Window.partitionBy("comp")))
         .withColumn("weight", lit(1.0) / col("cluster_size").cast("double"))
         .select(col("doc_id"), col("comp"), col("cluster_size"),
           round(col("weight"), 9).as("weight"), col("n_tok"),

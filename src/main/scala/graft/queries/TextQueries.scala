@@ -98,18 +98,20 @@ object TextQueries {
     * shared by `dedup_ngram_jaccard` and `dedup_components`. */
   private def ngramJaccardPairs(s: org.apache.spark.sql.SparkSession, dir: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    // Cache the (tiny, bounded) shingle frame: without it Catalyst
-    // inlines shingle construction into both join sides and recomputes
-    // it once per PAIR instead of once per doc.
+    // Materialize the (tiny, bounded) shingle frame with an eager local
+    // checkpoint: without a barrier Catalyst inlines shingle construction
+    // into both join sides and recomputes it once per PAIR instead of
+    // once per doc. Not `.cache()`: that pins the blocks in the context's
+    // shared CacheManager for the life of the JVM.
     // length(text) >= 3 mirrors the oracle CTE exactly: charShingles
     // collapses shorter docs to [text], which the oracle's generate_series
     // form has no row for — latent divergence on short future docs.
-    // Parallelism floor BEFORE the cache: the 200-row filtered scan is
+    // Parallelism floor BEFORE the checkpoint: the 200-row filtered scan is
     // one partition, which would serialize all ~20k pairwise intersects.
     val sh = graft.ops.Parallelism.ensure(
         table(s, dir, "documents").filter(col("doc_id") < 200 && length(col("text")) >= 3))
       .select(col("doc_id"), array_sort(charShingles(col("text"), 3)).as("sh"))
-      .cache()
+      .localCheckpoint()
     val a = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
     val b = sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
     val pairs = a.join(broadcast(b), col("id_a") < col("id_b"))

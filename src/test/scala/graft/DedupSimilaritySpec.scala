@@ -345,7 +345,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val queries = vecs.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val built = graft.operators.Ivf.build(vecs, nLists = 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = TestDirs.create("graft_ivf").toString
     graft.operators.Ivf.save(built, dir)
     val loaded = graft.operators.Ivf.load(spark, dir)
     assert(loaded.centers.map(_.toSeq).toSeq == built.centers.map(_.toSeq).toSeq)

@@ -234,7 +234,7 @@ class PipelinesSpec extends AnyFunSuite {
   test("the md5-model oracle and misordered queries share one model instance per class") {
     // a model's singleton key is its factory's digest, so a lambda literal
     // per query would load one instance per query into the JVM
-    val dir = java.nio.file.Files.createTempDirectory("graft_model_share").toString
+    val dir = TestDirs.create("graft_model_share").toString
     spark.range(0, 800).select(col("id").as("event_id")).write.parquet(s"$dir/events.parquet")
     spark.range(1, 201).select(col("id").as("p_partkey")).write.parquet(s"$dir/part.parquet")
     graft.ml.ExecutorSingleton.clear()
@@ -281,8 +281,8 @@ class PipelinesSpec extends AnyFunSuite {
       () => new Models.FakeFaceQualityScorer, () => new Models.FakeFaceEmbedder())
     val refs = pipe.mineRefs(manifest)
     val selected = pipe.mineCandidates(manifest, refs)
-    val objRoot = java.nio.file.Files.createTempDirectory("graft_pairs").toString
-    val jsonlRoot = java.nio.file.Files.createTempDirectory("graft_pairs_jsonl").toString
+    val objRoot = TestDirs.create("graft_pairs").toString
+    val jsonlRoot = TestDirs.create("graft_pairs_jsonl").toString
     val status = pipe.sinkPairs(selected, refs, new graft.sources.Sinks.LocalFsStore(objRoot), jsonlRoot)
       .as[(String, Boolean, String)].collect()
     assert(status.nonEmpty && status.forall(_._2), "all uploads should succeed")
@@ -305,7 +305,7 @@ class PipelinesSpec extends AnyFunSuite {
       new graft.sources.Sinks.LocalFsStore(root))
 
   test("E4 bg curation: gates enforce resolution, person count, area ratio; outputs written") {
-    val root = java.nio.file.Files.createTempDirectory("graft_bg").toString
+    val root = TestDirs.create("graft_bg").toString
     val pipe = bgPipe(root)
     // controlled records straight into the gates (bypassing detection)
     val recs = Seq(
@@ -335,7 +335,7 @@ class PipelinesSpec extends AnyFunSuite {
   test("E4 run: resolution gate precedes detection (no inference on sub-threshold images)") {
     graft.ml.ExecutorSingleton.clear() // drop any detector cached by earlier tests
     PipelinesSpec.detectCalls.set(0)
-    val root = java.nio.file.Files.createTempDirectory("graft_bg_order").toString
+    val root = TestDirs.create("graft_bg_order").toString
     val pipe = bgPipe(root, person = () => {
       val inner = new Models.FakePersonDetector
       new Models.PersonDetector {
@@ -356,7 +356,7 @@ class PipelinesSpec extends AnyFunSuite {
   }
 
   test("E4 per-box model gates: exactly-one-face >= 0.5, mask rect inside image, statuses") {
-    val root = java.nio.file.Files.createTempDirectory("graft_bg_box").toString
+    val root = TestDirs.create("graft_bg_box").toString
     val pipe = bgPipe(root)
     val images = (1L to 200L).toDF("image_id")
       .withColumn("image_path", format_string("/imgs/d/img_%d.jpg", col("image_id")))
@@ -387,7 +387,7 @@ class PipelinesSpec extends AnyFunSuite {
   }
 
   test("E4 detect: a detectBatch that returns too few results fails the stage, rows are not dropped") {
-    val root = java.nio.file.Files.createTempDirectory("graft_bg_short").toString
+    val root = TestDirs.create("graft_bg_short").toString
     val pipe = bgPipe(root, person = () => new Models.PersonDetector {
       private val inner = new Models.FakePersonDetector
       def detect(videoId: Long, frameIdx: Long): Seq[Models.Box] = inner.detect(videoId, frameIdx)
@@ -442,7 +442,7 @@ class PipelinesSpec extends AnyFunSuite {
   }
 
   test("E4 runRecords: input_persons/output_persons assembly, any-saved filter, unreadable images") {
-    val root = java.nio.file.Files.createTempDirectory("graft_bg_rec").toString
+    val root = TestDirs.create("graft_bg_rec").toString
     val pipe = bgPipe(root)
     val records = Seq(
       (1L, Seq("/d/a.jpg", "/d/b.jpg"), "/d/out1.jpg"),

@@ -721,6 +721,33 @@ class PlansSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("near-dup policy layers: one membership join, no aggregate, one comp exchange") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    // dedup_soft_weights and dedup_representative are windows over comp on
+    // the memoized frames: no per-comp aggregate joined back, so the only
+    // join left is keep_id = id, and the windows share one exchange
+    Seq("dedup_soft_weights", "dedup_representative").foreach { q =>
+      val df = SparkEntry.queries(q)(spark, sf)
+      val opt = df.queryExecution.optimizedPlan
+      val joins = opt.collect { case j: Join => j }
+      assert(joins.size == 1 && joins.head.condition.exists(_.sql.contains("keep_id")),
+        s"$q: expected the membership join alone:\n$opt")
+      assert(opt.collect { case a: Aggregate => a }.isEmpty, s"$q: aggregate in:\n$opt")
+      df.collect()
+      val fin = df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec]
+        .executedPlan.toString
+      val n = "hashpartitioning\\(comp#".r.findAllIn(fin).size
+      assert(n == 1, s"$q: $n comp exchanges in the final plan:\n$fin")
+    }
+  }
+
+  test("decontaminate counts distinct grams and test docs without an Expand") {
+    import org.apache.spark.sql.catalyst.plans.logical.Expand
+    val opt = SparkEntry.queries("decontaminate")(spark, sf).queryExecution.optimizedPlan
+    assert(opt.collect { case e: Expand => e }.isEmpty, s"Expand in:\n$opt")
+  }
+
   test("trainer memo: the fertility twin of each tokenizer family builds with zero training jobs") {
     // The _oracle and _fertility twins share one trained chain per
     // (session, dir, family): the trainers' unrolled-DP localCheckpoints

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.SessionMemo
@@ -56,19 +54,14 @@ class SessionMemoSpec extends AnyFunSuite {
   }
 
   test("corpusCount serves a stale count after an external write until the memo is cleared") {
-    val dir = Files.createTempDirectory("session-memo-spec").resolve("corpus").toString
-    try {
-      spark.range(10).write.parquet(dir)
-      def count() = graft.operators.Similarity.corpusCount(spark.read.parquet(dir))
-      assert(count() == 10L)
-      spark.range(100, 105).write.mode("append").parquet(dir)
-      // INVARIANT breach: the path changed under a live session
-      assert(count() == 10L, "memo no longer keys a fresh read of the same path")
-      graft.operators.Similarity.countMemo.clear()
-      assert(count() == 15L)
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir).getParent
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
+    val dir = TestDirs.create("graft_session_memo").resolve("corpus").toString
+    spark.range(10).write.parquet(dir)
+    def count() = graft.operators.Similarity.corpusCount(spark.read.parquet(dir))
+    assert(count() == 10L)
+    spark.range(100, 105).write.mode("append").parquet(dir)
+    // INVARIANT breach: the path changed under a live session
+    assert(count() == 10L, "memo no longer keys a fresh read of the same path")
+    graft.operators.Similarity.countMemo.clear()
+    assert(count() == 15L)
   }
 }

@@ -30,6 +30,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    `ConcurrentHashMap` lives only in `SessionMemo` (plus the
   *    executor-side model singleton, which is not session-keyed), and
   *    `CheckpointBridge.checkpointRdd` is called once, by `CheckpointOps`;
+  *  - one way to materialize a frame: no `.cache()` or `.persist(` in
+  *    main source, whose blocks would outlive every session in the
+  *    context-wide CacheManager — barriers are local checkpoints;
   *  - one way to load a model: `ExecutorSingleton.getOrCreate` is called
   *    once, by `ModelStage`, whose singleton key is a digest of the model
   *    factory, so no caller-chosen string can make two models share a slot;
@@ -194,6 +197,15 @@ class SourceAuditSpec extends AnyFunSuite {
       "the fused checkpoint has one implementation, " +
         "CheckpointOps.localCheckpointAggregate; checkpointRdd called at: " +
         calls.map(_._2).mkString(", "))
+  }
+
+  test("no .cache() or .persist( in main source: every barrier is a local checkpoint") {
+    // the CacheManager is shared by every session of the context, so a
+    // cached frame nobody unpersists lives as long as the JVM
+    val hits = mainCodeHits("""\.\s*cache\s*\(\s*\)|\.\s*persist\s*\(""".r)
+    assert(hits.isEmpty,
+      "cached frame in main source (materialize with localCheckpoint()): " +
+        hits.map(_._2).mkString(", "))
   }
 
   test("the DuckDB MinHash signature SQL is generated in one place") {

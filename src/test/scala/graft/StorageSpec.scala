@@ -9,7 +9,7 @@ class StorageSpec extends AnyFunSuite {
   import TestSpark.spark
 
   test("partitioned write: reads prune partitions at the directory level") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString + "/docs"
+    val dir = TestDirs.create("graft_part").toString + "/docs"
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs.write.mode("overwrite").partitionBy("lang").parquet(dir)
     val read = spark.read.parquet(dir).filter(col("lang") === "de")
@@ -21,8 +21,8 @@ class StorageSpec extends AnyFunSuite {
 
   test("compaction: many small files become few range-clustered files") {
     import spark.implicits._
-    val inDir = java.nio.file.Files.createTempDirectory("graft_small").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/out"
+    val inDir = TestDirs.create("graft_small").toString
+    val outDir = TestDirs.create("graft_compact").toString + "/out"
     // 40 tiny files, keys shuffled across them (worst-case clustering)
     (0L until 4000L).map(i => (i * 2654435761L % 4000L, s"payload_$i"))
       .toDF("k", "v").repartition(40).write.mode("overwrite").parquet(inDir)
@@ -47,7 +47,7 @@ class StorageSpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding"))
     val centers = Similarity.md5PlaneInts(8, 1, 64, "graft-ivf-oracle")(0)
       .map(_.map(h => h.toDouble / (1L << 60).toDouble * 2.0 - 1.0))
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_cmp").toString + "/ix"
+    val path = TestDirs.create("graft_ivf_cmp").toString + "/ix"
     Ivf.save(Ivf.fromCenters(emb.filter(col("vec_id") % 5 =!= 0), centers), path)
     Ivf.appendSave(path, emb.filter(col("vec_id") % 10 === 0))
     Ivf.appendSave(path, emb.filter(col("vec_id") % 10 === 5))

@@ -19,7 +19,7 @@ class StreamingSinksSpec extends AnyFunSuite {
       .select("window_start_epoch", "event_type", "n_events")
       .as[(Long, String, Long)].collect().toSet
 
-    val streamDir = Files.createTempDirectory("graft_stream")
+    val streamDir = TestDirs.create("graft_stream")
     Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
       streamDir.resolve("events.parquet"))
     val stream = EventStream.readEventStream(spark, streamDir.toString)
@@ -47,7 +47,7 @@ class StreamingSinksSpec extends AnyFunSuite {
       .select("event_id", "user_id", "event_type", "segment")
       .as[(Long, Long, String, String)].collect().toSet
 
-    val streamDir = Files.createTempDirectory("graft_enrich_stream")
+    val streamDir = TestDirs.create("graft_enrich_stream")
     Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
       streamDir.resolve("events.parquet"))
     val stream = EventStream.readEventStream(spark, streamDir.toString)
@@ -73,7 +73,7 @@ class StreamingSinksSpec extends AnyFunSuite {
     val want = EventStream.dedupKeys(batch)
       .as[(Long, String)].collect().toSet
 
-    val streamDir = Files.createTempDirectory("graft_dedup_stream")
+    val streamDir = TestDirs.create("graft_dedup_stream")
     Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
       streamDir.resolve("events.parquet"))
     val stream = EventStream.readEventStream(spark, streamDir.toString)
@@ -118,7 +118,7 @@ class StreamingSinksSpec extends AnyFunSuite {
       .select("window_start_epoch", "rank", "event_type", "n_events")
       .as[(Long, Long, String, Long)].collect().toSet
 
-    val streamDir = Files.createTempDirectory("graft_topk_stream")
+    val streamDir = TestDirs.create("graft_topk_stream")
     Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
       streamDir.resolve("events.parquet"))
     val stream = EventStream.readEventStream(spark, streamDir.toString)
@@ -145,7 +145,7 @@ class StreamingSinksSpec extends AnyFunSuite {
     * microbatches, so watermarks advance between batches. */
   private def timeOrderedStreamDir(): String = {
     val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    val streamDir = Files.createTempDirectory("graft_ts_stream")
+    val streamDir = TestDirs.create("graft_ts_stream")
     val ordered = EventStream.withEventTime(batch).orderBy("event_time")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
     val n = ordered.count()
@@ -245,7 +245,7 @@ class StreamingSinksSpec extends AnyFunSuite {
     // Any drift in the timeout rule (wrong timestamp, never firing, firing
     // at/before the watermark boundary, emitting the still-open session)
     // breaks exactly one of these assertions.
-    val fixtureDir = Files.createTempDirectory("graft_sess_timeout")
+    val fixtureDir = TestDirs.create("graft_sess_timeout")
     val batches = Seq(
       Seq((1L, 1000L), (1L, 1050L), (2L, 1000L), (3L, 1000L), (99L, 1050L)),
       Seq((2L, 1060L), (3L, 2000L), (99L, 2000L)),
@@ -306,7 +306,7 @@ class StreamingSinksSpec extends AnyFunSuite {
   }
 
   test("append-JSONL sink accumulates across runs; binary sink writes objects") {
-    val root = Files.createTempDirectory("graft_jsonl").toString
+    val root = TestDirs.create("graft_jsonl").toString
     val df1 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     val df2 = Seq((3L, "c")).toDF("id", "v")
     Sinks.appendJsonl(df1, root)
@@ -315,7 +315,7 @@ class StreamingSinksSpec extends AnyFunSuite {
       .as[(Long, String)].collect().toSet
     assert(back == Set((1L, "a"), (2L, "b"), (3L, "c")))
 
-    val objRoot = Files.createTempDirectory("graft_store").toString
+    val objRoot = TestDirs.create("graft_store").toString
     val bin = Seq(("k1/x.bin", Array[Byte](1, 2, 3)), ("k2/y.bin", Array[Byte](9)))
       .toDF("key", "bytes")
     val status = Sinks.writeBinary(bin, "key", "bytes", new Sinks.LocalFsStore(objRoot))
@@ -325,7 +325,7 @@ class StreamingSinksSpec extends AnyFunSuite {
   }
 
   test("HadoopFsStore: config-injected URI store works through the distributed sink") {
-    val objRoot = Files.createTempDirectory("graft_hstore").toString
+    val objRoot = TestDirs.create("graft_hstore").toString
     // file:// here; on a cluster the same class takes s3a://bucket/prefix
     // plus fs.s3a.* confProps — no code change between the two.
     val store = new Sinks.HadoopFsStore(s"file://$objRoot",
